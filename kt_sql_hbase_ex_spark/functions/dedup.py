@@ -38,6 +38,7 @@ import random
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from kt_sql_hbase_ex_spark import storage
 from kt_sql_hbase_ex_spark.registry import query
 from kt_sql_hbase_ex_spark.sources.catalog import fan_out, load_table
 
@@ -384,15 +385,12 @@ def ensure_pair_store(spark: SparkSession, sf_dir: str) -> str:
     the shingle→minhash→band-join→verify chain per query — exactly how
     a production dedup pipeline runs: one candidate materialization,
     many downstream graph jobs."""
-    from kt_sql_hbase_ex_spark.functions.text_index import (
-        _build_once,
-        _index_root,
-    )
+    from kt_sql_hbase_ex_spark.functions.text_index import index_root
 
     # the store variant carries EVERY parameter the pair set depends on:
     # change any LSH constant and the fingerprint changes, so a stale
     # on-disk pair set from the old algorithm can never be served (the
-    # documents-file identity + layout version come from _index_root)
+    # documents-file identity + layout version come from index_root)
     variant = (
         f"lshpairs|{N_HASHES}|{BAND_ROWS}|{JACCARD_THRESHOLD}|{SHINGLE_N}"
         f"|{SHINGLE_C1}|{SHINGLE_C2}|{MINHASH_A[0]}|{MINHASH_B[0]}"
@@ -401,7 +399,7 @@ def ensure_pair_store(spark: SparkSession, sf_dir: str) -> str:
     def build(staging: str) -> None:
         d03_minhash_lsh(spark, sf_dir).write.parquet(staging)
 
-    return _build_once(_index_root(sf_dir, variant), build)
+    return storage.build_once(index_root(sf_dir, variant), build)
 
 
 def read_verified_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1219,10 +1217,7 @@ def ensure_band_store(spark: SparkSession, sf_dir: str) -> str:
     batch probe and the verification multi-get prune the history scan
     to touched buckets (DPP off the broadcast batch side) instead of
     shuffling or rescanning it, and compaction folds per bucket."""
-    from kt_sql_hbase_ex_spark.functions.text_index import (
-        _build_once,
-        _index_root,
-    )
+    from kt_sql_hbase_ex_spark.functions.text_index import index_root
 
     variant = (
         f"lshbandstore|bkb{N_BAND_BUCKETS}dkb{N_DOC_BUCKETS}"
@@ -1237,7 +1232,7 @@ def ensure_band_store(spark: SparkSession, sf_dir: str) -> str:
         )
         write_band_store(spark, staging, hist)
 
-    return _build_once(_index_root(sf_dir, variant), build)
+    return storage.build_once(index_root(sf_dir, variant), build)
 
 
 #: shared by d14 (append-grown store) and d15 (compacted store): the
@@ -1311,10 +1306,7 @@ def ensure_compacted_band_store(spark: SparkSession, sf_dir: str) -> str:
     in deferred-GC retention). Probing it must answer exactly like the
     never-compacted store — which is what d15's oracle (identical to
     d14's) proves every round."""
-    from kt_sql_hbase_ex_spark.functions.text_index import (
-        _build_once,
-        _index_root,
-    )
+    from kt_sql_hbase_ex_spark.functions.text_index import index_root
 
     variant = (
         f"lshbandstore-compacted|bkb{N_BAND_BUCKETS}dkb{N_DOC_BUCKETS}t1"
@@ -1341,7 +1333,7 @@ def ensure_compacted_band_store(spark: SparkSession, sf_dir: str) -> str:
         # probe covers the mixed fold+carry generation every round
         compact_band_store(spark, staging, target_files=1, only_buckets_over=1)
 
-    return _build_once(_index_root(sf_dir, variant), build)
+    return storage.build_once(index_root(sf_dir, variant), build)
 
 
 @query(
@@ -1455,14 +1447,9 @@ def _band_store_layout(root: str) -> dict:
     generation superseded by the LAST compaction, retained until the
     next one (deferred GC: an in-flight reader that resolved the old
     layout can finish its scan)."""
-    import json
-    import os
-
-    path = os.path.join(root, "layout.json")
-    if os.path.exists(path):
-        with open(path) as f:
-            return json.load(f)
-    return {"gen": 0, "bands": "bands", "shingles": "shingles", "prev": []}
+    return storage.read_layout(
+        root, {"gen": 0, "bands": "bands", "shingles": "shingles", "prev": []}
+    )
 
 
 def _band_store_dirs(root: str) -> tuple[str, str]:
@@ -1596,11 +1583,9 @@ def append_band_batch(spark: SparkSession, root: str, batch_docs: DataFrame) -> 
     immutable in a training-data corpus, so the store needs no
     tombstones (the text index's update path exists for the mutable
     case). Concurrent admissions serialize mechanically through the
-    same O_EXCL writer lock the text index uses; the batch-vs-rebuild
+    store writer lock (:func:`storage.writer_lock`); the batch-vs-rebuild
     equivalence is pinned by ``tests/test_extensions.py``."""
-    from kt_sql_hbase_ex_spark.functions.text_index import _writer_lock
-
-    with _writer_lock(root):
+    with storage.writer_lock(root):
         write_band_store(spark, root, batch_docs)
 
 

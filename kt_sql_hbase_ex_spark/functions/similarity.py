@@ -33,6 +33,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from kt_sql_hbase_ex_spark import storage
 from kt_sql_hbase_ex_spark.registry import query
 from kt_sql_hbase_ex_spark.sources.catalog import fan_out, load_table
 
@@ -635,10 +636,7 @@ def ensure_semdedup_store(
     explicit ``n_cells`` overrides), so the cell-partitioned members
     table IS the dedup's blocking structure and the centroids are the
     same frozen quantizer an ANN probe would use."""
-    from kt_sql_hbase_ex_spark.functions.text_index import (
-        _build_once,
-        _index_root,
-    )
+    from kt_sql_hbase_ex_spark.functions.text_index import index_root
 
     variant = (
         f"semdedup-trained|auto{D18_TARGET_CELL_ROWS}"
@@ -660,7 +658,7 @@ def ensure_semdedup_store(
         # (seed -> mean with empty-cell carry -> re-assign) exactly
         retrain_ivf_store(spark, staging)
 
-    return _build_once(_index_root(sf_dir, variant), build)
+    return storage.build_once(index_root(sf_dir, variant), build)
 
 
 def _semantic_dedup_report(spark: SparkSession, root: str) -> DataFrame:
@@ -1050,10 +1048,7 @@ def ensure_ivf_store(spark: SparkSession, sf_dir: str) -> str:
     (centroid drift) is a rebuild into a fresh version dir."""
     import os
 
-    from kt_sql_hbase_ex_spark.functions.text_index import (
-        _build_once,
-        _index_root,
-    )
+    from kt_sql_hbase_ex_spark.functions.text_index import index_root
 
     variant = (
         f"ivfstore|{N_CELLS}|{N_PROBE}|{TOP_K}|mod{SIM08_MOD}r{SIM08_RES}"
@@ -1065,7 +1060,7 @@ def ensure_ivf_store(spark: SparkSession, sf_dir: str) -> str:
             spark, staging, e.filter(F.col("vec_id") % SIM08_MOD != SIM08_RES)
         )
 
-    return _build_once(_index_root(sf_dir, variant), build)
+    return storage.build_once(index_root(sf_dir, variant), build)
 
 
 def write_ivf_store(
@@ -1130,17 +1125,9 @@ def _ivf_store_layout(root: str) -> dict:
     been compacted — the legacy fixed name applies, so pre-pointer
     stores read and grow unchanged. ``prev`` lists the directory of the
     generation superseded by the LAST compaction, retained until the
-    next one (deferred GC for in-flight readers) — the
-    :func:`~kt_sql_hbase_ex_spark.functions.dedup._band_store_layout`
-    discipline applied to the vector store."""
-    import json
-    import os
-
-    path = os.path.join(root, "layout.json")
-    if os.path.exists(path):
-        with open(path) as f:
-            return json.load(f)
-    return {"gen": 0, "cells": "cells", "prev": []}
+    next one (deferred GC for in-flight readers) — the band store's
+    discipline applied to the vector store (:func:`storage.read_layout`)."""
+    return storage.read_layout(root, {"gen": 0, "cells": "cells", "prev": []})
 
 
 def _ivf_cells_dir(root: str) -> str:
@@ -1230,15 +1217,11 @@ def append_ivf_batch(spark: SparkSession, root: str, vecs: DataFrame) -> None:
     and land as new files inside their nearest-cell partitions. Write
     ∝ batch; no existing cell file is touched; probes see the grown
     corpus through the same pruned partition reads. Serializes against
-    other writers via the O_EXCL writer lock. Re-clustering on
+    other writers via the store writer lock. Re-clustering on
     centroid drift is a REBUILD into a fresh version dir, never an
     append — appending against drifted centroids would silently
     degrade recall, so the quantizer stays immutable per store."""
-    import os
-
-    from kt_sql_hbase_ex_spark.functions.text_index import _writer_lock
-
-    with _writer_lock(root):
+    with storage.writer_lock(root):
         # the LIVE quantizer: fixed for the store's life under
         # append/compact, rotated by retrain — admitting against the
         # layout-resolved centroids is what makes append-after-retrain
@@ -1262,10 +1245,7 @@ def ensure_grown_ivf_store(spark: SparkSession, sf_dir: str) -> str:
     batch. Centroids are frozen from the BASE history only — the
     appended vectors never influence the quantizer, which is what
     makes the grown store's answers replayable declaratively."""
-    from kt_sql_hbase_ex_spark.functions.text_index import (
-        _build_once,
-        _index_root,
-    )
+    from kt_sql_hbase_ex_spark.functions.text_index import index_root
 
     variant = (
         f"ivfstore-grown|{N_CELLS}|{N_PROBE}|{TOP_K}"
@@ -1290,7 +1270,7 @@ def ensure_grown_ivf_store(spark: SparkSession, sf_dir: str) -> str:
             ),
         )
 
-    return _build_once(_index_root(sf_dir, variant), build)
+    return storage.build_once(index_root(sf_dir, variant), build)
 
 
 _SIM08_COS_HC = _COSINE_SQL.format(a="h.v", b="cent.cv")
@@ -1489,10 +1469,7 @@ def ensure_compacted_ivf_store(spark: SparkSession, sf_dir: str) -> str:
     it must answer exactly like the never-compacted grown store — which
     is what sim10's oracle (byte-identical to sim09's) proves every
     round."""
-    from kt_sql_hbase_ex_spark.functions.text_index import (
-        _build_once,
-        _index_root,
-    )
+    from kt_sql_hbase_ex_spark.functions.text_index import index_root
 
     variant = (
         f"ivfstore-compacted.sel1|{N_CELLS}|{N_PROBE}|{TOP_K}"
@@ -1531,7 +1508,7 @@ def ensure_compacted_ivf_store(spark: SparkSession, sf_dir: str) -> str:
         # hardlink — the graded probe covers the mixed generation
         compact_ivf_store(spark, staging, only_cells_over=1)
 
-    return _build_once(_index_root(sf_dir, variant), build)
+    return storage.build_once(index_root(sf_dir, variant), build)
 
 
 @query("sim10_compacted_ivf_probe", oracle=_GROWN_IVF_ORACLE)
@@ -1588,16 +1565,10 @@ def retrain_ivf_store(spark: SparkSession, root: str) -> dict:
     the same broadcast map-side scoring as the initial build, and the
     publish is one atomic pointer swap with the deferred-GC retention
     compaction already uses."""
-    import json
     import os
-    import shutil
     import uuid as _uuid
 
-    from kt_sql_hbase_ex_spark.functions.text_index import _writer_lock
-
-    import glob as _glob
-
-    with _writer_lock(root):
+    with storage.writer_lock(root):
         layout = _ivf_store_layout(root)
         gen = layout["gen"] + 1
         tag = _uuid.uuid4().hex[:8]
@@ -1608,11 +1579,11 @@ def retrain_ivf_store(spark: SparkSession, root: str) -> dict:
         # crashed before its layout publish left centroids_g*/cells_g*
         # dirs referenced by nothing — swept here, under the lock,
         # before this attempt writes its own uniquely-tagged dirs
-        referenced = {cells_rel, cent_rel} | set(layout.get("prev", []))
-        for prefix in ("cells_g", "centroids_g"):
-            for d in _glob.glob(os.path.join(root, f"{prefix}*")):
-                if os.path.basename(d) not in referenced:
-                    shutil.rmtree(d, ignore_errors=True)
+        storage.sweep_orphans(
+            root,
+            ("cells_g*", "centroids_g*"),
+            {cells_rel, cent_rel} | set(layout.get("prev", [])),
+        )
         corpus = spark.read.parquet(os.path.join(root, cells_rel)).localCheckpoint()
         old_cent = spark.read.parquet(os.path.join(root, cent_rel))
 
@@ -1669,15 +1640,11 @@ def retrain_ivf_store(spark: SparkSession, root: str) -> dict:
             centroids=new_cent_rel,
             prev=[cells_rel, cent_rel],
         )
-        staging = os.path.join(root, f"layout.json.tmp.{os.getpid()}")
-        with open(staging, "w") as f:
-            json.dump(new_layout, f)
-        os.replace(staging, os.path.join(root, "layout.json"))
+        storage.write_layout(root, new_layout)
         # deferred GC: the generation superseded by the PREVIOUS swap is
         # now two swaps old — no reader can still hold it (compaction's
         # retention rule, shared verbatim)
-        for d in layout.get("prev", []):
-            shutil.rmtree(os.path.join(root, d), ignore_errors=True)
+        storage.drop_dirs(root, layout.get("prev", []))
         # count the WRITTEN quantizer (K-row parquet read), not the
         # unmaterialized plan — new_cent.count() would re-run the whole
         # explode/groupBy Lloyd aggregation a second time
@@ -1691,10 +1658,7 @@ def ensure_retrained_ivf_store(spark: SparkSession, sf_dir: str) -> str:
     generation's centroids are the fixed-point Lloyd means of the
     original assignment and the cells are the corpus re-assigned to
     them."""
-    from kt_sql_hbase_ex_spark.functions.text_index import (
-        _build_once,
-        _index_root,
-    )
+    from kt_sql_hbase_ex_spark.functions.text_index import index_root
 
     variant = (
         f"ivfstore-retrained|{N_CELLS}|{N_PROBE}|{TOP_K}"
@@ -1708,7 +1672,7 @@ def ensure_retrained_ivf_store(spark: SparkSession, sf_dir: str) -> str:
         )
         retrain_ivf_store(spark, staging)
 
-    return _build_once(_index_root(sf_dir, variant), build)
+    return storage.build_once(index_root(sf_dir, variant), build)
 
 
 #: sim11 oracle: the exact fixed-point mean both engines replay
@@ -1881,10 +1845,7 @@ def _drifted_seeds(hist: DataFrame) -> DataFrame:
 def ensure_drifted_ivf_store(spark: SparkSession, sf_dir: str) -> str:
     """sim12's FROZEN phase fixture: the history split admitted against
     the deliberately-bad drifted seeding, quantizer never retrained."""
-    from kt_sql_hbase_ex_spark.functions.text_index import (
-        _build_once,
-        _index_root,
-    )
+    from kt_sql_hbase_ex_spark.functions.text_index import index_root
 
     variant = (
         f"ivfstore-drifted|{N_CELLS}|{N_PROBE}|{TOP_K}"
@@ -1896,7 +1857,7 @@ def ensure_drifted_ivf_store(spark: SparkSession, sf_dir: str) -> str:
         hist = e.filter(F.col("vec_id") % SIM08_MOD != SIM08_RES)
         write_ivf_store(spark, staging, hist, seeds=_drifted_seeds(hist))
 
-    return _build_once(_index_root(sf_dir, variant), build)
+    return storage.build_once(index_root(sf_dir, variant), build)
 
 
 def ensure_drifted_retrained_ivf_store(spark: SparkSession, sf_dir: str) -> str:
@@ -1904,10 +1865,7 @@ def ensure_drifted_retrained_ivf_store(spark: SparkSession, sf_dir: str) -> str:
     through :func:`retrain_ivf_store_converged` capped at
     ``SIM12_STEPS`` (the count the oracle replays; early convergence is
     safe — replayed extra steps are identities)."""
-    from kt_sql_hbase_ex_spark.functions.text_index import (
-        _build_once,
-        _index_root,
-    )
+    from kt_sql_hbase_ex_spark.functions.text_index import index_root
 
     variant = (
         f"ivfstore-drifted-retrained|{N_CELLS}|{N_PROBE}|{TOP_K}"
@@ -1920,7 +1878,7 @@ def ensure_drifted_retrained_ivf_store(spark: SparkSession, sf_dir: str) -> str:
         write_ivf_store(spark, staging, hist, seeds=_drifted_seeds(hist))
         retrain_ivf_store_converged(spark, staging, max_steps=SIM12_STEPS)
 
-    return _build_once(_index_root(sf_dir, variant), build)
+    return storage.build_once(index_root(sf_dir, variant), build)
 
 
 def _sim12_argmax_sql(cent: str) -> str:
@@ -2427,7 +2385,7 @@ def sim15_pq_trained_codebooks(spark: SparkSession, sf_dir: str) -> DataFrame:
 # serving reads the persisted code table. This section gives PQ the
 # same store discipline every other access path in this repo already
 # has (KV: generations; text: layer pointer; bands: band store; IVF:
-# ensure_ivf_store) — build-once provisioning, O_EXCL single-writer
+# ensure_ivf_store) — build-once provisioning, single-writer
 # appends, per-unit compaction through the shared generation-fold
 # engine, and a fixed-point retrain that rotates books+codes behind an
 # atomic layout pointer with deferred GC.
@@ -2520,24 +2478,16 @@ def _pq_store_layout(root: str) -> dict:
     codes rotates on compaction). Absent, the legacy fixed names
     apply. ``prev`` is the deferred-GC retention list;
     ``trained_rows`` records the corpus size the live books were
-    trained on (the retrain trigger's denominator)."""
-    import json
-    import os
-
-    path = os.path.join(root, "layout.json")
-    if os.path.exists(path):
-        with open(path) as f:
-            layout = json.load(f)
-        if layout.get("kind", "pq") != "pq":
-            # Loud guard: running PQ-store maintenance (compact/retrain/
-            # probe) against another store family's root would rotate
-            # directories that family's readers still resolve by name —
-            # stale answers, then FileNotFound after the next GC.
-            raise ValueError(
-                f"{root} is a {layout['kind']!r} store, not a PQ store"
-            )
-        return layout
-    return {"gen": 0, "books": "books", "codes": "codes", "prev": []}
+    trained on (the retrain trigger's denominator). The ``kind`` guard
+    is loud: running PQ-store maintenance (compact/retrain/probe)
+    against another store family's root would rotate directories that
+    family's readers still resolve by name — stale answers, then
+    FileNotFound after the next GC."""
+    return storage.read_layout(
+        root,
+        {"gen": 0, "books": "books", "codes": "codes", "prev": []},
+        kind=("pq", "PQ"),
+    )
 
 
 def _pq_books_dir(root: str) -> str:
@@ -2572,16 +2522,6 @@ def _pq_codes_rows(root: str, codes_dir: str | None = None) -> int:
     return total // M_SUB
 
 
-def _pq_write_layout(root: str, layout: dict) -> None:
-    import json
-    import os
-
-    staging = os.path.join(root, f"layout.json.tmp.{os.getpid()}")
-    with open(staging, "w") as f:
-        json.dump(layout, f)
-    os.replace(staging, os.path.join(root, "layout.json"))
-
-
 def write_pq_store(
     spark: SparkSession, root: str, vecs: DataFrame, train: bool = True
 ) -> None:
@@ -2613,7 +2553,7 @@ def write_pq_store(
     _pq_encode(subs, books).repartition("m").write.partitionBy("m").parquet(
         os.path.join(root, "codes")
     )
-    _pq_write_layout(
+    storage.write_layout(
         root,
         {
             "kind": "pq",
@@ -2637,9 +2577,7 @@ def append_pq_batch(spark: SparkSession, root: str, vecs: DataFrame) -> None:
     round). Books never retrain on append: encoding against drifted
     books would silently corrupt ADC distances, so re-training is an
     explicit generation rotation (:func:`retrain_pq_store`)."""
-    from kt_sql_hbase_ex_spark.functions.text_index import _writer_lock
-
-    with _writer_lock(root):
+    with storage.writer_lock(root):
         books = spark.read.parquet(_pq_books_dir(root))
         _pq_encode(_pq_subs(vecs), books).repartition("m").write.mode(
             "append"
@@ -2701,35 +2639,21 @@ def retrain_pq_store(spark: SparkSession, root: str, vecs: DataFrame) -> dict:
     generation is retained until the NEXT rotation (deferred GC for
     in-flight readers) — :func:`retrain_ivf_store`'s discipline
     applied to the compressed index."""
-    import glob
     import os
-    import shutil
     import uuid as _uuid
 
-    from kt_sql_hbase_ex_spark.functions.text_index import _writer_lock
-
-    with _writer_lock(root):
+    with storage.writer_lock(root):
         layout = _pq_store_layout(root)
         # crash sweep (the generation-fold engine's discipline): a
         # retrain that died before its atomic publish left never-
         # referenced books_g*/codes_g* dirs and torn layout staging —
         # compaction sweeps codes_* orphans but never books_*, so the
         # retrain path owns its own sweep, under the same lock
-        referenced = {
-            layout["books"],
-            layout["codes"],
-            *layout.get("prev", []),
-        }
-        for d in glob.glob(os.path.join(root, "books_g*")) + glob.glob(
-            os.path.join(root, "codes_g*")
-        ):
-            if os.path.basename(d) not in referenced:
-                shutil.rmtree(d, ignore_errors=True)
-        for f in glob.glob(os.path.join(root, "layout.json.tmp.*")):
-            try:
-                os.unlink(f)
-            except OSError:
-                pass
+        storage.sweep_orphans(
+            root,
+            ("books_g*", "codes_g*"),
+            {layout["books"], layout["codes"], *layout.get("prev", [])},
+        )
         books_live = spark.read.parquet(
             os.path.join(root, layout["books"])
         ).localCheckpoint()
@@ -2751,9 +2675,8 @@ def retrain_pq_store(spark: SparkSession, root: str, vecs: DataFrame) -> dict:
         new_layout["trained_rows"] = _pq_codes_rows(
             root, os.path.join(root, codes_rel)
         )
-        _pq_write_layout(root, new_layout)  # ONE atomic publish
-        for d in layout.get("prev", []):
-            shutil.rmtree(os.path.join(root, d), ignore_errors=True)
+        storage.write_layout(root, new_layout)  # ONE atomic publish
+        storage.drop_dirs(root, layout.get("prev", []))
     return {"gen": gen, "trained_rows": new_layout["trained_rows"]}
 
 
@@ -2977,10 +2900,7 @@ def ensure_pq_store_grown(spark: SparkSession, sf_dir: str) -> str:
     :func:`append_pq_batch` against those frozen books, then one
     :func:`compact_pq_store` fold (answers must survive the layout
     rotation — sim16's oracle replays the pre-compaction semantics)."""
-    from kt_sql_hbase_ex_spark.functions.text_index import (
-        _build_once,
-        _index_root,
-    )
+    from kt_sql_hbase_ex_spark.functions.text_index import index_root
 
     variant = (
         f"pqstore-grown|{M_SUB}x{D_SUB}k{K_CODES}s{SHORTLIST}"
@@ -3007,17 +2927,14 @@ def ensure_pq_store_grown(spark: SparkSession, sf_dir: str) -> str:
         )
         compact_pq_store(spark, staging)
 
-    return _build_once(_index_root(sf_dir, variant), build)
+    return storage.build_once(index_root(sf_dir, variant), build)
 
 
 def ensure_pq_store_seeded(spark: SparkSession, sf_dir: str) -> str:
     """sim13's serving store: seeded (untrained) books over the full
     corpus, codes encoded at build — the persisted form of the state
     sim13 used to materialize per-invocation."""
-    from kt_sql_hbase_ex_spark.functions.text_index import (
-        _build_once,
-        _index_root,
-    )
+    from kt_sql_hbase_ex_spark.functions.text_index import index_root
 
     variant = f"pqstore-seeded|{M_SUB}x{D_SUB}k{K_CODES}"
 
@@ -3027,17 +2944,14 @@ def ensure_pq_store_seeded(spark: SparkSession, sf_dir: str) -> str:
         )
         write_pq_store(spark, staging, e, train=False)
 
-    return _build_once(_index_root(sf_dir, variant), build)
+    return storage.build_once(index_root(sf_dir, variant), build)
 
 
 def ensure_pq_store_trained(spark: SparkSession, sf_dir: str) -> str:
     """sim15's serving store: one fixed-point Lloyd step over the full
     corpus, re-encoded codes — the persisted form of sim15's trained
     state."""
-    from kt_sql_hbase_ex_spark.functions.text_index import (
-        _build_once,
-        _index_root,
-    )
+    from kt_sql_hbase_ex_spark.functions.text_index import index_root
 
     variant = f"pqstore-trained|{M_SUB}x{D_SUB}k{K_CODES}"
 
@@ -3047,7 +2961,7 @@ def ensure_pq_store_trained(spark: SparkSession, sf_dir: str) -> str:
         )
         write_pq_store(spark, staging, e, train=True)
 
-    return _build_once(_index_root(sf_dir, variant), build)
+    return storage.build_once(index_root(sf_dir, variant), build)
 
 
 def ensure_ivfpq_store(spark: SparkSession, sf_dir: str) -> str:
@@ -3059,10 +2973,7 @@ def ensure_ivfpq_store(spark: SparkSession, sf_dir: str) -> str:
     2-int rows instead of raw vectors)."""
     import os
 
-    from kt_sql_hbase_ex_spark.functions.text_index import (
-        _build_once,
-        _index_root,
-    )
+    from kt_sql_hbase_ex_spark.functions.text_index import index_root
 
     variant = f"ivfpqstore|{N_CELLS}|{N_PROBE}|{M_SUB}x{D_SUB}k{K_CODES}"
 
@@ -3085,7 +2996,7 @@ def ensure_ivfpq_store(spark: SparkSession, sf_dir: str) -> str:
             os.path.join(staging, "assign")
         )
 
-    return _build_once(_index_root(sf_dir, variant), build)
+    return storage.build_once(index_root(sf_dir, variant), build)
 
 
 # --- sim16: the grown-store probe, oracle-replayed from scratch --------
@@ -3258,20 +3169,7 @@ def _residual_store_layout(root: str) -> dict:
     apply (pre-pointer fixture builds). A ``kind`` mismatch is
     rejected loudly — PQ-store maintenance run against this root must
     not rotate directories the residual probe resolves by name."""
-    import json
-    import os
-
-    path = os.path.join(root, "layout.json")
-    if os.path.exists(path):
-        with open(path) as f:
-            layout = json.load(f)
-        if layout.get("kind") != "residual_ivfpq":
-            raise ValueError(
-                f"{root} is a {layout.get('kind', 'pq')!r} store, "
-                "not a residual-IVFADC store"
-            )
-        return layout
-    return {
+    return storage.read_layout(root, {
         "kind": "residual_ivfpq",
         "gen": 0,
         "batches": 0,
@@ -3280,32 +3178,20 @@ def _residual_store_layout(root: str) -> dict:
         "assign": ["assign"],
         "codes": ["codes"],
         "prev": [],
-    }
+    }, kind=("residual_ivfpq", "residual-IVFADC"))
 
 
 def _sweep_residual_orphans(root: str, layout: dict) -> None:
     """Under the writer lock: remove batch/generation dirs referenced
     by neither the live layout nor its deferred-GC retention list
     (crash leftovers from a torn append or compaction), and torn
-    ``layout.json.tmp.*`` publish staging files — the
-    :func:`~kt_sql_hbase_ex_spark.functions.text_index.compact_partitioned_store`
-    sweep discipline for the list-valued layout."""
-    import glob
-    import os
-    import shutil
-
-    referenced = (
-        set(layout["assign"]) | set(layout["codes"]) | set(layout["prev"])
+    publish staging (:func:`storage.sweep_orphans` for the list-valued
+    layout)."""
+    storage.sweep_orphans(
+        root,
+        ("assign_b*", "codes_b*", "assign_g*", "codes_g*"),
+        set(layout["assign"]) | set(layout["codes"]) | set(layout["prev"]),
     )
-    for pattern in ("assign_b*", "codes_b*", "assign_g*", "codes_g*"):
-        for d in glob.glob(os.path.join(root, pattern)):
-            if os.path.basename(d) not in referenced:
-                shutil.rmtree(d, ignore_errors=True)
-    for f in glob.glob(os.path.join(root, "layout.json.tmp.*")):
-        try:
-            os.unlink(f)
-        except OSError:
-            pass
 
 
 def _union_read(spark: SparkSession, root: str, names: list) -> DataFrame:
@@ -3332,10 +3218,7 @@ def ensure_ivfpq_residual_store(spark: SparkSession, sf_dir: str) -> str:
     import json
     import os
 
-    from kt_sql_hbase_ex_spark.functions.text_index import (
-        _build_once,
-        _index_root,
-    )
+    from kt_sql_hbase_ex_spark.functions.text_index import index_root
 
     variant = (
         f"ivfpq-residual-v2|{N_CELLS}|{N_PROBE}|{M_SUB}x{D_SUB}k{K_CODES}"
@@ -3394,7 +3277,7 @@ def ensure_ivfpq_residual_store(spark: SparkSession, sf_dir: str) -> str:
                 f,
             )
 
-    return _build_once(_index_root(sf_dir, variant), build)
+    return storage.build_once(index_root(sf_dir, variant), build)
 
 
 def probe_residual_ivfpq_store(
@@ -3612,7 +3495,7 @@ def append_residual_ivfpq_batch(
     its residual against that centroid encodes against the FROZEN
     books, and both the assignment row (2 ints, into its ``cid=``
     partition) and the code rows (into their ``m=`` partitions) land
-    as new files under the O_EXCL writer lock. Write ∝ batch; neither
+    as new files under the store writer lock. Write ∝ batch; neither
     quantizer retrains on append (the sim09/sim16 discipline — the
     append≡rebuild test proves a grown store serves the identical
     probe answers).
@@ -3628,9 +3511,7 @@ def append_residual_ivfpq_batch(
     import os
     import uuid as _uuid
 
-    from kt_sql_hbase_ex_spark.functions.text_index import _writer_lock
-
-    with _writer_lock(root):
+    with storage.writer_lock(root):
         layout = _residual_store_layout(root)
         _sweep_residual_orphans(root, layout)
         n = layout["batches"] + 1
@@ -3654,7 +3535,7 @@ def append_residual_ivfpq_batch(
         _pq_encode(_subspaces(resid, "rv", ["vec_id"]), books).repartition(
             "m"
         ).write.partitionBy("m").parquet(os.path.join(root, cdir))
-        _pq_write_layout(  # the single atomic publish of BOTH relations
+        storage.write_layout(  # the single atomic publish of BOTH relations
             root,
             dict(
                 layout,
@@ -3675,12 +3556,9 @@ def compact_residual_ivfpq_store(spark: SparkSession, root: str) -> dict:
     superseded by the PREVIOUS compaction is reclaimed now — two swaps
     old, no reader can still resolve it)."""
     import os
-    import shutil
     import uuid as _uuid
 
-    from kt_sql_hbase_ex_spark.functions.text_index import _writer_lock
-
-    with _writer_lock(root):
+    with storage.writer_lock(root):
         layout = _residual_store_layout(root)
         _sweep_residual_orphans(root, layout)
         gen = layout["gen"] + 1
@@ -3692,7 +3570,7 @@ def compact_residual_ivfpq_store(spark: SparkSession, root: str) -> dict:
         _union_read(spark, root, layout["codes"]).repartition(
             "m"
         ).write.partitionBy("m").parquet(os.path.join(root, cdir))
-        _pq_write_layout(
+        storage.write_layout(
             root,
             dict(
                 layout,
@@ -3702,8 +3580,7 @@ def compact_residual_ivfpq_store(spark: SparkSession, root: str) -> dict:
                 prev=layout["assign"] + layout["codes"],
             ),
         )
-        for d in layout["prev"]:  # deferred GC of the pre-previous gen
-            shutil.rmtree(os.path.join(root, d), ignore_errors=True)
+        storage.drop_dirs(root, layout["prev"])  # the pre-previous gen
     return {
         "gen": gen,
         "dirs_before": len(layout["assign"]) + len(layout["codes"]),
@@ -3744,10 +3621,7 @@ def ensure_filtered_ivfpq_store(spark: SparkSession, sf_dir: str) -> str:
     alongside the inverted-list entries)."""
     import os
 
-    from kt_sql_hbase_ex_spark.functions.text_index import (
-        _build_once,
-        _index_root,
-    )
+    from kt_sql_hbase_ex_spark.functions.text_index import index_root
 
     variant = f"ivfpq-filtered|{N_CELLS}|{N_PROBE}|{M_SUB}x{D_SUB}k{K_CODES}"
 
@@ -3772,7 +3646,7 @@ def ensure_filtered_ivfpq_store(spark: SparkSession, sf_dir: str) -> str:
             "cid"
         ).write.partitionBy("cid").parquet(os.path.join(staging, "assign"))
 
-    return _build_once(_index_root(sf_dir, variant), build)
+    return storage.build_once(index_root(sf_dir, variant), build)
 
 
 def probe_filtered_ivfpq_store(

@@ -50,7 +50,7 @@ counter minima, histogram quantile picks), not just a tolerance flag:
 Store layout (per store root)::
 
     layout.json            {"kind","gen","data","segments"} — atomic
-                           os.replace publishes, resolved ONCE per read
+                           pointer publishes, resolved ONCE per read
     <data>/seg=<s>/*.parquet   HLL registers (appends land as new
                                segment partitions; max-merge at read
                                makes re-appends IDEMPOTENT)
@@ -60,23 +60,19 @@ Store layout (per store root)::
 Compaction collapses accumulated segment/append rows into one merged
 row set as a fresh generation dir behind the pointer (answers
 unchanged — pinned in tests); the superseded dir survives one cycle
-for in-flight readers (deferred GC, the kvstore/text_index
-discipline). Writers serialize through the shared O_EXCL
-``_writer_lock``.
+for in-flight readers (deferred GC). Pointer publishes, the writer
+lock and build-once provisioning are the ``storage`` substrate's.
 """
 
 from __future__ import annotations
 
-import hashlib
-import json
 import os
-import shutil
-import tempfile
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from kt_sql_hbase_ex_spark import storage
 from kt_sql_hbase_ex_spark.registry import query
 from kt_sql_hbase_ex_spark.sources.catalog import (
     fan_out,
@@ -120,37 +116,17 @@ _SK02_SPLIT_YEAR = 1994
 # --- shared store plumbing --------------------------------------------
 
 
-def _sketch_root(sf_dir: str, table: str, variant: str) -> str:
-    """Fingerprinted build-once location for one fixture's sketch store
-    (the ``text_index._index_root`` discipline, keyed to the SOURCE
-    table the sketch summarizes)."""
-    src = os.path.realpath(table_path(sf_dir, table))
-    st = os.stat(src)
-    fp = hashlib.sha256(
-        f"{src}|{st.st_mtime_ns}|{st.st_size}|sketch-v2|{variant}".encode()
-    ).hexdigest()[:16]
-    uid = getattr(os, "getuid", lambda: 0)()
-    return os.path.join(tempfile.gettempdir(), f"kt_sql_sketch_u{uid}", fp)
+def sketch_root(sf_dir: str, table: str, variant: str) -> str:
+    """Fingerprinted build-once location for one fixture's sketch store,
+    keyed to the SOURCE table the sketch summarizes."""
+    return storage.fingerprint_root(
+        "sketch", table_path(sf_dir, table), f"sketch-v2|{variant}"
+    )
 
 
-def _layout_path(root: str) -> str:
-    return os.path.join(root, "layout.json")
-
-
-def _write_layout(root: str, layout: dict) -> None:
-    """Atomic pointer publish (os.replace), the kvstore discipline."""
-    tmp = f"{_layout_path(root)}.tmp.{os.getpid()}"
-    with open(tmp, "w") as f:
-        json.dump(layout, f)
-    os.replace(tmp, _layout_path(root))
-
-
-def _read_layout(root: str) -> dict:
-    """Resolve the pointer ONCE per operation and thread it through —
-    double resolution races a concurrent publish (the round-11/12
-    torn-read lesson from the PQ and KV stores)."""
-    with open(_layout_path(root)) as f:
-        return json.load(f)
+#: the store's generation pointer, resolved ONCE per operation
+_read_layout = storage.read_layout
+_write_layout = storage.write_layout
 
 
 def _data_dir(root: str, layout: dict) -> str:
@@ -215,9 +191,7 @@ def append_hll_segments(
     max-merge, re-appending the SAME slice is idempotent (at-least-once
     ingest needs no dedup ledger). The layout resolves once; files land
     inside the live generation's ``seg=`` partitions."""
-    from kt_sql_hbase_ex_spark.functions.text_index import _writer_lock
-
-    with _writer_lock(root):
+    with storage.writer_lock(root):
         layout = _read_layout(root)
         (
             _hll_registers(df, grp, val, seg)
@@ -235,9 +209,7 @@ def compact_hll_store(spark: SparkSession, root: str) -> dict:
     idempotent), bytes ∝ groups × m afterwards regardless of how many
     segments accreted. The superseded data dir is retained one cycle
     for in-flight readers, then swept (deferred GC)."""
-    from kt_sql_hbase_ex_spark.functions.text_index import _writer_lock
-
-    with _writer_lock(root):
+    with storage.writer_lock(root):
         layout = _read_layout(root)
         merged = (
             spark.read.parquet(_data_dir(root, layout))
@@ -249,8 +221,7 @@ def compact_hll_store(spark: SparkSession, root: str) -> dict:
         merged.repartition("seg").write.partitionBy("seg").parquet(
             os.path.join(root, data)
         )
-        for stale in layout.get("prev", []):
-            shutil.rmtree(os.path.join(root, stale), ignore_errors=True)
+        storage.drop_dirs(root, layout.get("prev", []))
         _write_layout(
             root,
             {
@@ -380,15 +351,13 @@ def ensure_hll_store(spark: SparkSession, sf_dir: str) -> str:
     """sk01's store: registers over the full fixture, one segment per
     ship year (1992..1998 at TPC-H dates) — the shape an ingest
     pipeline would leave behind."""
-    from kt_sql_hbase_ex_spark.functions.text_index import _build_once
-
     def build(staging: str) -> None:
         write_hll_store(
             spark, staging, _li_slice(spark, sf_dir),
             "l_returnflag", "l_orderkey", "ship_year",
         )
 
-    return _build_once(_sketch_root(sf_dir, "lineitem", "hll-year"), build)
+    return storage.build_once(sketch_root(sf_dir, "lineitem", "hll-year"), build)
 
 
 def ensure_hll_incremental_store(spark: SparkSession, sf_dir: str) -> str:
@@ -397,8 +366,6 @@ def ensure_hll_incremental_store(spark: SparkSession, sf_dir: str) -> str:
     years), then compaction to one merged register set. The oracle
     stays blind to the lifecycle (it replays the union corpus), so a
     green sk02 proves base + append + compact ≡ one-shot build."""
-    from kt_sql_hbase_ex_spark.functions.text_index import _build_once
-
     def build(staging: str) -> None:
         rows = _li_slice(spark, sf_dir)
         write_hll_store(
@@ -413,8 +380,8 @@ def ensure_hll_incremental_store(spark: SparkSession, sf_dir: str) -> str:
         )
         compact_hll_store(spark, staging)
 
-    return _build_once(
-        _sketch_root(sf_dir, "lineitem", f"hll-incr{_SK02_SPLIT_YEAR}"),
+    return storage.build_once(
+        sketch_root(sf_dir, "lineitem", f"hll-incr{_SK02_SPLIT_YEAR}"),
         build,
     )
 
@@ -579,9 +546,7 @@ def _counter_append(
     sketches equals the sketch of the union corpus (the linearity that
     makes these sketches shard-friendly: every ingest partition
     sketches independently, no coordination)."""
-    from kt_sql_hbase_ex_spark.functions.text_index import _writer_lock
-
-    with _writer_lock(root):
+    with storage.writer_lock(root):
         layout = _read_layout(root)
         counters.coalesce(1).write.mode("append").parquet(
             _data_dir(root, layout)
@@ -592,9 +557,7 @@ def _counter_compact(spark: SparkSession, root: str) -> dict:
     """Fold accumulated counter rows into one summed set per key tuple
     as a fresh generation — the fixed footprint a standing store
     returns to after any number of appends; deferred GC as everywhere."""
-    from kt_sql_hbase_ex_spark.functions.text_index import _writer_lock
-
-    with _writer_lock(root):
+    with storage.writer_lock(root):
         layout = _read_layout(root)
         keys = layout["keys"]
         merged = (
@@ -604,8 +567,7 @@ def _counter_compact(spark: SparkSession, root: str) -> dict:
         )
         data = f"counters.{uuid.uuid4().hex[:12]}"
         merged.coalesce(1).write.parquet(os.path.join(root, data))
-        for stale in layout.get("prev", []):
-            shutil.rmtree(os.path.join(root, stale), ignore_errors=True)
+        storage.drop_dirs(root, layout.get("prev", []))
         _write_layout(
             root,
             {
@@ -655,8 +617,6 @@ def ensure_cm_store(spark: SparkSession, sf_dir: str) -> str:
     compacted to the canonical d × w counter set. The oracle replays
     counters from the FULL corpus, so a green sk03 proves segment
     addition ≡ whole-corpus sketch (count-min's linearity)."""
-    from kt_sql_hbase_ex_spark.functions.text_index import _build_once
-
     def build(staging: str) -> None:
         toks = _cm_tokens(spark, sf_dir)
         write_cm_store(
@@ -667,7 +627,7 @@ def ensure_cm_store(spark: SparkSession, sf_dir: str) -> str:
         )
         compact_cm_store(spark, staging)
 
-    return _build_once(_sketch_root(sf_dir, "documents", "cm-parity"), build)
+    return storage.build_once(sketch_root(sf_dir, "documents", "cm-parity"), build)
 
 
 @query(
@@ -841,8 +801,6 @@ def ensure_quantile_store(spark: SparkSession, sf_dir: str) -> str:
     appended, compacted — the oracle replays buckets from the full
     corpus, so green proves segment addition ≡ whole-corpus histogram
     (the same linearity proof as sk03's counters)."""
-    from kt_sql_hbase_ex_spark.functions.text_index import _build_once
-
     def build(staging: str) -> None:
         li = fan_out(load_table(spark, sf_dir, "lineitem")).select(
             "l_returnflag",
@@ -871,8 +829,8 @@ def ensure_quantile_store(spark: SparkSession, sf_dir: str) -> str:
         )
         _counter_compact(spark, staging)
 
-    return _build_once(
-        _sketch_root(sf_dir, "lineitem", "qhist-returnflag"), build
+    return storage.build_once(
+        sketch_root(sf_dir, "lineitem", "qhist-returnflag"), build
     )
 
 
@@ -1056,9 +1014,7 @@ def append_kmv_batch(
     minK(minK(A) ∪ minK(B)) = minK(A ∪ B) makes appends mergeable and
     (being distinct-based) idempotent: at-least-once ingest, no
     ledger, exactly the HLL register discipline for bottom-k state."""
-    from kt_sql_hbase_ex_spark.functions.text_index import _writer_lock
-
-    with _writer_lock(root):
+    with storage.writer_lock(root):
         layout = _read_layout(root)
         kmv_minks(df, grp, val).coalesce(1).write.mode("append").parquet(
             _data_dir(root, layout)
@@ -1069,15 +1025,12 @@ def compact_kmv_store(spark: SparkSession, root: str) -> dict:
     """Materialize the merged minK per group as a fresh generation —
     accreted candidate rows beyond K physically drop (they can never
     re-enter any minK)."""
-    from kt_sql_hbase_ex_spark.functions.text_index import _writer_lock
-
-    with _writer_lock(root):
+    with storage.writer_lock(root):
         layout = _read_layout(root)
         merged = _kmv_merge(spark.read.parquet(_data_dir(root, layout)))
         data = f"rows.{uuid.uuid4().hex[:12]}"
         merged.coalesce(1).write.parquet(os.path.join(root, data))
-        for stale in layout.get("prev", []):
-            shutil.rmtree(os.path.join(root, stale), ignore_errors=True)
+        storage.drop_dirs(root, layout.get("prev", []))
         _write_layout(
             root,
             {
@@ -1133,8 +1086,6 @@ def ensure_kmv_store(spark: SparkSession, sf_dir: str) -> str:
     mergeable lifecycle: two orderkey-parity halves sketched
     independently, appended, compacted — the oracle replays minK from
     the full orders table, so green IS the merge identity."""
-    from kt_sql_hbase_ex_spark.functions.text_index import _build_once
-
     def build(staging: str) -> None:
         o = fan_out(load_table(spark, sf_dir, "orders")).select(
             F.year("o_orderdate").alias("y"), "o_custkey", "o_orderkey"
@@ -1149,7 +1100,7 @@ def ensure_kmv_store(spark: SparkSession, sf_dir: str) -> str:
         )
         compact_kmv_store(spark, staging)
 
-    return _build_once(_sketch_root(sf_dir, "orders", "kmv-year"), build)
+    return storage.build_once(sketch_root(sf_dir, "orders", "kmv-year"), build)
 
 
 @query(

@@ -51,41 +51,37 @@ Layer publishing discipline: the mutable layers (``postings``,
 file ``layers.json`` — appends land in the currently-pointed dirs
 (pointer untouched), while :func:`compact_text_index` builds fresh
 uniquely-named dirs and repoints ALL four layers with ONE atomic
-``os.replace`` (the same version-dir + meta-pointer pattern as the KV
-secondary index, ``sources/kvstore.py``). Superseded dirs are deleted
+pointer publish (:func:`storage.write_pointer`, the version-dir +
+meta-pointer pattern every store shares). Superseded dirs are deleted
 by the NEXT compaction's deferred GC, so a reader holding a resolved
 path gets a full cycle to finish. Each reader resolves the pointer
 once per call and takes every layer it needs from that snapshot, so a
 mid-compaction read never mixes folded postings with cleared
 tombstones. Writers (maintenance and compaction) are serialized
-MECHANICALLY: every writer holds the O_EXCL-created ``writer.lock``
-for its whole run (``_writer_lock``) and each applied generation is
-itself an O_EXCL claim (``_mark_gen``) — the losing side of a race
-raises :class:`IndexWriterConflict` instead of interleaving. The
-reference used a Redis write lock for exactly this
-(``RedisLockFactory.kt:16-41``).
+MECHANICALLY: every writer holds the store's ``writer.lock``
+(:func:`storage.writer_lock`) for its whole run and each applied
+generation is itself an exclusive claim (``_mark_gen``,
+:func:`storage.claim`) — the losing side of a race raises
+:class:`IndexWriterConflict` instead of interleaving. The reference
+used a Redis write lock for exactly this (``RedisLockFactory.kt:16-41``).
 
 Provisioning discipline (fixture-only): the index is fingerprinted by
 the documents file's identity and built under a staging dir published
-by one atomic rename — concurrent test shards never see a half-built
-index (the ``_chunked_events_dir`` pattern). In production the build is
+by one atomic rename (:func:`storage.build_once`) — concurrent test
+shards never see a half-built index. In production the build is
 a one-time backfill job and batches land live; compaction runs
 per-prefix on a size trigger instead of corpus-wide.
 """
 
 from __future__ import annotations
 
-import contextlib
-import hashlib
-import json
 import os
-import shutil
-import tempfile
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from kt_sql_hbase_ex_spark import storage
 from kt_sql_hbase_ex_spark.registry import query
 from kt_sql_hbase_ex_spark.sources.catalog import fan_out, load_table, table_path
 
@@ -104,17 +100,16 @@ def term_prefix(term_col):
     return F.coalesce(F.nullif(F.substring(c, 1, 1), F.lit("")), F.lit("_"))
 
 
-def _index_root(sf_dir: str, variant: str) -> str:
-    """Fingerprinted location for one fixture's index: documents file
-    identity + layout version + variant (full corpus vs t13's split vs
-    t15's mutated corpus)."""
-    src = os.path.realpath(table_path(sf_dir, "documents"))
-    st = os.stat(src)
-    fp = hashlib.sha256(
-        f"{src}|{st.st_mtime_ns}|{st.st_size}|v{_LAYOUT_VERSION}|{variant}".encode()
-    ).hexdigest()[:16]
-    uid = getattr(os, "getuid", lambda: 0)()
-    return os.path.join(tempfile.gettempdir(), f"kt_sql_text_index_u{uid}", fp)
+def index_root(sf_dir: str, variant: str) -> str:
+    """Fingerprinted build-once location for a store derived from one
+    fixture's ``documents``: file identity + layout version + variant
+    (full corpus vs t13's split vs t15's mutated corpus; the dedup and
+    similarity stores pass their own variants)."""
+    return storage.fingerprint_root(
+        "text_index",
+        table_path(sf_dir, "documents"),
+        f"v{_LAYOUT_VERSION}|{variant}",
+    )
 
 
 # --- layer pointer (version-dir + atomic meta-pointer publishes) -------
@@ -128,11 +123,7 @@ def _read_pointer(root: str) -> dict:
     """One pointer snapshot: {layer: dir-name} plus the deferred-GC
     list. A root with no pointer file uses the plain layer names (the
     pre-compaction layout appends create)."""
-    try:
-        with open(_pointer_path(root)) as f:
-            return json.load(f)
-    except FileNotFoundError:
-        return {"gc": []}
+    return storage.read_pointer(_pointer_path(root), {"gc": []})
 
 
 def _resolve(root: str, ptr: dict, layer: str) -> str:
@@ -171,54 +162,21 @@ def _read_layer(spark: SparkSession, path: str, layer: str) -> DataFrame:
 # --- writer mutual exclusion + generation tracking ---------------------
 
 
-class IndexWriterConflict(RuntimeError):
-    """A second writer (maintenance upsert or compaction) tried to
-    enter the index while another holds the writer lock. Retry after
-    the holder finishes; if the holder crashed, clear the stale lock
-    with :func:`break_writer_lock` after verifying no writer is alive."""
+#: a second writer (maintenance upsert or compaction) tried to enter the
+#: index while another holds ``writer.lock``, or a generation was
+#: already applied. Retry after the holder finishes; if it crashed,
+#: clear the stale lock with :func:`break_writer_lock`.
+IndexWriterConflict = storage.LockConflict
 
+#: the index writer lock (:func:`storage.writer_lock`): held for the
+#: whole upsert or compaction, so a concurrent upsert-vs-upsert or
+#: upsert-vs-compact loses LOUDLY instead of interleaving appends with a
+#: pointer swap — the reference's Redis write lock
+#: (``RedisLockFactory.kt:16-41``). Never auto-stolen on age.
+_writer_lock = storage.writer_lock
 
-@contextlib.contextmanager
-def _writer_lock(root: str):
-    """Mechanical single-writer claim (round-6 verdict task #2): an
-    O_EXCL-created ``writer.lock`` under the index root, held for the
-    whole upsert or compaction — the reference carried a Redis write
-    lock for exactly this (``RedisLockFactory.kt:16-41``); a
-    file-backed index gets the same mutual exclusion from exclusive
-    create, so a concurrent upsert-vs-upsert or upsert-vs-compact
-    loses LOUDLY (:class:`IndexWriterConflict`) instead of
-    interleaving appends with a pointer swap. A crashed writer leaves
-    the lock behind; it is deliberately NOT auto-stolen on age (the
-    Redis lease-TTL analog): stealing under a live-but-slow writer
-    corrupts the index, while a stuck lock only delays writes —
-    operators verify and :func:`break_writer_lock`."""
-    os.makedirs(root, exist_ok=True)
-    path = os.path.join(root, "writer.lock")
-    try:
-        fd = os.open(path, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-    except FileExistsError:
-        raise IndexWriterConflict(
-            f"text index {root}: another writer holds writer.lock — retry "
-            "after it finishes (break_writer_lock clears a crashed one)"
-        ) from None
-    try:
-        os.write(fd, str(os.getpid()).encode())
-        os.close(fd)
-        yield
-    finally:
-        try:
-            os.unlink(path)
-        except OSError:
-            pass
-
-
-def break_writer_lock(root: str) -> None:
-    """Clear a crashed writer's lock. Only safe once no writer process
-    is alive — the operator's judgement, like releasing a Redis lock."""
-    try:
-        os.unlink(os.path.join(root, "writer.lock"))
-    except FileNotFoundError:
-        pass
+#: clear a crashed writer's lock; refused while its holder is alive
+break_writer_lock = storage.break_writer_lock
 
 
 def reject_flat_relation(live_dir: str) -> None:
@@ -274,35 +232,25 @@ def compact_partitioned_store(
 
     Crash safety: never-published orphan generation dirs (referenced by
     neither the live layout nor its ``prev`` retention list) and torn
-    ``layout.json.tmp.*`` staging files from a crashed publish are
-    swept under the lock before the fold; fresh uuid dir tags keep a
+    publish staging from a crashed run are swept under the lock before
+    the fold (:func:`storage.sweep_orphans`); fresh uuid dir tags keep a
     retry from colliding with its own orphan. Returns
     ``{"gen", "files_before", "files_after"}``."""
     import glob
-    import json
-    import shutil
-    import uuid as _uuid
 
     count = lambda d: len(
         glob.glob(os.path.join(d, "**", "*.parquet"), recursive=True)
     )
     with _writer_lock(root):
         layout = layout_reader()
-        referenced = {layout[k] for k, _ in relations} | set(
-            layout.get("prev", [])
+        storage.sweep_orphans(
+            root,
+            [f"{prefix}_g*" for _, prefix in relations],
+            {layout[k] for k, _ in relations} | set(layout.get("prev", [])),
         )
-        for _, prefix in relations:
-            for d in glob.glob(os.path.join(root, f"{prefix}_g*")):
-                if os.path.basename(d) not in referenced:
-                    shutil.rmtree(d, ignore_errors=True)  # crashed-run orphan
-        for f in glob.glob(os.path.join(root, "layout.json.tmp.*")):
-            try:
-                os.unlink(f)  # torn publish staging from a crashed run
-            except OSError:
-                pass
         n_before = sum(count(os.path.join(root, layout[k])) for k, _ in relations)
         gen = layout["gen"] + 1
-        tag = _uuid.uuid4().hex[:8]
+        tag = uuid.uuid4().hex[:8]
         new_layout = dict(layout)
         new_layout["gen"] = gen
         new_layout["prev"] = [layout[k] for k, _ in relations]
@@ -326,14 +274,10 @@ def compact_partitioned_store(
                     spark.read.parquet(udir).coalesce(target_files).write.parquet(
                         tgt
                     )
-        staging = os.path.join(root, f"layout.json.tmp.{os.getpid()}")
-        with open(staging, "w") as f:
-            json.dump(new_layout, f)
-        os.replace(staging, os.path.join(root, "layout.json"))
+        storage.write_pointer(storage.layout_path(root), new_layout)
         # deferred GC: the generation superseded by the PREVIOUS
         # compaction is now two swaps old — no reader can still hold it
-        for d in layout.get("prev", []):
-            shutil.rmtree(os.path.join(root, d), ignore_errors=True)
+        storage.drop_dirs(root, layout.get("prev", []))
         n_after = sum(
             count(os.path.join(root, new_layout[k])) for k, _ in relations
         )
@@ -341,18 +285,13 @@ def compact_partitioned_store(
 
 
 def _mark_gen(root: str, gen: int) -> None:
-    """Record a generation as applied — O_EXCL so a double-apply of the
-    same generation (two writers that somehow both computed it, e.g.
-    after a lock was broken under a live writer) fails loudly instead
-    of silently double-counting a batch."""
+    """Record a generation as applied — an exclusive claim, so a
+    double-apply of the same generation (two writers that somehow both
+    computed it, e.g. after a lock was broken under a live writer)
+    fails loudly instead of silently double-counting a batch."""
     d = os.path.join(root, "gens")
     os.makedirs(d, exist_ok=True)
-    try:
-        fd = os.open(
-            os.path.join(d, f"{gen:08d}"), os.O_CREAT | os.O_EXCL | os.O_WRONLY
-        )
-        os.close(fd)
-    except FileExistsError:
+    if not storage.claim(os.path.join(d, f"{gen:08d}")):
         raise IndexWriterConflict(
             f"text index {root}: generation {gen} already applied — "
             "a concurrent writer raced this batch"
@@ -362,8 +301,8 @@ def _mark_gen(root: str, gen: int) -> None:
 def _next_gen(root: str) -> int:
     """Next batch generation: max applied gen + 1 (driver-side listing
     of marker files — no data read). Callers hold the writer lock, so
-    the read-compute-claim sequence is single-writer; the O_EXCL claim
-    in :func:`_mark_gen` backstops it."""
+    the read-compute-claim sequence is single-writer; the exclusive
+    claim in :func:`_mark_gen` backstops it."""
     d = os.path.join(root, "gens")
     if not os.path.isdir(d):
         return 0
@@ -630,18 +569,10 @@ def _run_deferred_gc(
             (entry["dirs"], entry["at"]) if isinstance(entry, dict) else ([entry], 0.0)
         )
         if now - at >= gc_retention_sec:
-            for d in dirs:
-                shutil.rmtree(os.path.join(root, d), ignore_errors=True)
+            storage.drop_dirs(root, dirs)
         else:
             kept_gc.append({"dirs": dirs, "at": at})
     return kept_gc
-
-
-def _publish_pointer(root: str, new: dict) -> None:
-    tmp = f"{_pointer_path(root)}.tmp.{os.getpid()}"
-    with open(tmp, "w") as f:
-        json.dump(new, f)
-    os.replace(tmp, _pointer_path(root))  # the atomic publish
 
 
 def _compact_corpus_locked(
@@ -678,7 +609,7 @@ def _compact_corpus_locked(
     new["gc"] = kept_gc + [
         {"dirs": [ptr.get(layer, layer) for layer in _LAYERS], "at": now}
     ]
-    _publish_pointer(root, new)
+    storage.write_pointer(_pointer_path(root), new)
 
 
 def compact_text_index_prefixes(
@@ -758,32 +689,11 @@ def compact_text_index_prefixes(
         new["gc"] = kept_gc + [
             {"dirs": [ptr.get("postings", "postings")], "at": now}
         ]
-        _publish_pointer(root, new)
+        storage.write_pointer(_pointer_path(root), new)
         return chosen_vals
 
 
 # --- build-once provisioning ------------------------------------------
-
-
-def _build_once(base: str, build_fn) -> str:
-    """Marker-checked build-and-atomically-publish (shared by the full
-    index and the t13/t15 variants): run ``build_fn(staging_dir)`` in a
-    per-process staging dir, stamp ``_SUCCESS``, publish with ONE atomic
-    rename. Losing the publish race is fine — the competing build is
-    deterministic-identical, so the loser just discards its staging."""
-    marker = os.path.join(base, "_SUCCESS")
-    if not os.path.exists(marker):
-        os.makedirs(os.path.dirname(base), exist_ok=True)
-        staging = f"{base}.tmp.{os.getpid()}"
-        shutil.rmtree(staging, ignore_errors=True)
-        build_fn(staging)
-        with open(os.path.join(staging, "_SUCCESS"), "w"):
-            pass
-        try:
-            os.rename(staging, base)
-        except OSError:  # lost the publish race — the other build is identical
-            shutil.rmtree(staging, ignore_errors=True)
-    return base
 
 
 def ensure_text_index(spark: SparkSession, sf_dir: str) -> str:
@@ -794,7 +704,7 @@ def ensure_text_index(spark: SparkSession, sf_dir: str) -> str:
     def build(staging: str) -> None:
         _write_index_parts(fan_out(load_table(spark, sf_dir, "documents")), staging)
 
-    return _build_once(_index_root(sf_dir, "full"), build)
+    return storage.build_once(index_root(sf_dir, "full"), build)
 
 
 #: t13: term statistics queried from the MAINTAINED index. Bucket 9 of
@@ -864,7 +774,7 @@ def t13_incremental_index_maintenance(spark: SparkSession, sf_dir: str) -> DataF
         _write_index_parts(docs.filter(bucket != 9), staging)  # the backfill
         upsert_index_batch(docs.filter(bucket == 9), staging, assume_new=True)
 
-    base = _build_once(_index_root(sf_dir, "split"), build)
+    base = storage.build_once(index_root(sf_dir, "split"), build)
     return _index_term_stats(spark, base, T13_TERMS)
 
 
@@ -932,7 +842,7 @@ def t15_index_doc_update(spark: SparkSession, sf_dir: str) -> DataFrame:
         deletes = docs.filter(bucket == 9).select("doc_id")
         upsert_index_batch(updated, staging, deletes=deletes)
 
-    base = _build_once(_index_root(sf_dir, "mutate"), build)
+    base = storage.build_once(index_root(sf_dir, "mutate"), build)
     return _index_term_stats(spark, base, T15_TERMS)
 
 
@@ -991,5 +901,5 @@ def t16_prefix_compacted_index(spark: SparkSession, sf_dir: str) -> DataFrame:
         if not compacted:  # the trigger must fire or this tests nothing
             raise RuntimeError("t16: prefix compaction did not trigger")
 
-    base = _build_once(_index_root(sf_dir, "prefixcomp"), build)
+    base = storage.build_once(index_root(sf_dir, "prefixcomp"), build)
     return _index_term_stats(spark, base, T15_TERMS)

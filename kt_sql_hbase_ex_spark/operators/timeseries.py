@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from kt_sql_hbase_ex_spark import storage
 from kt_sql_hbase_ex_spark.functions.money import exact_sum_sql
 from kt_sql_hbase_ex_spark.registry import query
 from kt_sql_hbase_ex_spark.sources.catalog import load_table
@@ -422,14 +423,6 @@ def append_cagg_batch(spark: SparkSession, root: str, batch: DataFrame) -> None:
     regardless of retained history."""
     import os
 
-    from kt_sql_hbase_ex_spark.functions.sketches import (
-        _data_dir,
-        _layout_path,
-        _read_layout,
-        _write_layout,
-    )
-    from kt_sql_hbase_ex_spark.functions.text_index import _writer_lock
-
     parts = _cagg_hour_partials(batch)
     # the CREATE path holds the writer lock too (round-13 review
     # finding): an unlocked exists-check is a TOCTOU — two racing
@@ -437,21 +430,21 @@ def append_cagg_batch(spark: SparkSession, root: str, batch: DataFrame) -> None:
     # would orphan silently; under the lock the loser re-checks and
     # lands as a normal append (or fails loudly on lock conflict, the
     # repo-wide single-writer discipline)
-    with _writer_lock(root):
-        if not os.path.exists(_layout_path(root)):
+    with storage.writer_lock(root):
+        if not os.path.exists(storage.layout_path(root)):
             import uuid
 
             data = f"hour.{uuid.uuid4().hex[:12]}"
             parts.repartition("d").write.partitionBy("d").parquet(
                 os.path.join(root, data)
             )
-            _write_layout(
+            storage.write_layout(
                 root,
                 {"kind": "cagg", "gen": 0, "hour": data, "day": None,
                  "data": data, "prev": []},
             )
             return
-        layout = _read_layout(root)
+        layout = storage.read_layout(root)
         parts.repartition("d").write.mode("append").partitionBy("d").parquet(
             os.path.join(root, layout["hour"])
         )
@@ -464,17 +457,10 @@ def rollup_cagg_store(spark: SparkSession, root: str) -> dict:
     not in this plan), publishing both behind one atomic pointer
     flip; superseded level dirs survive one cycle (deferred GC)."""
     import os
-    import shutil
     import uuid
 
-    from kt_sql_hbase_ex_spark.functions.sketches import (
-        _read_layout,
-        _write_layout,
-    )
-    from kt_sql_hbase_ex_spark.functions.text_index import _writer_lock
-
-    with _writer_lock(root):
-        layout = _read_layout(root)
+    with storage.writer_lock(root):
+        layout = storage.read_layout(root)
         hours = (
             spark.read.parquet(os.path.join(root, layout["hour"]))
             .groupBy("event_type", "d", "hb")
@@ -497,10 +483,9 @@ def rollup_cagg_store(spark: SparkSession, root: str) -> dict:
         )
         ddata = f"day.{uuid.uuid4().hex[:12]}"
         days.coalesce(1).write.parquet(os.path.join(root, ddata))
-        for stale in layout.get("prev", []):
-            shutil.rmtree(os.path.join(root, stale), ignore_errors=True)
+        storage.drop_dirs(root, layout.get("prev", []))
         prev = [layout["hour"]] + ([layout["day"]] if layout["day"] else [])
-        _write_layout(
+        storage.write_layout(
             root,
             {"kind": "cagg", "gen": layout["gen"] + 1, "hour": hdata,
              "day": ddata, "data": hdata, "prev": prev},
@@ -513,8 +498,7 @@ def ensure_cagg_store(spark: SparkSession, sf_dir: str) -> str:
     append hour partials, then one rollup pass folds hours and derives
     the day level — the lifecycle a standing continuous aggregate
     runs (appends per ingest, rollup on the maintenance schedule)."""
-    from kt_sql_hbase_ex_spark.functions.sketches import _sketch_root
-    from kt_sql_hbase_ex_spark.functions.text_index import _build_once
+    from kt_sql_hbase_ex_spark.functions.sketches import sketch_root
 
     def build(staging: str) -> None:
         e = load_table(spark, sf_dir, "events")
@@ -525,7 +509,7 @@ def ensure_cagg_store(spark: SparkSession, sf_dir: str) -> str:
             )
         rollup_cagg_store(spark, staging)
 
-    return _build_once(_sketch_root(sf_dir, "events", "cagg-hour-day"), build)
+    return storage.build_once(sketch_root(sf_dir, "events", "cagg-hour-day"), build)
 
 
 @query(
@@ -566,10 +550,9 @@ def ts07_continuous_aggregate(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
 
     from kt_sql_hbase_ex_spark.functions.money import _emit
-    from kt_sql_hbase_ex_spark.functions.sketches import _read_layout
 
     root = ensure_cagg_store(spark, sf_dir)
-    layout = _read_layout(root)
+    layout = storage.read_layout(root)
     days = spark.read.parquet(os.path.join(root, layout["day"])).select(
         "event_type",
         F.col("db").alias("day_bucket"),

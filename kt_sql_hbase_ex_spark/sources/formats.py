@@ -24,6 +24,7 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from kt_sql_hbase_ex_spark import storage
 from kt_sql_hbase_ex_spark.registry import query
 from kt_sql_hbase_ex_spark.sources.catalog import load_table
 
@@ -72,37 +73,23 @@ _BINFILE_N_DOCS = 100
 def _binfile_dir(spark: SparkSession, sf_dir: str) -> str:
     """Provision one ``{doc_id:06d}.bin`` file per document (UTF-8 text
     bytes) for the first {_BINFILE_N_DOCS} docs — the loose-file landing
-    zone a multimodal ingest job starts from. Staged per-process and
-    atomically renamed (same discipline as the chunked stream source)."""
-    import hashlib
-    import shutil
+    zone a multimodal ingest job starts from, built once
+    (:func:`storage.build_once`)."""
+    import pyarrow.parquet as pq
 
-    src = os.path.realpath(os.path.join(sf_dir, "documents.parquet"))
-    st = os.stat(src)
-    fp = hashlib.sha256(
-        f"{src}|{st.st_mtime_ns}|{st.st_size}|{_BINFILE_N_DOCS}".encode()
-    ).hexdigest()[:16]
-    uid = getattr(os, "getuid", lambda: 0)()
-    base = os.path.join(tempfile.gettempdir(), f"kt_sql_binfiles_u{uid}", fp)
-    if not os.path.exists(os.path.join(base, "_SUCCESS")):
-        import pyarrow.parquet as pq
+    src = os.path.join(sf_dir, "documents.parquet")
 
-        os.makedirs(os.path.dirname(base), exist_ok=True)
-        staging = f"{base}.tmp.{os.getpid()}"
-        shutil.rmtree(staging, ignore_errors=True)
+    def build(staging: str) -> None:
         os.makedirs(staging)
         tbl = pq.read_table(src, columns=["doc_id", "text"])
         for doc_id, text in zip(tbl["doc_id"].to_pylist(), tbl["text"].to_pylist()):
             if doc_id < _BINFILE_N_DOCS:
                 with open(os.path.join(staging, f"{doc_id:06d}.bin"), "wb") as f:
                     f.write(text.encode("utf-8"))
-        with open(os.path.join(staging, "_SUCCESS"), "w"):
-            pass
-        try:
-            os.rename(staging, base)
-        except OSError:
-            shutil.rmtree(staging, ignore_errors=True)
-    return base
+
+    return storage.build_once(
+        storage.fingerprint_root("binfiles", src, str(_BINFILE_N_DOCS)), build
+    )
 
 
 @query(

@@ -42,7 +42,7 @@ import os
 import tempfile
 import time
 import uuid
-from typing import Any, Iterable, Iterator, List, Optional, Sequence, Tuple
+from typing import Any, Iterable, Iterator, List, Sequence, Tuple
 
 from pyspark.sql.datasource import (
     DataSource,
@@ -61,6 +61,8 @@ from pyspark.sql.datasource import (
     WriterCommitMessage,
 )
 from pyspark.sql.types import StructType
+
+from kt_sql_hbase_ex_spark import storage
 
 FORMAT_NAME = "ktsql_kv"
 #: streaming change-feed over the same store (see KVChangesDataSource)
@@ -657,10 +659,10 @@ def _store_state_root(options, kind: str) -> str:
     return os.path.join(tempfile.gettempdir(), f"kt_sql_kv_{kind}_u{uid}")
 
 
-class OverlayWriterConflict(RuntimeError):
-    """A writer could not acquire the store's overlay lock within the
-    timeout. Another writer is live (retry) or crashed holding the lock
-    (verify, then :func:`break_overlay_lock`)."""
+#: a writer could not acquire the store's overlay (or fold) lock within
+#: the timeout. Another writer is live (retry) or crashed holding the
+#: lock (verify, then :func:`break_overlay_lock` / :func:`break_fold_lock`).
+OverlayWriterConflict = storage.LockConflict
 
 
 @contextlib.contextmanager
@@ -671,112 +673,35 @@ def _overlay_lock(options, timeout_s: float = 30.0):
     and the LAST overlay publish wins stamped at the log head — the
     loser's commit is in the WAL but marked applied, so
     ``recover_overlay`` never replays it (silent lost update). The
-    O_EXCL lock makes commit = claim seq + merge + publish one atomic
-    unit; the seq claim alone was already race-free, now the merge is
-    too. Writers BLOCK briefly rather than fail (commits are
-    statement-sized — the overlay contract — so a COMMIT's hold time
-    is one small parquet rewrite); past the timeout the conflict
-    surfaces loudly instead of deadlocking. A MAINTENANCE fold
-    (:func:`compact_store`) takes this lock only for its short
+    lock (:func:`storage.lock`) makes commit = claim seq + merge +
+    publish one atomic unit; the seq claim alone was already race-free,
+    now the merge is too. Writers BLOCK briefly rather than fail
+    (commits are statement-sized — the overlay contract — so a
+    COMMIT's hold time is one small parquet rewrite); past the timeout
+    the conflict surfaces loudly instead of deadlocking. A MAINTENANCE
+    fold (:func:`compact_store`) takes this lock only for its short
     snapshot and publish phases (round-9: the rewrite itself runs
     LOCK-FREE — the new generation is invisible until the pointer
     flip — so commits never stall behind a long fold; folds exclude
     each other via the separate :func:`_fold_lock`). A crashed holder
-    leaves the lock:
-    deliberately NOT auto-stolen on age (stealing under a slow live
-    writer recreates the lost update) — operators verify and
-    :func:`break_overlay_lock`, same discipline as the text index's
-    ``writer.lock`` (the reference's Redis write-lock slot,
-    ``RedisLockFactory.kt:16-41``)."""
+    leaves the lock: deliberately NOT auto-stolen on age (stealing
+    under a slow live writer recreates the lost update) — operators
+    verify and :func:`break_overlay_lock` (the reference's Redis
+    write-lock slot, ``RedisLockFactory.kt:16-41``)."""
     path = overlay_path(options) + ".lock"
-    with _excl_lock(path, timeout_s, "kv store overlay"):
+    with storage.lock(path, timeout_s, "kv store overlay", "break_overlay_lock"):
         yield
-
-
-@contextlib.contextmanager
-def _excl_lock(path: str, timeout_s: float, what: str, breaker: str = "break_overlay_lock"):
-    """O_EXCL file-lock primitive shared by the overlay writer lock and
-    the fold lock: block-with-timeout acquire, pid recorded for the
-    liveness probe, loud :class:`OverlayWriterConflict` past the
-    deadline, unlink on every exit path. ``breaker`` names the
-    clear-a-crashed-holder function for THIS lock in the timeout
-    message (round-9 review: a contended fold lock must point
-    operators at ``break_fold_lock``, not the overlay breaker)."""
-    deadline = time.monotonic() + timeout_s
-    while True:
-        try:
-            fd = os.open(path, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-            break
-        except FileExistsError:
-            if time.monotonic() >= deadline:
-                raise OverlayWriterConflict(
-                    f"{what} {path}: another writer holds the "
-                    f"lock — retry after it finishes ({breaker} "
-                    "clears a crashed one)"
-                ) from None
-            time.sleep(0.01)
-    try:
-        # write/close INSIDE the try: if either raises (ENOSPC, EIO) the
-        # finally still unlinks the lock AND the fd is closed on every
-        # path — an open fd leaked past the unlink would pin the inode
-        # and (on some platforms) block a later O_EXCL recreate.
-        try:
-            os.write(fd, str(os.getpid()).encode())
-        finally:
-            os.close(fd)
-        yield
-    finally:
-        try:
-            os.unlink(path)
-        except OSError:
-            pass
-
-
-def _lock_holder_alive(path: str) -> Optional[int]:
-    """Best-effort liveness probe of the pid recorded in a lock file.
-    Returns the pid if that process still exists on THIS host, else
-    None (missing file, unparseable content, or dead pid). Same-host
-    only — a lock written by another machine reads as 'not alive',
-    which keeps break_overlay_lock an operator judgement call there."""
-    try:
-        with open(path, "rb") as f:
-            pid = int(f.read().strip() or b"0")
-    except (OSError, ValueError):
-        return None
-    if pid <= 0:
-        return None
-    try:
-        os.kill(pid, 0)  # signal 0: existence check, no signal sent
-    except ProcessLookupError:
-        return None
-    except PermissionError:
-        return pid  # exists, owned by someone else
-    return pid
 
 
 def break_overlay_lock(options, force: bool = False) -> None:
     """Clear a crashed writer's overlay lock. Only safe once no writer
     process is alive — the operator's judgement call, exactly like
-    releasing the reference's Redis lock. As a guard rail the recorded
-    pid is probed first: if that process is STILL ALIVE on this host
-    the break is refused (pass ``force=True`` to override after
-    verifying the pid is a coincidental reuse) — breaking under a live
-    writer recreates exactly the lost-update race the lock exists to
-    close."""
-    path = overlay_path(options) + ".lock"
-    if not force:
-        pid = _lock_holder_alive(path)
-        if pid is not None:
-            raise OverlayWriterConflict(
-                f"kv store overlay lock {path}: recorded holder pid "
-                f"{pid} is still alive on this host — refusing to break "
-                "a live writer's lock (verify it is a stale pid reuse, "
-                "then pass force=True)"
-            )
-    try:
-        os.unlink(path)
-    except FileNotFoundError:
-        pass
+    releasing the reference's Redis lock. As a guard rail the break is
+    refused while the recorded holder pid is STILL ALIVE on this host
+    (pass ``force=True`` to override after verifying the pid is a
+    coincidental reuse) — breaking under a live writer recreates
+    exactly the lost-update race the lock exists to close."""
+    storage.break_lock(overlay_path(options) + ".lock", force, "kv store overlay")
 
 
 def truncate_overlay(options) -> None:
@@ -876,11 +801,12 @@ def _append_changelog(
     pinned from the BASE parquet (columns in store order + flag + seq):
     tombstone rows are all-NULL outside the key, and letting pyarrow
     infer per-file types would give delete-only commits unreadable
-    null-typed columns. Sequence claim is an O_EXCL hardlink — the same
+    null-typed columns. The sequence number is an exclusive
+    :func:`storage.claim` of the fully-written entry — the same
     loud-loser discipline as the index claims: two racing commits can
     never share a number or overwrite each other's entry.
     ``footer_meta`` (str→str) embeds keys in the entry's parquet footer
-    — ATOMIC with the claim, since the linked tmp file is fully written
+    — ATOMIC with the claim, since the claimed file is fully written
     first; the bulk-load marker rides here so no reader can ever see
     the claimed entry without its marker (a sidecar alone would leave a
     write-order race window). ``extra_cols`` appends int64 metadata
@@ -888,8 +814,6 @@ def _append_changelog(
     rides in every WAL entry so replicas and recovery replay version
     state exactly). Returns the claimed sequence number (the overlay
     records it as applied_seq)."""
-    import uuid
-
     import pyarrow as pa
     import pyarrow.parquet as pq
 
@@ -913,25 +837,20 @@ def _append_changelog(
     # pre-prune offset and strand caught-up consumers forever
     seq = max(existing[-1] if existing else 0, changelog_floor(opts)) + 1
     out = sorted(rows, key=lambda r: _rowkey_of(r, key_cols))
-    tmp = os.path.join(log_dir, f".tmp-{os.getpid()}-{uuid.uuid4().hex[:8]}")
-    try:
-        while True:
-            tbl = pa.Table.from_pylist(
-                [{**{c: r.get(c) for c in columns},
-                  **{x: r.get(x) for x in (extra_cols or [])},
-                  TOMBSTONE: bool(r.get(TOMBSTONE)), SEQ_COL: seq}
-                 for r in out],
-                schema=schema,
-            )
-            pq.write_table(tbl, tmp)
-            try:
-                os.link(tmp, os.path.join(log_dir, f"{seq:08d}.parquet"))
-                return seq
-            except FileExistsError:
-                seq += 1  # lost the claim race: take the next number
-    finally:
-        if os.path.exists(tmp):
-            os.unlink(tmp)
+
+    def write(staging: str) -> None:
+        tbl = pa.Table.from_pylist(
+            [{**{c: r.get(c) for c in columns},
+              **{x: r.get(x) for x in (extra_cols or [])},
+              TOMBSTONE: bool(r.get(TOMBSTONE)), SEQ_COL: seq}
+             for r in out],
+            schema=schema,
+        )
+        pq.write_table(tbl, staging)
+
+    while not storage.claim(os.path.join(log_dir, f"{seq:08d}.parquet"), write):
+        seq += 1  # lost the claim race: take the next number
+    return seq
 
 
 def delete_from_store(options, keys) -> None:
@@ -941,7 +860,6 @@ def delete_from_store(options, keys) -> None:
     rewritten; the reader drops tombstoned keys at merge time and a
     (real) compaction would reclaim them later."""
     import os
-    import pyarrow as pa
     import pyarrow.parquet as pq
 
     opts = {k.lower(): v for k, v in dict(options).items()}
@@ -988,10 +906,7 @@ def delete_from_store(options, keys) -> None:
         else:
             seqs = _log_seqs(changelog_dir(opts))
             applied = seqs[-1] if seqs else changelog_floor(opts)
-        tmp = opath + ".tmp"
-        pq.write_table(_stamp_applied(pa.Table.from_pylist(rows), applied), tmp)
-        os.replace(tmp, opath)
-        _invalidate_dependent_indexes(opts)
+        _publish_overlay(opts, opath, rows, applied)
 
 
 def get_store_rows(options, keys: list) -> list:
@@ -1194,10 +1109,7 @@ def increment_store(options, increments: list) -> list:
         # WRITE-AHEAD, same discipline as Put/Delete: the entry carries
         # the post-increment absolute rows
         applied = _append_changelog(opts, list(batch.values()), key_cols)
-        tmp = opath + ".tmp"
-        pq.write_table(_stamp_applied(pa.Table.from_pylist(rows), applied), tmp)
-        os.replace(tmp, opath)
-        _invalidate_dependent_indexes(opts)
+        _publish_overlay(opts, opath, rows, applied)
     return out_rows
 
 
@@ -1348,12 +1260,7 @@ def check_and_mutate_store(options, mutations: list) -> list:
             for r in rows:
                 r.setdefault(TOMBSTONE, False)
             applied = _append_changelog(opts, list(batch.values()), key_cols)
-            tmp = opath + ".tmp"
-            pq.write_table(
-                _stamp_applied(pa.Table.from_pylist(rows), applied), tmp
-            )
-            os.replace(tmp, opath)
-            _invalidate_dependent_indexes(opts)
+            _publish_overlay(opts, opath, rows, applied)
     return applied_flags
 
 
@@ -1477,12 +1384,7 @@ def append_store(options, appends: list) -> list:
             r.setdefault(TOMBSTONE, False)
         # WRITE-AHEAD, absolute post-append rows (never suffixes)
         applied = _append_changelog(opts, list(batch.values()), key_cols)
-        tmp = opath + ".tmp"
-        pq.write_table(
-            _stamp_applied(pa.Table.from_pylist(rows), applied), tmp
-        )
-        os.replace(tmp, opath)
-        _invalidate_dependent_indexes(opts)
+        _publish_overlay(opts, opath, rows, applied)
     return out_rows
 
 
@@ -1593,9 +1495,6 @@ def _commit_versioned(opts, batch: list) -> None:
     (rows carry __ts), then the overlay publish keyed (rowkey, __ts) —
     the delete_from_store write-ahead discipline with the versioned
     merge key."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
     key_cols = tuple(opts["keycol"].split(","))
     # collapse same-batch overwrites of one (rowkey, __ts) version
     # BEFORE the WAL append — _append_changelog's contract is per-key
@@ -1616,10 +1515,7 @@ def _commit_versioned(opts, batch: list) -> None:
         opts, batch, key_cols, extra_cols=[VERSION_TS]
     )
     opath = overlay_path(opts)
-    tmp = opath + ".tmp"
-    pq.write_table(_stamp_applied(pa.Table.from_pylist(rows), applied), tmp)
-    os.replace(tmp, opath)
-    _invalidate_dependent_indexes(opts)
+    _publish_overlay(opts, opath, rows, applied)
 
 
 def put_kv_versions(options, rows: list) -> None:
@@ -2113,7 +2009,6 @@ def _commit_put_rows(opts, key_cols, put_rows) -> None:
     driver-side :func:`put_rows_to_store` so the two Put paths can
     never drift on overlay/WAL semantics."""
     import os
-    import pyarrow as pa
     import pyarrow.parquet as pq
 
     _reject_versioned(opts, "connector Put (use put_kv_versions)")
@@ -2135,8 +2030,7 @@ def _commit_put_rows(opts, key_cols, put_rows) -> None:
         rows = sorted(merged.values(), key=lambda r: _rowkey_of(r, key_cols))
         for r in rows:
             r.setdefault(TOMBSTONE, False)
-        tbl = pa.Table.from_pylist(rows) if rows else None
-        if tbl is not None:
+        if rows:
             if batch:  # an empty statement commits no WAL entry
                 # WRITE-AHEAD ordering — see delete_from_store: the
                 # log entry must exist before the overlay becomes
@@ -2145,10 +2039,7 @@ def _commit_put_rows(opts, key_cols, put_rows) -> None:
             else:
                 seqs = _log_seqs(changelog_dir(opts))
                 applied = seqs[-1] if seqs else changelog_floor(opts)
-            tmp = opath + ".tmp"
-            pq.write_table(_stamp_applied(tbl, applied), tmp)
-            os.replace(tmp, opath)  # atomic visibility
-            _invalidate_dependent_indexes(opts)
+            _publish_overlay(opts, opath, rows, applied)
 
 
 def put_rows_to_store(options, rows) -> None:
@@ -2320,7 +2211,7 @@ class KVChangesStreamReader(SimpleDataSourceStreamReader):
 
     def _check_not_pruned(self, nxt: int) -> None:
         # a missing number with LATER numbers present can only mean
-        # retention pruned it (the O_EXCL claim is the finished file —
+        # retention pruned it (the exclusive claim is the finished file —
         # numbers never exist half-written, and claim collisions bump
         # forward leaving no gaps); the durable floor marker catches the
         # everything-pruned case where no later file remains to prove
@@ -2398,10 +2289,9 @@ def prune_changelog(options, upto_seq: int) -> int:
         # the file still exists) — safe; the reverse order could let a
         # stale consumer silently skip the everything-pruned window
         floor = max(max(pruned), changelog_floor(opts))
-        tmp = os.path.join(log_dir, f"._floor.tmp.{os.getpid()}")
-        with open(tmp, "w") as f:
-            f.write(str(floor))
-        os.replace(tmp, os.path.join(log_dir, "_floor"))
+        with storage.publish(os.path.join(log_dir, "_floor")) as staging:
+            with open(staging, "w") as f:
+                f.write(str(floor))
     # ascending order: a crash mid-loop leaves a contiguous SUFFIX of
     # the log (a hole would strand readers between surviving entries)
     for s in sorted(pruned):
@@ -2440,7 +2330,7 @@ def bulk_marker_seqs(options) -> List[int]:
 
 
 #: parquet-footer key marking a commit-log entry as a bulk-load claim —
-#: embedded ATOMICALLY with the O_EXCL claim (the sidecar alone would
+#: embedded ATOMICALLY with the exclusive claim (the sidecar alone would
 #: leave a window where a racing poll sees the zero-row entry before
 #: the sidecar lands and silently skips the bulk)
 _BULK_FOOTER_KEY = b"ktsql_bulk"
@@ -2513,6 +2403,18 @@ def _stamp_applied(tbl, seq: int):
     return tbl.replace_schema_metadata(meta)
 
 
+def _publish_overlay(opts, opath: str, rows: list, applied: int) -> None:
+    """A commit's visibility point, after its WAL entry: publish the
+    merged overlay ``rows`` stamped with the applied-seq watermark,
+    then stale-flip the store's dependent persisted indexes."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    with storage.publish(opath) as staging:
+        pq.write_table(_stamp_applied(pa.Table.from_pylist(rows), applied), staging)
+    _invalidate_dependent_indexes(opts)
+
+
 def recover_overlay(options) -> int:
     """WAL recovery: replay any logged-but-unapplied commits into the
     overlay. The write path appends the commit-log entry BEFORE
@@ -2565,7 +2467,6 @@ def _recover_overlay_locked(opts) -> int:
     overlay lock (writers call this directly at the top of their own
     locked read-merge-publish cycle, so recovery and the new commit
     are one atomic unit)."""
-    import pyarrow as pa
     import pyarrow.parquet as pq
 
     todo = _unapplied_seqs(opts)  # re-derived under the lock
@@ -2597,12 +2498,7 @@ def _recover_overlay_locked(opts) -> int:
                 row[VERSION_TS] = int(r[VERSION_TS])
             row[TOMBSTONE] = bool(r[TOMBSTONE])
             merged[mkey(row)] = row
-    rows = sorted(merged.values(), key=mkey)
-    tbl = _stamp_applied(pa.Table.from_pylist(rows), head)
-    tmp = opath + ".tmp"
-    pq.write_table(tbl, tmp)
-    os.replace(tmp, opath)
-    _invalidate_dependent_indexes(opts)
+    _publish_overlay(opts, opath, sorted(merged.values(), key=mkey), head)
     return len(todo)
 
 
@@ -2865,11 +2761,9 @@ def _fold_lock(options, timeout_s: float = 600.0):
     opts = {k.lower(): v for k, v in dict(options).items()}
     root = _gen_root(opts)
     os.makedirs(root, exist_ok=True)
-    with _excl_lock(
-        os.path.join(root, "fold.lock"),
-        timeout_s,
-        "kv store fold",
-        breaker="break_fold_lock",
+    with storage.lock(
+        os.path.join(root, "fold.lock"), timeout_s, "kv store fold",
+        "break_fold_lock",
     ):
         yield
 
@@ -2877,19 +2771,9 @@ def _fold_lock(options, timeout_s: float = 600.0):
 def break_fold_lock(options, force: bool = False) -> None:
     """Clear a crashed fold's lock — same pid-liveness guard rail as
     :func:`break_overlay_lock`."""
-    path = os.path.join(_gen_root(options), "fold.lock")
-    if not force:
-        pid = _lock_holder_alive(path)
-        if pid is not None:
-            raise OverlayWriterConflict(
-                f"kv store fold lock {path}: recorded holder pid {pid} "
-                "is still alive on this host — refusing to break a live "
-                "fold's lock (verify, then pass force=True)"
-            )
-    try:
-        os.unlink(path)
-    except FileNotFoundError:
-        pass
+    storage.break_lock(
+        os.path.join(_gen_root(options), "fold.lock"), force, "kv store fold"
+    )
 
 
 #: sentinel reason for a lock-free build that lost its race: the
@@ -3565,13 +3449,13 @@ def _fold_region_task(payload: dict) -> list:
     (the identical fold shape, proven distributable): last-wins-merge
     ONE region file with its overlay slice, write the replacement
     chunk(s) into the build dir, return their metadata. Task-retry
-    safe: each ATTEMPT writes to its own uuid-suffixed temp name and
-    ``os.replace``s into the final region-index-derived name — a
-    zombie or speculative attempt still writing after the winning
-    attempt's metadata was collected can only ever atomically install
-    a byte-identical complete file, never tear one mid-write (the
-    final name is only ever the target of a rename, round-9 review
-    finding)."""
+    safe: each ATTEMPT writes to its own uuid-tagged staging name and
+    publishes (:func:`storage.publish`) into the final
+    region-index-derived name — a zombie or speculative attempt still
+    writing after the winning attempt's metadata was collected can
+    only ever atomically install a byte-identical complete file, never
+    tear one mid-write (the final name is only ever the target of a
+    rename, round-9 review finding)."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
@@ -3611,18 +3495,16 @@ def _fold_region_task(payload: dict) -> list:
     out = []
     for j, chunk in enumerate(_region_chunks(rows, payload["region_size"])):
         name = f"region-t{payload['task']:05d}-{j:03d}.parquet"
-        final = os.path.join(payload["new_dir"], name)
-        # underscore prefix: a crash-orphaned temp is invisible to
-        # Spark's default path filter (directory-level parquet reads
-        # skip _/.-prefixed files) and to the metadata-driven readers
-        tmp = os.path.join(payload["new_dir"], f"_tmp.{uuid.uuid4().hex}.{name}")
-        pq.write_table(
-            pa.Table.from_pylist(
-                [{c: r[c] for c in columns} for r in chunk], schema=schema
-            ),
-            tmp,
-        )
-        os.replace(tmp, final)
+        # attempt-unique staging (:func:`storage.publish`): a
+        # crash-orphaned temp is invisible to directory-level parquet
+        # reads and to the metadata-driven readers
+        with storage.publish(os.path.join(payload["new_dir"], name)) as tmp:
+            pq.write_table(
+                pa.Table.from_pylist(
+                    [{c: r[c] for c in columns} for r in chunk], schema=schema
+                ),
+                tmp,
+            )
         chunk_keys = [_rowkey_of(r, key_cols) for r in chunk]
         out.append(
             {
@@ -3765,19 +3647,14 @@ def _distributed_first_fold(
         rks = tbl.column("__rk").to_pylist()
         data = tbl.select(col_order).cast(schema)
         metas = []
-        import uuid as _uuid
-
         for j, lo in enumerate(range(0, tbl.num_rows, region_size)):
             chunk = data.slice(lo, region_size)
             name = f"region-p{pid:05d}-{j:03d}.parquet"
-            # attempt-unique temp + atomic rename: a zombie/speculative
+            # attempt-unique staged publish: a zombie/speculative
             # attempt racing the winner can only install a complete
-            # byte-identical file, never tear the final name mid-write;
-            # the _ prefix hides crash orphans from directory-level reads
-            final = os.path.join(new_dir, name)
-            tmp = os.path.join(new_dir, f"_tmp.{_uuid.uuid4().hex}.{name}")
-            _pq.write_table(chunk, tmp)
-            os.replace(tmp, final)
+            # byte-identical file, never tear the final name mid-write
+            with storage.publish(os.path.join(new_dir, name)) as tmp:
+                _pq.write_table(chunk, tmp)
             metas.append(
                 {
                     "file": name,
@@ -3890,11 +3767,13 @@ def _distributed_bulk_merge(
         # counting / sampling jobs pays a Python-worker stage
         # (guide §4: built-ins over UDFs). O(|regions|) per row, and
         # the batch's row count is statement/bulk-task sized.
-        # ONE list-valued lit: the per-element F.array(*[F.lit(s)...])
-        # form paid ~236 py4j round trips per pass (~0.3 s at sf0.1's
-        # 235 regions); Literal.create on the whole list builds the
-        # identical array literal (same element type, same plan) in
-        # one call (round-14; the _dot_spark single-expr discipline).
+        # A list-valued lit builds the same array literal (same element
+        # type, same plan) as F.array(*[F.lit(s) ...]) — and, in
+        # PySpark 4.1, the same py4j traffic: F.lit(list) expands to
+        # exactly that per-element array, ~4 round trips per element
+        # (807 calls for 200 starts, measured). It is NOT one JVM
+        # call; the speedup once recorded for it does not reproduce
+        # (see the correction in OPTIMIZATION_r14.md §5).
         arr = F.lit(list(start_list))
 
         def route(*cols):
@@ -4111,8 +3990,6 @@ def _distributed_bulk_merge(
         cutoff = snap.get("ttl_cutoff")
 
         def merge_regions(batches):
-            import uuid as _uuid
-
             import pandas as _pd
             import pyarrow as pa
             import pyarrow.compute as pc
@@ -4165,18 +4042,14 @@ def _distributed_bulk_merge(
                     _region_chunks(out_rows, region_size)
                 ):
                     name = f"region-b{ridx:05d}-{j:03d}.parquet"
-                    final = os.path.join(new_dir, name)
-                    tmp = os.path.join(
-                        new_dir, f"_tmp.{_uuid.uuid4().hex}.{name}"
-                    )
-                    _pq.write_table(
-                        pa.Table.from_pylist(
-                            [{c: r[c] for c in col_order} for r in chunk],
-                            schema=out_schema,
-                        ),
-                        tmp,
-                    )
-                    os.replace(tmp, final)
+                    with storage.publish(os.path.join(new_dir, name)) as tmp:
+                        _pq.write_table(
+                            pa.Table.from_pylist(
+                                [{c: r[c] for c in col_order} for r in chunk],
+                                schema=out_schema,
+                            ),
+                            tmp,
+                        )
                     chunk_keys = [_rowkey_of(r, kc) for r in chunk]
                     metas.append(
                         {
@@ -4273,7 +4146,7 @@ def _distributed_bulk_merge(
 def _publish_generation(opts, snap, built, verify: bool) -> dict:
     """Publish phase (under the overlay lock): with ``verify``, first
     re-check that the overlay is byte-identical to the snapshot (inode
-    + mtime_ns + size — every commit os.replace's a new inode) AND the
+    + mtime_ns + size — every commit publishes a new inode) AND the
     pointer still names the snapshot's generation — a racing commit or
     truncate otherwise made the build stale, so it is removed unseen
     and the caller retries. Then one atomic pointer replace makes the
@@ -4284,7 +4157,6 @@ def _publish_generation(opts, snap, built, verify: bool) -> dict:
     open/commit replays that entry against the NEW generation's
     carried watermark (``_unapplied_seqs`` anchors at
     ``gen.applied_seq`` when the overlay is absent)."""
-    import json
     import shutil
 
     if verify:
@@ -4327,11 +4199,7 @@ def _publish_generation(opts, snap, built, verify: bool) -> dict:
     # shard the region list into the generation dir BEFORE the flip —
     # the pointer stays a small-constant JSON read at any region count
     pointer = _shard_region_manifest(pointer, built["dir"])
-    ptr_path = os.path.join(root, GEN_POINTER)
-    tmp = f"{ptr_path}.tmp.{os.getpid()}"
-    with open(tmp, "w") as f:
-        json.dump(pointer, f)
-    os.replace(tmp, ptr_path)
+    storage.write_pointer(os.path.join(root, GEN_POINTER), pointer)
     # the folded overlay retires AFTER the publish: a crash between
     # the two re-applies it over the new generation — idempotent.
     # (A major pass over an empty overlay has nothing to retire.)
@@ -4365,7 +4233,7 @@ def _publish_bulk_generation(
     this order —
 
     1. claim the bulk's commit number: a ZERO-ROW changelog entry via
-       the normal O_EXCL claim (so no commit can ever reuse it) —
+       the normal exclusive claim (so no commit can ever reuse it) —
        the bulk rows themselves never enter the WAL;
     2. write the ``.bulk.json`` marker sidecar (any feed consumer
        whose span crosses the claimed seq now fails loudly toward
@@ -4414,12 +4282,10 @@ def _publish_bulk_generation(
         opts, [], key_cols,
         footer_meta={"ktsql_bulk": json.dumps(marker_body)},
     )
-    log_dir = changelog_dir(opts)
-    marker = _bulk_marker_path(log_dir, seq)
-    tmp = f"{marker}.tmp.{os.getpid()}"
-    with open(tmp, "w") as f:
-        json.dump({"seq": seq, **marker_body, "dir": built["dir"]}, f)
-    os.replace(tmp, marker)
+    storage.write_pointer(
+        _bulk_marker_path(changelog_dir(opts), seq),
+        {"seq": seq, **marker_body, "dir": built["dir"]},
+    )
 
     pointer = {
         "dir": built["dir"],
@@ -4435,11 +4301,7 @@ def _publish_bulk_generation(
             "gen": snap["cur"]["gen"],
         }
     pointer = _shard_region_manifest(pointer, built["dir"])
-    ptr_path = os.path.join(snap["root"], GEN_POINTER)
-    tmp = f"{ptr_path}.tmp.{os.getpid()}"
-    with open(tmp, "w") as f:
-        json.dump(pointer, f)
-    os.replace(tmp, ptr_path)
+    storage.write_pointer(os.path.join(snap["root"], GEN_POINTER), pointer)
     if snap["overlay_ident"] is not None:
         os.unlink(overlay_path(opts))
     _invalidate_dependent_indexes(opts)
@@ -4885,57 +4747,57 @@ def snapshot_store(options, name: str, spark=None, attempts: int = 3) -> dict:
                     _publish_generation(opts, snap, built, verify=False)
                 gen = _resolve_generation(opts)
                 assert gen is not None  # both paths above materialize one
-                tmp = f"{sdir}.tmp.{os.getpid()}"
-                os.makedirs(tmp)
-                for rg in gen["regions"]:
-                    _link_or_copy(
-                        os.path.join(gen["dir"], rg["file"]),
-                        os.path.join(tmp, rg["file"]),
-                    )
-                if not gen["regions"]:
-                    # fully-emptied store: carry the zero-row
-                    # schema-pinned sentinel so a restore of the empty
-                    # snapshot stays readable
-                    for f in os.listdir(gen["dir"]):
-                        if f.endswith(".parquet"):
-                            _link_or_copy(
-                                os.path.join(gen["dir"], f),
-                                os.path.join(tmp, f),
-                            )
-                manifest = {
-                    "name": name,
-                    "applied_seq": gen["applied_seq"],
-                    "gen": gen["gen"],
-                    "columns": opts["columns"],
-                    "key_cols": opts["keycol"],
-                    # round-12: versioned region files hold N rows per
-                    # key + __ts — a restore/clone target must match
-                    "versions": _versions_of(opts),
-                    "rows": sum(m["rows"] for m in gen["regions"]),
-                }
-                # the region list ships SHARDED beside the manifest,
-                # never inline in the JSON (round-13: the inline form
-                # reintroduced the O(regions) driver-side JSON cost —
-                # ~250 MB at 400k regions — that _shard_region_manifest
-                # removed from the generation pointer; restore/clone
-                # re-read it lazily via _GenManifest). A sharded
-                # generation hardlinks its _regions.parquet (zero-copy,
-                # byte-identical to the list we just linked from); a
-                # legacy inline generation writes one.
-                if dict.__contains__(gen, "regions_file"):
-                    _link_or_copy(
-                        os.path.join(gen["dir"], gen["regions_file"]),
-                        os.path.join(tmp, REGIONS_FILE),
-                    )
-                    manifest["regions_file"] = REGIONS_FILE
-                    manifest["regions_n"] = _gen_regions_n(gen)
-                else:
-                    manifest = _shard_region_manifest(
-                        dict(manifest, regions=gen["regions"]), tmp
-                    )
-                with open(os.path.join(tmp, SNAP_MANIFEST), "w") as f:
-                    json.dump(manifest, f)
-                os.rename(tmp, sdir)  # atomic publish; fails if taken
+                # the atomic publish; fails if the name was taken meanwhile
+                with storage.publish(sdir) as tmp:
+                    os.makedirs(tmp)
+                    for rg in gen["regions"]:
+                        _link_or_copy(
+                            os.path.join(gen["dir"], rg["file"]),
+                            os.path.join(tmp, rg["file"]),
+                        )
+                    if not gen["regions"]:
+                        # fully-emptied store: carry the zero-row
+                        # schema-pinned sentinel so a restore of the empty
+                        # snapshot stays readable
+                        for f in os.listdir(gen["dir"]):
+                            if f.endswith(".parquet"):
+                                _link_or_copy(
+                                    os.path.join(gen["dir"], f),
+                                    os.path.join(tmp, f),
+                                )
+                    manifest = {
+                        "name": name,
+                        "applied_seq": gen["applied_seq"],
+                        "gen": gen["gen"],
+                        "columns": opts["columns"],
+                        "key_cols": opts["keycol"],
+                        # round-12: versioned region files hold N rows per
+                        # key + __ts — a restore/clone target must match
+                        "versions": _versions_of(opts),
+                        "rows": sum(m["rows"] for m in gen["regions"]),
+                    }
+                    # the region list ships SHARDED beside the manifest,
+                    # never inline in the JSON (round-13: the inline form
+                    # reintroduced the O(regions) driver-side JSON cost —
+                    # ~250 MB at 400k regions — that _shard_region_manifest
+                    # removed from the generation pointer; restore/clone
+                    # re-read it lazily via _GenManifest). A sharded
+                    # generation hardlinks its _regions.parquet (zero-copy,
+                    # byte-identical to the list we just linked from); a
+                    # legacy inline generation writes one.
+                    if dict.__contains__(gen, "regions_file"):
+                        _link_or_copy(
+                            os.path.join(gen["dir"], gen["regions_file"]),
+                            os.path.join(tmp, REGIONS_FILE),
+                        )
+                        manifest["regions_file"] = REGIONS_FILE
+                        manifest["regions_n"] = _gen_regions_n(gen)
+                    else:
+                        manifest = _shard_region_manifest(
+                            dict(manifest, regions=gen["regions"]), tmp
+                        )
+                    with open(os.path.join(tmp, SNAP_MANIFEST), "w") as f:
+                        json.dump(manifest, f)
                 return manifest
     raise AssertionError("unreachable: the locked attempt always returns")
 
@@ -4956,10 +4818,10 @@ def list_store_snapshots(options) -> list:
             with open(mp) as f:
                 manifest = json.load(f)
         except (FileNotFoundError, ValueError):
-            continue  # crash-orphaned .tmp dirs are not snapshots
+            continue  # crash-orphaned staging dirs are not snapshots
         if manifest.get("name") != n:
             # a crash between manifest-write and the rename publish
-            # leaves a complete manifest inside `<name>.tmp.<pid>`;
+            # leaves a complete manifest inside `_tmp.<name>.<uuid8>`;
             # the dir-name mismatch is how we tell it from a snapshot
             continue
         out.append(manifest)
@@ -5118,7 +4980,7 @@ class KVChangesBatchReader(DataSourceReader):
     the streaming subscriber: ``spark.read.format("ktsql_kv_changes")``
     returns every retained commit's mutations with their sequence
     numbers, one task per commit file (work parallelizes across
-    commits; each file is immutable once its O_EXCL claim succeeded, so
+    commits; each file is immutable once its exclusive claim succeeded, so
     the scan needs no locking). Retention applies as-is: the batch view
     is the retained suffix of the WAL, floor-truncated like any
     re-baselining consumer's view."""
@@ -5803,14 +5665,9 @@ def _derive_index_df(spark, base_options, index_on: str):
 
 def _write_index_meta(meta_path: str, meta: dict) -> None:
     """Atomic catalog flip: the meta file IS the index's existence, so
-    ``os.replace`` of a fully-written temp file means readers see either
+    a publish (:func:`storage.write_pointer`) means readers see either
     the old attribute row or the new one, never a torn write."""
-    import json
-
-    tmp = f"{meta_path}.tmp.{os.getpid()}"
-    with open(tmp, "w") as f:
-        json.dump(meta, f)
-    os.replace(tmp, meta_path)
+    storage.write_pointer(meta_path, meta)
 
 
 def _build_index_version(spark, root: str, index_name: str, base_options, index_on: str) -> str:
@@ -5885,18 +5742,16 @@ def create_kv_index(spark, index_name: str, base_options, index_on: str) -> dict
         "applied_seq": applied_at,
     }
     meta["snapshot"] = _snapshot_of(meta["base_signature"])
-    tmp = f"{meta_path}.tmp.{os.getpid()}"
-    with open(tmp, "w") as f:
-        json.dump(meta, f)
-    try:
-        os.link(tmp, meta_path)  # atomic claim+publish (fails iff exists)
-    except FileExistsError:
+
+    def write(staging: str) -> None:
+        with open(staging, "w") as f:
+            json.dump(meta, f)
+
+    if not storage.claim(meta_path, write):  # atomic claim+publish
         import shutil
 
         shutil.rmtree(data_dir, ignore_errors=True)
         raise IndexExistsError(f"index {index_name!r} exists when create index")
-    finally:
-        os.unlink(tmp)
     return persisted_index_read_options(base_options, index_name)
 
 
@@ -6229,9 +6084,8 @@ def incremental_refresh_kv_index(
                 }
         rows = sorted(merged.values(), key=lambda x: x[INDEX_KEY])
         if rows:
-            tmp = f"{iov_path}.tmp.{os.getpid()}"
-            pq.write_table(pa.Table.from_pylist(rows), tmp)
-            os.replace(tmp, iov_path)
+            with storage.publish(iov_path) as staging:
+                pq.write_table(pa.Table.from_pylist(rows), staging)
         elif os.path.exists(iov_path):
             os.unlink(iov_path)
 
@@ -6458,9 +6312,8 @@ def feed_refresh_kv_index(
                     cur[rk] = str(r[index_on])
             rows = sorted(iov.values(), key=lambda x: x[INDEX_KEY])
             if rows:
-                tmp = f"{iov_path}.tmp.{os.getpid()}"
-                pq.write_table(pa.Table.from_pylist(rows), tmp)
-                os.replace(tmp, iov_path)
+                with storage.publish(iov_path) as staging:
+                    pq.write_table(pa.Table.from_pylist(rows), staging)
             elif os.path.exists(iov_path):
                 os.unlink(iov_path)
         meta["applied_seq"] = target

@@ -48,6 +48,7 @@ from kt_sql_hbase_ex_spark.functions.money import (
     exact_sum,
     exact_sum_sql,
 )
+from kt_sql_hbase_ex_spark import storage
 from kt_sql_hbase_ex_spark.registry import query
 from kt_sql_hbase_ex_spark.sources.catalog import (
     events_ts_is_nanos,
@@ -673,28 +674,14 @@ def _chunked_events_dir(sf_dir: str, n_chunks: int = 4) -> str:
     never exercise cross-batch state). Content-fingerprinted like the
     KV overlay: a regenerated fixture gets a fresh chunk dir instead of
     serving stale rows. Provisioning only — in production the landing
-    directory arrives pre-chunked (one file per flush/Kafka batch)."""
-    import hashlib
-
+    directory arrives pre-chunked (one file per flush/Kafka batch).
+    Built once (:func:`storage.build_once`): a reader that sees the
+    marker sees fully-written chunks."""
     import pyarrow.parquet as pq
 
-    src = os.path.realpath(table_path(sf_dir, "events"))
-    st = os.stat(src)
-    fp = hashlib.sha256(f"{src}|{st.st_mtime_ns}|{st.st_size}|{n_chunks}|mt1".encode()).hexdigest()[:16]
-    uid = getattr(os, "getuid", lambda: 0)()
-    base = os.path.join(tempfile.gettempdir(), f"kt_sql_stream_chunks_u{uid}", fp)
-    marker = os.path.join(base, "_SUCCESS")
-    if not os.path.exists(marker):
-        # Build in a per-process staging dir, then atomically rename the
-        # whole dir into place: two processes that both miss the marker
-        # never write the same chunk paths, and a reader that sees the
-        # marker sees fully-written chunks. Rename failure = lost the
-        # race to a writer that already published — use theirs.
-        import shutil
+    src = table_path(sf_dir, "events")
 
-        os.makedirs(os.path.dirname(base), exist_ok=True)
-        staging = f"{base}.tmp.{os.getpid()}"
-        shutil.rmtree(staging, ignore_errors=True)
+    def build(staging: str) -> None:
         os.makedirs(staging)
         tbl = pq.read_table(src)
         n = tbl.num_rows
@@ -711,13 +698,11 @@ def _chunked_events_dir(sf_dir: str, n_chunks: int = 4) -> str:
                 # progression and admission semantics depend on) must
                 # not ride on filesystem timestamp granularity
                 os.utime(cpath, (1_600_000_000 + i, 1_600_000_000 + i))
-        with open(os.path.join(staging, "_SUCCESS"), "w"):
-            pass
-        try:
-            os.rename(staging, base)
-        except OSError:
-            shutil.rmtree(staging, ignore_errors=True)
-    return base
+
+    return storage.build_once(
+        storage.fingerprint_root("stream_chunks", src, f"{n_chunks}|mt1"),
+        build,
+    )
 
 
 def st10_serving_dir(spark: SparkSession, sf_dir: str) -> str:
@@ -783,7 +768,7 @@ def st10_stream_to_kv_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     os.makedirs(base_dir, exist_ok=True)
     base_path = os.path.join(base_dir, "user_stats_base.parquet")
     if not os.path.exists(base_path):
-        # tmp + os.replace: a crash mid-write never leaves a corrupt base
+        # staged publish: a crash mid-write never leaves a corrupt base
         # behind the exists() check, and concurrent provisioners each
         # publish a complete file (last replace wins — harmless, content
         # is identical; base_dir is appId-namespaced anyway, so other
@@ -796,9 +781,8 @@ def st10_stream_to_kv_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "total_value": pa.array([], pa.float64()),
             }
         )
-        staging = f"{base_path}.tmp.{os.getpid()}"
-        pq.write_table(empty, staging)
-        os.replace(staging, base_path)
+        with storage.publish(base_path) as staging:
+            pq.write_table(empty, staging)
     opts = {
         "path": base_path,
         "keyCol": "user_id",
@@ -1427,9 +1411,8 @@ def _cdc_provision(spark: SparkSession, sf_dir: str, base_name: str) -> dict:
             "c_acctbal": pa.array([], pa.float64()),
         }
     )
-    staging = f"{base_path}.tmp.{os.getpid()}"
-    pq.write_table(empty, staging)
-    os.replace(staging, base_path)
+    with storage.publish(base_path) as staging:
+        pq.write_table(empty, staging)
     opts = {
         "path": base_path,
         "keyCol": "c_custkey",
@@ -1534,7 +1517,7 @@ def st16_kv_change_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``HBaseModifiableTable``'s Put/Delete, ``hbase/
     HBaseModifiableTable.kt:135-246`` — this is those mutations as a
     subscribable stream): every committed Put/Delete batch lands as one
-    numbered commit-log entry (``sources/kvstore.py`` — O_EXCL-claimed
+    numbered commit-log entry (``sources/kvstore.py`` — exclusively claimed
     sequence, schema pinned from the base), and
     ``readStream.format("ktsql_kv_changes")`` serves them in commit
     order, EXACTLY ONE COMMIT PER MICROBATCH (the self-paced simple
@@ -1653,7 +1636,7 @@ def src10_change_feed_batch_audit(spark: SparkSession, sf_dir: str) -> DataFrame
     ``spark.read.format("ktsql_kv_changes")`` returns every retained
     commit's mutations with sequence numbers, ONE TASK PER COMMIT FILE
     (the scan parallelizes across commits; entries are immutable once
-    their O_EXCL claim landed, so no locking). Here the four
+    their exclusive claim landed, so no locking). Here the four
     deterministic mutation batches commit FIRST (the backfill shape:
     history already on disk), then one batch read aggregates the whole
     feed per commit — the same summary st16 builds incrementally, so
@@ -2115,7 +2098,7 @@ def st18_cdc_replica_rebaseline(spark: SparkSession, sf_dir: str) -> DataFrame:
 # sequence (the st07 log+compaction convention; money deltas are exact
 # micro-unit longs so incremental ± never drifts from a recompute),
 # and the replica advances through the idempotent st17 apply. The
-# seq-named partial is an O_EXCL-style CLAIM: at-least-once redelivery
+# seq-named partial is a CLAIM: at-least-once redelivery
 # (checkpoint-recovery replay) finds the claim and skips re-crediting,
 # making the view exactly-once in effect — the partial writes BEFORE
 # the replica advances, so "claim exists" always means "commit
@@ -2130,21 +2113,11 @@ _MV_FIELDS = [("grp", "string"), ("dn", "int64"), ("dmicros", "int64")]
 
 
 def _mv_read_layout(root: str) -> dict:
-    """The view's layout pointer — sketches.py's publish/read
-    discipline (one implementation repo-wide, round-13 review
-    finding), defaulted for a not-yet-created view."""
-    from kt_sql_hbase_ex_spark.functions.sketches import _read_layout
-
-    try:
-        return _read_layout(root)
-    except FileNotFoundError:
-        return {"gen": 0, "data": "partials", "floor_seq": 0, "prev": []}
-
-
-def _mv_write_layout(root: str, layout: dict) -> None:
-    from kt_sql_hbase_ex_spark.functions.sketches import _write_layout
-
-    _write_layout(root, layout)
+    """The view's layout pointer (:func:`storage.read_layout`),
+    defaulted for a not-yet-created view."""
+    return storage.read_layout(
+        root, {"gen": 0, "data": "partials", "floor_seq": 0, "prev": []}
+    )
 
 
 def _mv_micros(v: float) -> int:
@@ -2179,7 +2152,6 @@ def apply_matview_batch(
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from kt_sql_hbase_ex_spark.functions.text_index import _writer_lock
     from kt_sql_hbase_ex_spark.sources.kvstore import (
         SEQ_COL,
         TOMBSTONE,
@@ -2196,7 +2168,7 @@ def apply_matview_batch(
         return False
     lopts = {k.lower(): v for k, v in replica_opts.items()}
     key_cols = lopts["keycol"].split(",")
-    with _writer_lock(view_root):
+    with storage.writer_lock(view_root):
         _apply_matview_locked(
             rows, batch_df.sparkSession, replica_opts, lopts, key_cols,
             view_root, grp_col, val_col, pa, pq, SEQ_COL, TOMBSTONE,
@@ -2256,9 +2228,8 @@ def _apply_matview_locked(
                     ),
                 }
             )
-            tmp = f"{part}.tmp.{os.getpid()}"
-            pq.write_table(table, tmp)
-            os.replace(tmp, part)  # the claim publishes atomically
+            with storage.publish(part) as tmp:  # the claim, atomically
+                pq.write_table(table, tmp)
         # replica advance is idempotent either way (upsert/tombstone
         # by rowkey) — re-applying an already-applied commit is a no-op
         _apply_cdc_rows(by_seq[seq], spark, replica_opts)
@@ -2289,11 +2260,8 @@ def compact_matview(spark: SparkSession, view_root: str) -> dict:
     an old span skips instead of double-crediting. Deferred GC keeps
     the superseded dir one cycle for in-flight readers."""
     import glob
-    import shutil
 
-    from kt_sql_hbase_ex_spark.functions.text_index import _writer_lock
-
-    with _writer_lock(view_root):
+    with storage.writer_lock(view_root):
         layout = _mv_read_layout(view_root)
         pdir = os.path.join(view_root, layout["data"])
         claims = [
@@ -2311,11 +2279,8 @@ def compact_matview(spark: SparkSession, view_root: str) -> dict:
         )
         data = f"partials.{uuid.uuid4().hex[:12]}"
         merged.coalesce(1).write.parquet(os.path.join(view_root, data))
-        for stale in layout.get("prev", []):
-            shutil.rmtree(
-                os.path.join(view_root, stale), ignore_errors=True
-            )
-        _mv_write_layout(
+        storage.drop_dirs(view_root, layout.get("prev", []))
+        storage.write_layout(
             view_root,
             {
                 "gen": layout["gen"] + 1,
@@ -2350,9 +2315,8 @@ def _mv_provision(spark: SparkSession, sf_dir: str, base_name: str) -> dict:
             "c_acctbal": pa.array([], pa.float64()),
         }
     )
-    staging = f"{base_path}.tmp.{os.getpid()}"
-    pq.write_table(empty, staging)
-    os.replace(staging, base_path)
+    with storage.publish(base_path) as staging:
+        pq.write_table(empty, staging)
     opts = {
         "path": base_path,
         "keyCol": "c_custkey",
@@ -2586,7 +2550,6 @@ def st20_streaming_sketch_maintenance(
 
     from kt_sql_hbase_ex_spark.functions.sketches import (
         _hll_query_relation,
-        _layout_path,
         append_hll_segments,
         maybe_compact_hll_store,
         write_hll_store,
@@ -2623,7 +2586,7 @@ def st20_streaming_sketch_maintenance(
         rows = batch_df.select(
             "l_returnflag", "l_orderkey", F.lit(int(batch_id)).alias("seg")
         )
-        if not os.path.exists(_layout_path(store)):
+        if not os.path.exists(storage.layout_path(store)):
             write_hll_store(
                 spark, store, rows, "l_returnflag", "l_orderkey", "seg"
             )

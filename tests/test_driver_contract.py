@@ -92,12 +92,14 @@ def test_bench_final_line_is_compact():
     assert final["unit"] == "sec" and final["value"] > 0
     assert final["sf"] == 0.001
     assert final["queries_n"] == len(_BENCH_SLICE)
+    assert final["sliced"] is True  # a slice never passes for a headline
     # the per-query map rides the FINAL line under short keys — one
     # entry per timed query, values matching the detail line to the
     # final line's rounding
     assert set(final["queries"]) == {bench.short_key(n) for n in _BENCH_SLICE}
     detail = json.loads(lines[0])
     assert detail["metric"] == "headline_detail"
+    assert detail["sliced"] is True
     assert len(detail["queries"]) == final["queries_n"]
     assert abs(sum(detail["queries"].values()) - final["value"]) < 0.05
     for name, t in detail["queries"].items():
@@ -139,7 +141,7 @@ def test_bench_short_keys_unique_and_final_line_fits():
     assert len(worst.encode()) < 1024, len(worst.encode())
 
 
-def test_bench_only_knob_rejects_unknown_names():
+def test_bench_only_knob_rejects_unknown_names(monkeypatch):
     """The testing knob must fail loudly on a typo'd entry name, never
     silently time a different set than asked."""
     import bench
@@ -160,7 +162,7 @@ def test_bench_only_knob_rejects_unknown_names():
     assert out.returncode != 0
     assert "not_a_real_entry" in (out.stderr + out.stdout)
     # and unset, headline_names() is the full HEADLINE, bit-for-bit
-    os.environ.pop("SPARK_GRAFT_BENCH_ONLY", None)
+    monkeypatch.delenv("SPARK_GRAFT_BENCH_ONLY", raising=False)
     assert bench.headline_names() == bench.HEADLINE
 
 

@@ -1397,7 +1397,7 @@ def test_band_store_compaction_crash_retry(spark):
         os.makedirs(d)
         with open(os.path.join(d, "part-junk.parquet"), "wb") as f:
             f.write(b"torn write")
-    torn_staging = os.path.join(root, "layout.json.tmp.99999")
+    torn_staging = os.path.join(root, "_tmp.layout.json.deadbeef")
     with open(torn_staging, "w") as f:
         f.write("{tor")
     with open(os.path.join(root, "writer.lock"), "w") as f:
@@ -2433,14 +2433,14 @@ def test_pq_store_retrain_crash_sweep(spark):
         os.makedirs(os.path.join(root, orphan))
         with open(os.path.join(root, orphan, "junk.parquet"), "w") as f:
             f.write("torn")
-    with open(os.path.join(root, "layout.json.tmp.999"), "w") as f:
+    with open(os.path.join(root, "_tmp.layout.json.deadbeef"), "w") as f:
         json.dump({"gen": 1}, f)
 
     st = retrain_pq_store(spark, root, corpus)
     assert st["gen"] == 1
     assert not os.path.exists(os.path.join(root, "books_g1.dead"))
     assert not os.path.exists(os.path.join(root, "codes_g1.dead"))
-    assert not glob.glob(os.path.join(root, "layout.json.tmp.*"))
+    assert not glob.glob(os.path.join(root, "_tmp.layout.json.*"))
     layout = _pq_store_layout(root)
     # the published generation is the retrain's own, never the orphan
     assert layout["books"].startswith("books_g1.")

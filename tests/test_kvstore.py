@@ -3746,7 +3746,7 @@ class TestSnapshots:
     def test_crash_orphaned_tmp_dir_is_not_listed(self, tmp_path):
         """Regression (round-11 ADVICE): a crash between writing
         MANIFEST.json and the rename publish leaves a complete
-        manifest inside ``<name>.tmp.<pid>``; listing must not report
+        manifest inside ``_tmp.<name>.<uuid8>``; listing must not report
         it as a snapshot (the manifest name ≠ dir name tells it
         apart), and real snapshots still list."""
         import json
@@ -3764,7 +3764,7 @@ class TestSnapshots:
         root = _snap_root(opts)
         # simulate the crash window: a fully-written but never-renamed
         # tmp dir with a valid manifest inside
-        orphan = os.path.join(root, "ghost.tmp.12345")
+        orphan = os.path.join(root, "_tmp.ghost.deadbeef")
         shutil.copytree(os.path.join(root, "real"), orphan)
         man_path = os.path.join(orphan, "MANIFEST.json")
         with open(man_path) as f:
