@@ -31,6 +31,34 @@ locality — a task never sees the whole table), and the pushed range
 bounds how many regions exist at all. At 100 TB the same shape holds
 with real region metadata: partition count ∝ regions in range, bytes
 moved ∝ qualifiers requested × rows matching the server-side filters.
+
+Read cache. An HBase region server answers a Get from its MemStore and
+BlockCache and opens an HFile only on a miss; ``_READ_CACHE`` (one
+bounded, thread-safe :class:`storage.LRUCache` per process) plays that
+part for point gets and commits:
+
+- the decoded overlay (the MemStore analog), keyed by overlay path and
+  valid while the footer's publish token matches. Every overlay
+  publish stamps a random token next to ``ktsql_applied_seq`` and
+  primes the cache with the table it wrote (write-through). An
+  overlay without a token (written before tokens existed) is read
+  uncached; a folded or truncated overlay drops its entry;
+- per-generation routing data: the manifest's start keys, and the
+  routed manifest rows with their blooms parsed. A ``gen.<uuid12>``
+  dir is immutable once a pointer names it, so the dir is the key;
+  a miss loads manifest rows only for the regions the call routes to;
+- decoded region-file rows (the BlockCache analog), keyed by file path
+  inside that immutable dir.
+
+Identity is never a stat signature: a same-size republish inside one
+mtime tick keeps ``(mtime, size)``, so the token also keys the merged
+store cache of :func:`_open_store` and the fold's overlay check. Still
+read on every call, because they ARE the validation: the generation
+pointer (it names the live dir), the WAL listing (crash recovery
+replays entries past the overlay's watermark) and the overlay footer
+(the token). The budget is one module constant,
+``_READ_CACHE_BYTES``, charged in approximate decoded bytes with LRU
+eviction. Cached rows are shared, so callers only ever get copies.
 """
 
 from __future__ import annotations
@@ -194,27 +222,44 @@ def _bloom_build(keys) -> str:
     return f"2:{m:x}:{bits:x}"
 
 
-def _bloom_has(spec, key) -> bool:
-    """Might the region contain ``key``? A missing/torn spec answers
-    True (pre-bloom generations read as before — never lossy)."""
+def _bloom_parse(spec):
+    """``(m, bits, legacy)`` of a bloom spec, parsed once so cached
+    manifest rows probe without re-decoding the hex; None for a
+    missing or torn spec, which answers "might contain"."""
     try:
         parts = spec.split(":")
         if len(parts) == 3 and parts[0] == "2":
-            m, bits = int(parts[1], 16), int(parts[2], 16)
-        else:
-            # legacy (pre-codec-version) spec: its hashes used repr()
-            # directly, which matches the canonical codec ONLY for
-            # bool/int/str — for key types whose repr changed
-            # (Decimal/float/numpy/temporals) answer "might contain"
-            # rather than risk a stale-hash false negative
-            m, bits = int(parts[0], 16), int(parts[1], 16)
-            if not isinstance(key, (bool, int, str)):
-                return True
-        return all((bits >> idx) & 1 for idx in _bloom_hashes(key, m))
-    except (AttributeError, ValueError, TypeError):
-        # torn spec OR a probe key the codec can't canonicalize:
-        # "might contain" falls back to reading the file — never lossy
+            return int(parts[1], 16), int(parts[2], 16), False
+        return int(parts[0], 16), int(parts[1], 16), True
+    except (AttributeError, ValueError, TypeError, IndexError):
+        return None
+
+
+def _bloom_probe(parsed, key) -> bool:
+    """Might the region whose parsed bloom is ``parsed`` contain
+    ``key``? A missing/torn spec answers True (pre-bloom generations
+    read as before — never lossy)."""
+    if parsed is None:
         return True
+    m, bits, legacy = parsed
+    if legacy and not isinstance(key, (bool, int, str)):
+        # legacy (pre-codec-version) spec: its hashes used repr()
+        # directly, which matches the canonical codec ONLY for
+        # bool/int/str — for key types whose repr changed
+        # (Decimal/float/numpy/temporals) answer "might contain"
+        # rather than risk a stale-hash false negative
+        return True
+    try:
+        return all((bits >> idx) & 1 for idx in _bloom_hashes(key, m))
+    except TypeError:
+        # a probe key the codec can't canonicalize: "might contain"
+        # falls back to reading the file — never lossy
+        return True
+
+
+def _bloom_has(spec, key) -> bool:
+    """Might the region with bloom ``spec`` contain ``key``?"""
+    return _bloom_probe(_bloom_parse(spec), key)
 
 
 #: diagnostics of the calling THREAD's last _multi_get_base call —
@@ -247,75 +292,84 @@ def _multi_get_base(
     start keys (regions outside every key's range are never touched),
     surviving regions consult their per-region key BLOOM and are
     skipped unless some key might be present, and only then is the
-    region file read — a column-pruned ``isin`` scan. A store with few
-    wide regions thus reads ~0 files for absent keys instead of one
-    file per get. Pre-bloom generations (no ``bloom`` in the manifest)
+    region file consulted. A store with few wide regions thus reads ~0
+    files for absent keys instead of one file per get. Routing data
+    and region rows come from the read cache (:data:`_READ_CACHE`)
+    when warm. Pre-bloom generations (no ``bloom`` in the manifest)
     and never-folded fixtures read exactly as before. ``need`` maps
-    rowkey -> key dict; returns rowkey -> row."""
+    rowkey -> key dict; returns rowkey -> a fresh row (a fresh list of
+    rows with ``collect_all``)."""
     import pyarrow.compute as pc
     import pyarrow.dataset as pads
 
     base_rows: dict = {}
+    stats = {"files_read": 0, "files_cached": 0, "regions_total": 0}
+    _MULTIGET_STATS.value = stats
     if not need:
-        _MULTIGET_STATS.value = {"files_read": 0, "regions_total": 0}
         return base_rows
-
-    def read_paths(paths):
-        if not paths:
-            return
-        ds = pads.dataset(paths, format="parquet")
-        flt = None
-        for c in key_cols:
-            vals = sorted({k[c] for k in need.values()})
-            f = pc.field(c).isin(vals)
-            flt = f if flt is None else (flt & f)
-        for r in ds.to_table(filter=flt, columns=list(columns)).to_pylist():
-            rk = _rowkey_of(r, key_cols)
-            if rk in need:  # composite isin is a superset: exact-match
-                if collect_all:  # versioned keys: several rows per key
-                    base_rows.setdefault(rk, []).append(r)
-                else:
-                    base_rows[rk] = r
 
     if gen is _GEN_UNRESOLVED:
         gen = _resolve_generation(opts)
     if gen is None or not _gen_regions_n(gen):
         # never-folded fixture (or fully-emptied generation): one base
         # relation, pruned by parquet row-group stats as before
-        stats = {"files_read": 1, "regions_total": 1}
+        stats["regions_total"] = 1
         if gen is None:
-            read_paths([_resolve_base_path(opts)])
-        else:
-            stats["files_read"] = 0
-        _MULTIGET_STATS.value = stats
+            stats["files_read"] = 1
+            ds = pads.dataset(_resolve_base_path(opts), format="parquet")
+            flt = None
+            for c in key_cols:
+                vals = sorted({k[c] for k in need.values()})
+                f = pc.field(c).isin(vals)
+                flt = f if flt is None else (flt & f)
+            for r in ds.to_table(filter=flt, columns=list(columns)).to_pylist():
+                rk = _rowkey_of(r, key_cols)
+                if rk in need:  # composite isin is a superset: exact-match
+                    if collect_all:  # versioned keys: several rows per key
+                        base_rows.setdefault(rk, []).append(r)
+                    else:
+                        base_rows[rk] = r
         return base_rows
 
-    # route by start key (one manifest COLUMN), then materialize full
-    # manifest rows — file name + bloom — for ONLY the routed regions
-    # (row-group-pruned isin on a sharded manifest; at 400k regions a
-    # point get reads a handful of manifest row groups, never the list)
-    starts = _gen_region_starts(gen)
+    # route by start key (one manifest COLUMN), then the routed
+    # regions' manifest rows — file name + parsed bloom — loading from
+    # disk ONLY the routed regions the cache lacks (row-group-pruned
+    # isin on a sharded manifest; at 400k regions a point get reads a
+    # handful of manifest row groups, never the list)
+    starts = _gen_route_starts(gen)
     per_region: dict[int, list] = {}
     for rk in need:
         i = max(0, bisect.bisect_right(starts, rk) - 1)
         per_region.setdefault(i, []).append(rk)
-    routed = _gen_region_meta(gen, sorted(per_region))
-    paths = []
+    routed, loaded = _gen_routed_regions(gen, sorted(per_region))
     skipped_bloom = 0
+    files_cached = 0
     for i, rks in sorted(per_region.items()):
-        bloom = routed[i].get("bloom")
-        if bloom is not None and not any(_bloom_has(bloom, rk) for rk in rks):
+        name, bloom = routed[i]
+        if not any(_bloom_probe(bloom, rk) for rk in rks):
             skipped_bloom += 1
             continue
-        paths.append(os.path.join(gen["dir"], routed[i]["file"]))
-    _MULTIGET_STATS.value = {
-        "files_read": len(paths),
-        "regions_total": len(starts),
-        "regions_routed": len(per_region),
-        "regions_skipped_bloom": skipped_bloom,
-        "manifest_rows_loaded": len(routed),
-    }
-    read_paths(paths)
+        entry, cached = _region_entry(os.path.join(gen["dir"], name))
+        files_cached += cached
+        index = entry.index(key_cols, collect_all)
+        hits = {
+            rk: index[rk] if collect_all else [index[rk]]
+            for rk in rks if rk in index
+        }
+        pos = [i for ps in hits.values() for i in ps]
+        decoded = dict(zip(pos, entry.rows_at(pos)))
+        for rk, ps in hits.items():  # fresh rows of the requested columns
+            rows = [{c: decoded[i][c] for c in columns} for i in ps]
+            base_rows[rk] = rows if collect_all else rows[0]
+    stats.update(
+        files_read=len(per_region) - skipped_bloom,
+        files_cached=files_cached,
+        regions_total=len(starts),
+        regions_routed=len(per_region),
+        regions_skipped_bloom=skipped_bloom,
+        manifest_rows_loaded=loaded,
+        manifest_rows_cached=len(per_region) - loaded,
+    )
     return base_rows
 
 
@@ -737,7 +791,7 @@ def truncate_overlay(options) -> None:
         p = overlay_path(opts)
         changed = False
         if os.path.exists(p):
-            os.unlink(p)
+            _retire_overlay(p)
             changed = True
         # compacted generations hold committed writes too: TRUNCATE
         # restores the PRISTINE base, so the pointer goes with the
@@ -859,9 +913,6 @@ def delete_from_store(options, keys) -> None:
     Deletes are writes in an LSM/HBase store — the base file is never
     rewritten; the reader drops tombstoned keys at merge time and a
     (real) compaction would reclaim them later."""
-    import os
-    import pyarrow.parquet as pq
-
     opts = {k.lower(): v for k, v in dict(options).items()}
     _reject_versioned(opts, "delete_from_store")
     # the whole read-merge-publish cycle runs under the overlay lock:
@@ -872,10 +923,7 @@ def delete_from_store(options, keys) -> None:
         key_cols = tuple(opts["keycol"].split(","))
         columns = list(opts["columns"].split(","))
         opath = overlay_path(opts)
-        merged: dict = {}
-        if os.path.exists(opath):
-            for r in pq.read_table(opath).to_pylist():
-                merged[_rowkey_of(r, key_cols)] = r
+        merged = {_rowkey_of(r, key_cols): r for r in _read_overlay(opts)}
         batch: dict = {}  # this statement's own tombstones, for the feed
         for k in keys:  # composite stores take key TUPLES, single stores scalars
             row = {c: None for c in columns}
@@ -922,8 +970,6 @@ def get_store_rows(options, keys: list) -> list:
     folded multi-region store reads ZERO files). WAL-recovered state
     is served, never torn (``recover_overlay`` first, like every
     reader)."""
-    import pyarrow.parquet as pq
-
     opts = {k.lower(): v for k, v in dict(options).items()}
     key_cols = tuple(opts["keycol"].split(","))
     columns = list(opts["columns"].split(","))
@@ -945,22 +991,25 @@ def get_store_rows(options, keys: list) -> list:
     cutoff = _ttl_cutoff(opts)
     ttl_col = opts.get("ttlcolumn")
 
-    recover_overlay(opts)
-    overlay: dict = {}
+    # one footer read serves the recovery probe and the cache lookup;
+    # overlay rows are shared (read-only here: copied out below)
     opath = overlay_path(opts)
-    if os.path.exists(opath):
-        for r in pq.read_table(opath).to_pylist():
-            overlay[_rowkey_of(r, key_cols)] = r
-    need = {
-        _rowkey_of(k, key_cols): k
-        for k in keys
-        if _rowkey_of(k, key_cols) not in overlay
-    }
+    footer = _overlay_footer(opath)
+    if recover_overlay(opts, footer):
+        footer = _FOOTER_UNREAD
+    entry, overlay_cached = _overlay_entry(opath, footer)
+    rks = [_rowkey_of(k, key_cols) for k in keys]
+    overlay: dict = {}
+    if entry is not None:
+        index = entry.index(key_cols)
+        hits = [rk for rk in dict.fromkeys(rks) if rk in index]
+        overlay = dict(zip(hits, entry.rows_at([index[rk] for rk in hits])))
+    need = {rk: k for rk, k in zip(rks, keys) if rk not in overlay}
     base_rows = _multi_get_base(opts, need, key_cols, columns)
+    _MULTIGET_STATS.value["overlay_cached"] = overlay_cached
 
     out: list = []
-    for k in keys:
-        rk = _rowkey_of(k, key_cols)
+    for rk in rks:
         r = overlay.get(rk)
         if r is not None:
             r = None if r.get(TOMBSTONE) else {c: r.get(c) for c in columns}
@@ -1040,10 +1089,7 @@ def increment_store(options, increments: list) -> list:
         import pyarrow.parquet as pq
 
         opath = overlay_path(opts)
-        overlay: dict = {}
-        if os.path.exists(opath):
-            for r in pq.read_table(opath).to_pylist():
-                overlay[_rowkey_of(r, key_cols)] = r
+        overlay = {_rowkey_of(r, key_cols): r for r in _read_overlay(opts)}
 
         # multi-get of touched keys NOT already answered by the overlay:
         # a column-pruned predicate scan of the base/generation files
@@ -1192,13 +1238,9 @@ def check_and_mutate_store(options, mutations: list) -> list:
     with _overlay_lock(opts):
         _recover_overlay_locked(opts)
         import pyarrow as pa
-        import pyarrow.parquet as pq
 
         opath = overlay_path(opts)
-        overlay: dict = {}
-        if os.path.exists(opath):
-            for r in pq.read_table(opath).to_pylist():
-                overlay[_rowkey_of(r, key_cols)] = r
+        overlay = {_rowkey_of(r, key_cols): r for r in _read_overlay(opts)}
 
         need = {
             _rowkey_of(k, key_cols): k
@@ -1335,10 +1377,7 @@ def append_store(options, appends: list) -> list:
     with _overlay_lock(opts):
         _recover_overlay_locked(opts)
         opath = overlay_path(opts)
-        overlay: dict = {}
-        if os.path.exists(opath):
-            for r in pq.read_table(opath).to_pylist():
-                overlay[_rowkey_of(r, key_cols)] = r
+        overlay = {_rowkey_of(r, key_cols): r for r in _read_overlay(opts)}
 
         need = {
             _rowkey_of(k, key_cols): k
@@ -1482,12 +1521,7 @@ def _mask_and_cap(versions: list, n: int, min_ts=None, max_ts=None) -> list:
 def _versioned_overlay_rows(opts) -> list:
     """The committed overlay's raw version rows (puts + tombstones,
     each with __ts); [] when no overlay exists."""
-    import pyarrow.parquet as pq
-
-    opath = overlay_path(opts)
-    if not os.path.exists(opath):
-        return []
-    return pq.read_table(opath).to_pylist()
+    return _read_overlay(opts)
 
 
 def _commit_versioned(opts, batch: list) -> None:
@@ -1816,9 +1850,9 @@ def _ttl_live(rows, ttl_col, cutoff):
 def _open_store(options) -> KVStore:
     """Open (or reuse) the store an options bundle names, merging any
     committed write overlay over the base (tombstones drop keys). Cache
-    key = resolved path + mtime + size + overlay mtime + column/key
-    config, so neither a regenerated source file nor a fresh write is
-    ever served stale.
+    key = resolved path + mtime + size + overlay publish token +
+    column/key config, so neither a regenerated source file nor a
+    fresh write is ever served stale.
 
     With ``indexOn=<col>`` the bundle names the base table's SECONDARY
     INDEX instead: a derived store keyed by the composite
@@ -1836,13 +1870,13 @@ def _open_store(options) -> KVStore:
     index_on = options.get("indexon")
     region_size = int(options.get("regionsize", "512"))
     st = os.stat(path)
-    recover_overlay(options)  # serve WAL-recovered state, never torn
     opath = overlay_path(options)
-    try:
-        ost = os.stat(opath)
-        overlay_sig = (ost.st_mtime_ns, ost.st_size)
-    except FileNotFoundError:
-        overlay_sig = None
+    footer = _overlay_footer(opath)
+    if recover_overlay(options, footer):  # serve WAL-recovered state
+        footer = _overlay_footer(opath)
+    # the publish token, not a stat: a same-size republish inside one
+    # mtime tick must not serve the previous state
+    overlay_sig = _overlay_ident(opath, footer)
     versioned = _versions_of(options) > 1
     config_key = (
         path, opath, key_col, columns, region_size, index_on, versioned
@@ -1899,12 +1933,11 @@ def _open_store(options) -> KVStore:
             region_size=region_size,
         )
         _BASE_CACHE[base_key] = (base_sig, store)
-    if overlay_sig is not None:
-        import pyarrow.parquet as pq
-
+    entry, _ = _overlay_entry(opath, footer)
+    if entry is not None:
         key_cols = store.key_cols
         merged = {_rowkey_of(r, key_cols): r for r in store.rows}
-        for r in pq.read_table(opath).to_pylist():
+        for r in entry.rows():
             if r.get(TOMBSTONE):
                 merged.pop(_rowkey_of(r, key_cols), None)
             else:
@@ -2008,21 +2041,16 @@ def _commit_put_rows(opts, key_cols, put_rows) -> None:
     entry — the connector write's commit phase, shared with the
     driver-side :func:`put_rows_to_store` so the two Put paths can
     never drift on overlay/WAL semantics."""
-    import os
-    import pyarrow.parquet as pq
-
     _reject_versioned(opts, "connector Put (use put_kv_versions)")
     # read-merge-publish under the overlay lock — see
     # delete_from_store: serialized writers keep the applied-seq
     # watermark exact under concurrency (round-7 review finding)
     with _overlay_lock(opts):
         _recover_overlay_locked(opts)  # WAL recovery before the read
-        merged: dict = {}
         batch: dict = {}  # this commit's per-key FINAL puts, for the feed
         opath = overlay_path(opts)
-        if os.path.exists(opath):  # upserts accumulate across statements
-            for r in pq.read_table(opath).to_pylist():
-                merged[_rowkey_of(r, key_cols)] = r
+        # upserts accumulate across statements
+        merged = {_rowkey_of(r, key_cols): r for r in _read_overlay(opts)}
         for r in put_rows:
             # a Put over a tombstone revives
             merged[_rowkey_of(r, key_cols)] = r
@@ -2048,12 +2076,22 @@ def put_rows_to_store(options, rows) -> None:
     region-server Puts, not a distributed job): the exact commit the
     connector write runs, minus the Spark job that only existed to
     carry already-collected rows back through an executor stage.
-    Statement-sized batches only, like every overlay commit. ``rows``
-    are dicts carrying the store's columns; missing columns and null
-    rowkeys fail loudly (the connector write's task-side checks)."""
+    Statement-sized batches only, like every overlay commit: a batch
+    above :data:`INCREMENTAL_MAX_OVERLAY_ROWS` rows — the driver-side
+    delta budget — is refused with a pointer to :func:`bulk_load_store`.
+    ``rows`` are dicts carrying the store's columns; missing columns
+    and null rowkeys fail loudly (the connector write's task-side
+    checks)."""
     opts = {k.lower(): v for k, v in dict(options).items()}
     key_cols = tuple(opts["keycol"].split(","))
     columns = list(opts["columns"].split(","))
+    rows = list(rows)
+    if len(rows) > INCREMENTAL_MAX_OVERLAY_ROWS:
+        raise ValueError(
+            f"put batch of {len(rows)} rows exceeds the statement-sized "
+            f"overlay commit ceiling ({INCREMENTAL_MAX_OVERLAY_ROWS} rows) "
+            "— load batches this size with bulk_load_store"
+        )
     staged = []
     for d in rows:
         missing = [c for c in columns if c not in d]
@@ -2382,40 +2420,225 @@ def _check_no_bulk_markers(log_dir: str, seqs) -> None:
 #: mutations the overlay contains — the WAL recovery watermark
 _APPLIED_KEY = b"ktsql_applied_seq"
 
+#: overlay footer key holding a random token drawn at every publish:
+#: the overlay's identity for every cache and staleness check (a stat
+#: signature is not one — a same-size republish inside one mtime tick
+#: keeps it)
+_TOKEN_KEY = b"ktsql_publish_token"
+
+#: byte budget of :data:`_READ_CACHE` (approximate decoded size)
+_READ_CACHE_BYTES = 256 << 20
+
+#: the process's read cache — see the module docstring's "Read cache"
+_READ_CACHE = storage.LRUCache(_READ_CACHE_BYTES)
+
+#: "footer not read yet" — distinct from None, the absent overlay
+_FOOTER_UNREAD = object()
+
+
+def _rows_bytes(tbl) -> int:
+    """Approximate memory of ``tbl`` decoded into Python row dicts."""
+    return tbl.nbytes + tbl.num_rows * (200 + 60 * tbl.num_columns)
+
+
+def _footer_fields(meta) -> tuple:
+    """``(applied_seq, token)`` of overlay schema metadata; either is
+    None on overlays that predate it."""
+    meta = meta or {}
+    applied, token = meta.get(_APPLIED_KEY), meta.get(_TOKEN_KEY)
+    return (
+        int(applied) if applied is not None else None,
+        token.decode() if token is not None else None,
+    )
+
+
+def _overlay_footer(opath: str):
+    """One read of the overlay's parquet footer: ``(applied_seq,
+    token)``, or None when no overlay exists. Readers read it once per
+    call and thread it through recovery and the cache lookup."""
+    import pyarrow.parquet as pq
+
+    try:
+        return _footer_fields(pq.read_schema(opath).metadata)
+    except FileNotFoundError:
+        return None
+
 
 def _overlay_applied_seq(opath: str):
     """applied_seq from an overlay's parquet footer; None when the
     overlay is absent or predates the watermark (legacy)."""
-    import pyarrow.parquet as pq
+    footer = _overlay_footer(opath)
+    return footer[0] if footer else None
 
+
+def _overlay_ident(opath: str, footer=_FOOTER_UNREAD):
+    """The committed overlay's identity: its publish token, or
+    inode + mtime + size for a legacy overlay without one; None when
+    absent."""
+    if footer is _FOOTER_UNREAD:
+        footer = _overlay_footer(opath)
+    if footer is None:
+        return None
+    if footer[1] is not None:
+        return footer[1]
     try:
-        meta = pq.read_schema(opath).metadata or {}
+        st = os.stat(opath)
     except FileNotFoundError:
         return None
-    v = meta.get(_APPLIED_KEY)
-    return int(v) if v is not None else None
+    return [st.st_ino, st.st_mtime_ns, st.st_size]
+
+
+def _column_pylist(col) -> list:
+    """``col.to_pylist()``; null-free integer columns take the much
+    faster numpy route, which yields the same Python ints."""
+    import pyarrow as pa
+
+    if col.null_count == 0 and pa.types.is_integer(col.type):
+        return col.to_numpy().tolist()
+    return col.to_pylist()
+
+
+class _TableEntry:
+    """One immutable parquet object in the read cache: an overlay
+    version (the MemStore analog) or a region file (the BlockCache
+    analog). It keeps the Arrow table and decodes on demand — a
+    rowkey -> position index per key layout, single rows on first
+    request, every row only when a writer asks — because decoding a
+    whole table into dicts costs more than reading it. Decoded rows
+    are exactly what ``to_pylist()`` of a re-read returns, and they
+    are SHARED: nothing leaves this module without a copy."""
+
+    __slots__ = ("table", "token", "_rows", "_decoded", "_index")
+
+    def __init__(self, table) -> None:
+        self.table = table
+        self.token = _footer_fields(table.schema.metadata)[1]
+        self._rows = None
+        self._decoded: dict = {}  # position -> row
+        self._index: dict = {}  # (key_cols, collect_all) -> rowkey index
+
+    @property
+    def nbytes(self) -> int:
+        return 2 * _rows_bytes(self.table)  # table + decoded rows/index
+
+    def rows(self) -> list:
+        """Every row, in file order."""
+        rows = self._rows
+        if rows is None:
+            rows = self._rows = self.table.to_pylist()
+        return rows
+
+    def index(self, key_cols, collect_all: bool = False) -> dict:
+        """rowkey -> position (last one wins, as a file-order scan
+        would) or, with ``collect_all``, -> every position."""
+        key = (key_cols, collect_all)
+        index = self._index.get(key)
+        if index is None:
+            cols = [_column_pylist(self.table.column(c)) for c in key_cols]
+            if len(key_cols) == 1:
+                rks = cols[0]
+            else:
+                rks = [
+                    _rowkey_of(dict(zip(key_cols, vals)), key_cols)
+                    for vals in zip(*cols)
+                ]
+            if collect_all:
+                index = {}
+                for i, rk in enumerate(rks):
+                    index.setdefault(rk, []).append(i)
+            else:
+                index = dict(zip(rks, range(len(rks))))
+            self._index[key] = index
+        return index
+
+    def rows_at(self, positions) -> list:
+        """The rows at ``positions``, decoding only those not decoded
+        yet (scalar by scalar, as ``to_pylist`` does)."""
+        if self._rows is not None:
+            return [self._rows[i] for i in positions]
+        decoded = self._decoded
+        names, cols = self.table.column_names, self.table.columns
+        for i in positions:
+            if i not in decoded:
+                decoded[i] = dict(zip(names, [c[i].as_py() for c in cols]))
+        return [decoded[i] for i in positions]
+
+
+def _overlay_entry(opath: str, footer=_FOOTER_UNREAD) -> tuple:
+    """``(entry, cached)``: the committed overlay as a shared
+    :class:`_TableEntry` (None when absent) and whether the cache
+    served it. A hit needs the footer's token to match the cached
+    entry's; a miss reads the file and caches it under the token the
+    READ file carries (a publish racing the footer read cannot mix
+    states). Overlays without a token are read uncached."""
+    import pyarrow.parquet as pq
+
+    key = ("overlay", opath)
+    if footer is _FOOTER_UNREAD:
+        footer = _overlay_footer(opath)
+    if footer is None:
+        _READ_CACHE.pop(key)
+        return None, False
+    if footer[1] is not None:
+        hit = _READ_CACHE.get(key)
+        if hit is not None and hit.token == footer[1]:
+            return hit, True
+    try:
+        entry = _TableEntry(pq.read_table(opath))
+    except FileNotFoundError:
+        _READ_CACHE.pop(key)
+        return None, False
+    if entry.token is not None:
+        _READ_CACHE.put(key, entry, entry.nbytes)
+    return entry, False
+
+
+def _read_overlay(opts, footer=_FOOTER_UNREAD) -> list:
+    """Fresh copies of the committed overlay's rows ([] when absent) —
+    the one overlay reader every commit, fold and open path uses."""
+    entry, _ = _overlay_entry(overlay_path(opts), footer)
+    return [dict(r) for r in entry.rows()] if entry is not None else []
+
+
+def _retire_overlay(opath: str) -> None:
+    """Unlink a folded or truncated overlay and drop its cache entry."""
+    os.unlink(opath)
+    _READ_CACHE.pop(("overlay", opath))
+
+
+def _stamp_token(tbl):
+    """Attach a fresh publish token to an overlay table."""
+    meta = dict(tbl.schema.metadata or {})
+    meta[_TOKEN_KEY] = uuid.uuid4().hex.encode()
+    return tbl.replace_schema_metadata(meta)
 
 
 def _stamp_applied(tbl, seq: int):
-    """Attach the applied-seq watermark to an overlay table."""
+    """Attach the applied-seq watermark and a fresh publish token to
+    an overlay table."""
     meta = dict(tbl.schema.metadata or {})
     meta[_APPLIED_KEY] = str(seq).encode()
-    return tbl.replace_schema_metadata(meta)
+    return _stamp_token(tbl.replace_schema_metadata(meta))
 
 
 def _publish_overlay(opts, opath: str, rows: list, applied: int) -> None:
     """A commit's visibility point, after its WAL entry: publish the
-    merged overlay ``rows`` stamped with the applied-seq watermark,
-    then stale-flip the store's dependent persisted indexes."""
+    merged overlay ``rows`` stamped with the applied-seq watermark and
+    a publish token, prime the read cache with the table just written
+    (write-through: what a re-read would decode), then stale-flip the
+    store's dependent persisted indexes."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
+    tbl = _stamp_applied(pa.Table.from_pylist(rows), applied)
     with storage.publish(opath) as staging:
-        pq.write_table(_stamp_applied(pa.Table.from_pylist(rows), applied), staging)
+        pq.write_table(tbl, staging)
+    entry = _TableEntry(tbl)
+    _READ_CACHE.put(("overlay", opath), entry, entry.nbytes)
     _invalidate_dependent_indexes(opts)
 
 
-def recover_overlay(options) -> int:
+def recover_overlay(options, footer=_FOOTER_UNREAD) -> int:
     """WAL recovery: replay any logged-but-unapplied commits into the
     overlay. The write path appends the commit-log entry BEFORE
     publishing the overlay (write-ahead), so a crash in between leaves
@@ -2424,7 +2647,8 @@ def recover_overlay(options) -> int:
     watermark in sequence order (puts upsert, tombstones delete —
     exactly the overlay merge semantics) and republishing the overlay
     at the log head. Returns the number of commits replayed (0 on the
-    crash-free path: one listdir + at most one footer read). Overlays
+    crash-free path: one listdir + at most one footer read; a reader
+    that already read the footer passes it as ``footer``). Overlays
     predating the watermark are taken as consistent at the current
     head (no spurious replay; the watermark ships with every write
     from now on)."""
@@ -2432,33 +2656,31 @@ def recover_overlay(options) -> int:
     # lock-free fast path: the crash-free open (every read) costs one
     # listdir + footer probe, no lock traffic. The race is benign: a
     # concurrent writer holding the lock replays/publishes itself.
-    if not _unapplied_seqs(opts):
+    if not _unapplied_seqs(opts, footer):
         return 0
     with _overlay_lock(opts):
         return _recover_overlay_locked(opts)
 
 
-def _unapplied_seqs(opts) -> List[int]:
+def _unapplied_seqs(opts, footer=_FOOTER_UNREAD) -> List[int]:
     """Commit-log entries past the overlay's applied watermark."""
     seqs = _log_seqs(changelog_dir(opts))
     if not seqs:
         return []
-    opath = overlay_path(opts)
-    applied = _overlay_applied_seq(opath)
-    if applied is None:
-        if not os.path.exists(opath):
-            # absent overlay: nothing applied since the floor — or,
-            # after a compaction folded the overlay away, since the
-            # generation's carried watermark (replaying the folded span
-            # would be harmless but would regrow the overlay the fold
-            # just retired)
-            gen = _resolve_generation(opts)
-            applied = max(
-                changelog_floor(opts), gen["applied_seq"] if gen else 0
-            )
-        else:
-            # legacy overlay (pre-watermark): assume consistent at head
-            applied = seqs[-1]
+    if footer is _FOOTER_UNREAD:
+        footer = _overlay_footer(overlay_path(opts))
+    if footer is None:
+        # absent overlay: nothing applied since the floor — or, after
+        # a compaction folded the overlay away, since the generation's
+        # carried watermark (replaying the folded span would be
+        # harmless but would regrow the overlay the fold just retired)
+        gen = _resolve_generation(opts)
+        applied = max(changelog_floor(opts), gen["applied_seq"] if gen else 0)
+    elif footer[0] is None:
+        # legacy overlay (pre-watermark): assume consistent at head
+        applied = seqs[-1]
+    else:
+        applied = footer[0]
     return [q for q in seqs if q > applied]
 
 
@@ -2486,10 +2708,7 @@ def _recover_overlay_locked(opts) -> int:
         if versioned
         else (lambda r: _rowkey_of(r, key_cols))
     )
-    merged: dict = {}
-    if os.path.exists(opath):
-        for r in pq.read_table(opath).to_pylist():
-            merged[mkey(r)] = r
+    merged = {mkey(r): r for r in _read_overlay(opts)}
     log_dir = changelog_dir(opts)
     for q in todo:
         for r in pq.read_table(os.path.join(log_dir, f"{q:08d}.parquet")).to_pylist():
@@ -2656,6 +2875,55 @@ def _gen_region_meta(gen: dict, idxs: list) -> dict:
     return out
 
 
+def _gen_route_starts(gen: dict) -> list:
+    """:func:`_gen_region_starts` through the read cache. A generation
+    dir is immutable once a pointer names it, so the dir is the key."""
+    key = ("starts", gen["dir"])
+    starts = _READ_CACHE.get(key)
+    if starts is None:
+        starts = _gen_region_starts(gen)
+        _READ_CACHE.put(key, starts, 100 + 80 * len(starts))
+    return starts
+
+
+def _gen_routed_regions(gen: dict, idxs: list) -> tuple:
+    """``({idx: (file, parsed bloom)}, loaded)`` for the routed region
+    indices: cached manifest rows where present, the rest through ONE
+    :func:`_gen_region_meta` read of only the missing indices
+    (``loaded`` of them)."""
+    out: dict = {}
+    missing = []
+    for i in idxs:
+        hit = _READ_CACHE.get(("route", gen["dir"], i))
+        if hit is None:
+            missing.append(i)
+        else:
+            out[i] = hit
+    if missing:
+        for i, m in _gen_region_meta(gen, missing).items():
+            bloom = m.get("bloom")
+            out[i] = (m["file"], _bloom_parse(bloom))
+            _READ_CACHE.put(
+                ("route", gen["dir"], i), out[i], 200 + len(bloom or "") // 2
+            )
+    return out, len(missing)
+
+
+def _region_entry(path: str) -> tuple:
+    """``(entry, cached)``: the region file at ``path`` as a shared
+    :class:`_TableEntry` — the BlockCache analog. A region file never
+    changes once its generation is published, so the path is the
+    key."""
+    import pyarrow.parquet as pq
+
+    entry = _READ_CACHE.get(("region", path))
+    if entry is not None:
+        return entry, True
+    entry = _TableEntry(pq.read_table(path))
+    _READ_CACHE.put(("region", path), entry, entry.nbytes)
+    return entry, False
+
+
 def _shard_region_manifest(pointer: dict, gen_dir: str) -> dict:
     """Writer half: move ``pointer["regions"]`` into
     ``<gen_dir>/_regions.parquet`` (idx-keyed, row-grouped so routed
@@ -2731,6 +2999,10 @@ def _gc_generations(root: str, keep) -> None:
     for d in glob.glob(os.path.join(root, "gen.*")):
         if d != keep and os.path.isdir(d):
             shutil.rmtree(d, ignore_errors=True)
+            # its routing and region entries can never hit again
+            _READ_CACHE.discard(
+                lambda k, d=d: k[1] == d or k[1].startswith(d + os.sep)
+            )
 
 
 def _region_chunks(rows: list, region_size: int) -> list:
@@ -2920,16 +3192,15 @@ def _compact_once(
 def _fold_snapshot(opts, major: bool = False) -> dict | None:
     """Snapshot phase (under the overlay lock): WAL-recover so the
     overlay reflects every committed mutation, read the fold inputs,
-    and record the identity (overlay inode/stat + pointer) the publish
-    phase must re-verify. Returns None when there is nothing to fold.
-    Also runs the deferred generation GC — superseded and
+    and record the identity (overlay publish token + pointer) the
+    publish phase must re-verify. Returns None when there is nothing
+    to fold. Also runs the deferred generation GC — superseded and
     crash-orphaned dirs from previous cycles get swept exactly one
     fold later, giving in-flight readers a full cycle to drain."""
-    import pyarrow.parquet as pq
-
     _recover_overlay_locked(opts)
     opath = overlay_path(opts)
-    if not os.path.exists(opath) and not major:
+    footer = _overlay_footer(opath)
+    if footer is None and not major:
         return None
     root = _gen_root(opts)
     os.makedirs(root, exist_ok=True)
@@ -2937,14 +3208,13 @@ def _fold_snapshot(opts, major: bool = False) -> dict | None:
     # deferred GC: sweep superseded + crash-orphaned generations now
     _gc_generations(root, keep=cur["dir"] if cur else None)
 
-    if os.path.exists(opath):
-        overlay_rows = pq.read_table(opath).to_pylist()
-        applied = _overlay_applied_seq(opath)
+    if footer is not None:
+        overlay_rows = _read_overlay(opts, footer)
+        applied = footer[0]
         if applied is None:  # legacy overlay: consistent at the log head
             seqs = _log_seqs(changelog_dir(opts))
             applied = seqs[-1] if seqs else changelog_floor(opts)
-        ost = os.stat(opath)
-        ident = [ost.st_ino, ost.st_mtime_ns, ost.st_size]
+        ident = _overlay_ident(opath, footer)
     else:
         # major pass with nothing pending: recovery just ran, so an
         # absent overlay means every WAL entry is folded — the
@@ -3249,7 +3519,7 @@ def _build_generation(
                     regions_meta.extend(m)
             else:
                 for p in payloads:
-                    regions_meta.extend(_fold_region_task(p))
+                    regions_meta.extend(_fold_region_task(p, prime=True))
     else:
         # first fold (or a fully-emptied predecessor): base ∖
         # overlay-keys ∪ puts, globally sorted, split into fresh regions
@@ -3444,11 +3714,14 @@ def _build_versioned_generation(opts, snap, new_dir: str) -> dict:
     }
 
 
-def _fold_region_task(payload: dict) -> list:
+def _fold_region_task(payload: dict, prime: bool = False) -> list:
     """One fold task — driver-side loop body AND executor map function
     (the identical fold shape, proven distributable): last-wins-merge
     ONE region file with its overlay slice, write the replacement
-    chunk(s) into the build dir, return their metadata. Task-retry
+    chunk(s) into the build dir, return their metadata. With ``prime``
+    (the driver-side loop) region files are read through the read
+    cache and the written tables prime it, so the first gets after a
+    fold find the new generation's regions in memory. Task-retry
     safe: each ATTEMPT writes to its own uuid-tagged staging name and
     publishes (:func:`storage.publish`) into the final
     region-index-derived name — a zombie or speculative attempt still
@@ -3474,7 +3747,9 @@ def _fold_region_task(payload: dict) -> list:
     # restores global order
     key_lo, key_hi = payload.get("key_lo"), payload.get("key_hi")
     for rf in payload["region_files"]:
-        for r in _ttl_live(pq.read_table(rf).to_pylist(), ttl_col, cutoff):
+        hit = _READ_CACHE.get(("region", rf)) if prime else None
+        tbl = hit.table if hit is not None else pq.read_table(rf)
+        for r in _ttl_live(tbl.to_pylist(), ttl_col, cutoff):
             k = _rowkey_of(r, key_cols)
             if key_lo is not None and k < key_lo:
                 continue
@@ -3498,13 +3773,15 @@ def _fold_region_task(payload: dict) -> list:
         # attempt-unique staging (:func:`storage.publish`): a
         # crash-orphaned temp is invisible to directory-level parquet
         # reads and to the metadata-driven readers
-        with storage.publish(os.path.join(payload["new_dir"], name)) as tmp:
-            pq.write_table(
-                pa.Table.from_pylist(
-                    [{c: r[c] for c in columns} for r in chunk], schema=schema
-                ),
-                tmp,
-            )
+        final = os.path.join(payload["new_dir"], name)
+        tbl = pa.Table.from_pylist(
+            [{c: r[c] for c in columns} for r in chunk], schema=schema
+        )
+        with storage.publish(final) as tmp:
+            pq.write_table(tbl, tmp)
+        if prime:
+            entry = _TableEntry(tbl)
+            _READ_CACHE.put(("region", final), entry, entry.nbytes)
         chunk_keys = [_rowkey_of(r, key_cols) for r in chunk]
         out.append(
             {
@@ -4145,8 +4422,8 @@ def _distributed_bulk_merge(
 
 def _publish_generation(opts, snap, built, verify: bool) -> dict:
     """Publish phase (under the overlay lock): with ``verify``, first
-    re-check that the overlay is byte-identical to the snapshot (inode
-    + mtime_ns + size — every commit publishes a new inode) AND the
+    re-check that the overlay is the snapshot's (same publish token —
+    every commit stamps a fresh one) AND the
     pointer still names the snapshot's generation — a racing commit or
     truncate otherwise made the build stale, so it is removed unseen
     and the caller retries. Then one atomic pointer replace makes the
@@ -4161,15 +4438,11 @@ def _publish_generation(opts, snap, built, verify: bool) -> dict:
 
     if verify:
         conflict = False
-        try:
-            ost = os.stat(overlay_path(opts))
-            ident = [ost.st_ino, ost.st_mtime_ns, ost.st_size]
-        except FileNotFoundError:
-            # truncate raced the build — unless the snapshot was a
-            # MAJOR pass over an already-empty overlay (ident None),
-            # where absent-is-still-absent means no conflict
-            ident = None
-        if ident != snap["overlay_ident"]:
+        # an absent overlay (ident None) means truncate raced the
+        # build — unless the snapshot was a MAJOR pass over an
+        # already-empty overlay, where absent-is-still-absent means no
+        # conflict
+        if _overlay_ident(overlay_path(opts)) != snap["overlay_ident"]:
             conflict = True
         live = _resolve_generation(opts)
         if (live or {}).get("dir") != ((snap["cur"] or {}).get("dir")):
@@ -4204,7 +4477,7 @@ def _publish_generation(opts, snap, built, verify: bool) -> dict:
     # the two re-applies it over the new generation — idempotent.
     # (A major pass over an empty overlay has nothing to retire.)
     if snap["overlay_ident"] is not None:
-        os.unlink(overlay_path(opts))
+        _retire_overlay(overlay_path(opts))
     # a fold changes the base identity dependent indexes were built
     # against — stale-flip exactly like a commit (content is
     # read-identical, but the conservative flip keeps one freshness
@@ -4256,12 +4529,7 @@ def _publish_bulk_generation(
 
     if verify:
         conflict = False
-        try:
-            ost = os.stat(overlay_path(opts))
-            ident = [ost.st_ino, ost.st_mtime_ns, ost.st_size]
-        except FileNotFoundError:
-            ident = None
-        if ident != snap["overlay_ident"]:
+        if _overlay_ident(overlay_path(opts)) != snap["overlay_ident"]:
             conflict = True
         live = _resolve_generation(opts)
         if (live or {}).get("dir") != ((snap["cur"] or {}).get("dir")):
@@ -4303,7 +4571,7 @@ def _publish_bulk_generation(
     pointer = _shard_region_manifest(pointer, built["dir"])
     storage.write_pointer(os.path.join(snap["root"], GEN_POINTER), pointer)
     if snap["overlay_ident"] is not None:
-        os.unlink(overlay_path(opts))
+        _retire_overlay(overlay_path(opts))
     _invalidate_dependent_indexes(opts)
     return {
         "published": True,
@@ -4545,20 +4813,15 @@ def _bulk_snapshot(opts) -> dict:
     :func:`_fold_snapshot` but an ABSENT overlay is a valid snapshot
     (``overlay_ident`` None) — a bulk load proceeds with or without
     pending committed writes."""
-    import pyarrow.parquet as pq
-
     _recover_overlay_locked(opts)
     root = _gen_root(opts)
     os.makedirs(root, exist_ok=True)
     cur = _resolve_generation(opts)
     _gc_generations(root, keep=cur["dir"] if cur else None)
     opath = overlay_path(opts)
-    if os.path.exists(opath):
-        overlay_rows = pq.read_table(opath).to_pylist()
-        ost = os.stat(opath)
-        ident = [ost.st_ino, ost.st_mtime_ns, ost.st_size]
-    else:
-        overlay_rows, ident = [], None
+    footer = _overlay_footer(opath)
+    overlay_rows = _read_overlay(opts, footer)
+    ident = _overlay_ident(opath, footer)
     return {
         "overlay_rows": overlay_rows,
         "overlay_ident": ident,
@@ -6047,7 +6310,7 @@ def incremental_refresh_kv_index(
                 f"index {index_name!r}: overlay has {n_overlay} rows "
                 f"(> {limit}) — beyond the driver-side delta budget, rebuild"
             )
-        overlay_rows = pq.read_table(opath).to_pylist()
+        overlay_rows = _read_overlay(opts)
         # prior indexed values of the touched keys (multi-get shape)
         want = {_rowkey_of(r, key_cols) for r in overlay_rows}
         cols = list(dict.fromkeys([*key_cols, index_on]))
@@ -6085,7 +6348,7 @@ def incremental_refresh_kv_index(
         rows = sorted(merged.values(), key=lambda x: x[INDEX_KEY])
         if rows:
             with storage.publish(iov_path) as staging:
-                pq.write_table(pa.Table.from_pylist(rows), staging)
+                pq.write_table(_stamp_token(pa.Table.from_pylist(rows)), staging)
         elif os.path.exists(iov_path):
             os.unlink(iov_path)
 
@@ -6313,7 +6576,7 @@ def feed_refresh_kv_index(
             rows = sorted(iov.values(), key=lambda x: x[INDEX_KEY])
             if rows:
                 with storage.publish(iov_path) as staging:
-                    pq.write_table(pa.Table.from_pylist(rows), staging)
+                    pq.write_table(_stamp_token(pa.Table.from_pylist(rows)), staging)
             elif os.path.exists(iov_path):
                 os.unlink(iov_path)
         meta["applied_seq"] = target
@@ -6825,6 +7088,28 @@ def src13_kv_bulk_load(spark, sf_dir: str):
     )
 
 
+def _parquet_column_max(path: str, column: str):
+    """max(``column``) of a parquet file from its footer's row-group
+    min/max statistics; falls back to reading the column when a row
+    group holding values lacks them."""
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    meta = pq.ParquetFile(path).metadata
+    ci = meta.schema.names.index(column)
+    best = None
+    for g in range(meta.num_row_groups):
+        chunk = meta.row_group(g).column(ci)
+        st = chunk.statistics
+        if st is not None and st.has_null_count and st.null_count == chunk.num_values:
+            continue  # no non-null values: contributes nothing
+        if st is None or not st.has_min_max:
+            return pc.max(pq.read_table(path, columns=[column]).column(column)).as_py()
+        if best is None or st.max > best:
+            best = st.max
+    return best
+
+
 _SRC14_TTL_DAYS = 7
 _SRC14_NEW_BASE = 980000
 _SRC14_N_FRESH = 50
@@ -6876,15 +7161,10 @@ def src14_kv_ttl_scan(spark, sf_dir: str):
 
     register_kv_source(spark)
     path = table_path(sf_dir, "events")
-    # driver-side max(ts): one pyarrow column read answers what a
-    # Spark job (~0.3 s) did — ts is a naive timestamp[us], so the
-    # value is byte-identical to the collected F.max (round-14)
-    import pyarrow.compute as pc
-    import pyarrow.parquet as pq
-
-    max_ts = pc.max(
-        pq.read_table(path, columns=["ts"]).column("ts")
-    ).as_py()
+    # driver-side max(ts) from the parquet footer's row-group
+    # statistics — no data page read (ts is a naive timestamp[us], so
+    # the value is byte-identical to the collected F.max)
+    max_ts = _parquet_column_max(path, "ts")
     opts = {
         "path": path,
         "keyCol": "event_id",

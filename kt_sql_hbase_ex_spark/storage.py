@@ -28,7 +28,8 @@ name a store's live generation; :func:`sweep_orphans`, which a writer
 runs under its lock to remove never-published generation dirs and torn
 staging left by a crash, and :func:`drop_dirs`, the deferred GC of
 superseded generations; :func:`writer_lock`, the fail-fast lock every
-substrate store keeps at its root.
+substrate store keeps at its root; and :class:`LRUCache`, the bounded
+in-process cache readers keep decoded immutable objects in.
 
 Staging-name rule: staging for ``<dir>/<name>`` is
 ``<dir>/_tmp.<name>.<uuid8>``. The ``_`` prefix hides it from Spark's
@@ -52,8 +53,10 @@ import json
 import os
 import shutil
 import tempfile
+import threading
 import time
 import uuid
+from collections import OrderedDict
 from typing import Optional
 
 #: the generation pointer file every substrate store keeps at its root
@@ -334,3 +337,68 @@ def build_once(base: str, build_fn) -> str:
         if not os.path.exists(marker):
             raise
     return base
+
+
+# --- read cache ----------------------------------------------------------
+
+
+class LRUCache:
+    """A bounded, thread-safe least-recently-used cache charged in
+    approximate bytes. The caller keys each entry by an identity that
+    changes whenever the cached object could (a publish token, an
+    immutable generation dir), so entries are never invalidated in
+    place, only replaced, dropped or evicted. An entry larger than the
+    whole budget is not kept. Values are shared: callers copy before
+    handing anything mutable out."""
+
+    def __init__(self, budget: int) -> None:
+        self.budget = budget
+        self._entries: OrderedDict = OrderedDict()  # key -> (value, nbytes)
+        self._used = 0
+        self._lock = threading.Lock()
+
+    def get(self, key, default=None):
+        with self._lock:
+            hit = self._entries.get(key)
+            if hit is None:
+                return default
+            self._entries.move_to_end(key)
+            return hit[0]
+
+    def put(self, key, value, nbytes: int) -> None:
+        with self._lock:
+            old = self._entries.pop(key, None)
+            if old is not None:
+                self._used -= old[1]
+            if nbytes > self.budget:
+                return
+            self._entries[key] = (value, nbytes)
+            self._used += nbytes
+            while self._used > self.budget:
+                _, (_, n) = self._entries.popitem(last=False)
+                self._used -= n
+
+    def pop(self, key) -> None:
+        with self._lock:
+            old = self._entries.pop(key, None)
+            if old is not None:
+                self._used -= old[1]
+
+    def discard(self, pred) -> None:
+        """Drop every entry whose key satisfies ``pred``."""
+        with self._lock:
+            for key in [k for k in self._entries if pred(k)]:
+                self._used -= self._entries.pop(key)[1]
+
+    def clear(self) -> None:
+        with self._lock:
+            self._entries.clear()
+            self._used = 0
+
+    def __len__(self) -> int:
+        return len(self._entries)
+
+    @property
+    def used(self) -> int:
+        """Bytes charged by the entries held now."""
+        return self._used

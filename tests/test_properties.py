@@ -1008,6 +1008,7 @@ def test_wal_fold_prune_timetravel_model(spark, tmp_path, ops):
     import pytest as _pytest
 
     from kt_sql_hbase_ex_spark.sources.kvstore import (
+        _READ_CACHE,
         KVUpsertWriter,
         KVWriteMessage,
         bulk_load_store,
@@ -1051,7 +1052,8 @@ def test_wal_fold_prune_timetravel_model(spark, tmp_path, ops):
 
     def probe_get(touched):
         # round-11: the point-Get path agrees with the model after
-        # every op — overlay-merged, bloom/range-pruned, None = absent
+        # every op — overlay-merged, bloom/range-pruned, None = absent;
+        # the warm-cache answer equals a cold-cache one
         ks = sorted(set(touched))[:4] + [10**6]
         got = get_store_rows(opts, [{"k": k} for k in ks])
         for k, r in zip(ks, got):
@@ -1060,6 +1062,8 @@ def test_wal_fold_prune_timetravel_model(spark, tmp_path, ops):
                 assert r == {"k": k, "v": v, "s": sv}, (k, r)
             else:
                 assert r is None, (k, r)
+        _READ_CACHE.clear()
+        assert get_store_rows(opts, [{"k": k} for k in ks]) == got
 
     for kind, arg in ops:
         if kind == "put":
@@ -1182,6 +1186,7 @@ def test_wal_fold_prune_timetravel_model(spark, tmp_path, ops):
             elif not anchors:
                 anchors.append(seq)  # pristine store: major pass at seq 0
             snaps.append((name, dict(state)))
+            probe_get(list(state))
         elif kind == "restore":
             if not snaps:
                 continue  # nothing to restore yet: no-op draw
@@ -1195,6 +1200,7 @@ def test_wal_fold_prune_timetravel_model(spark, tmp_path, ops):
             states[seq] = dict(state)
             anchors.append(seq)  # the restored generation IS an anchor
             dirty = False
+            probe_get(list(state))
         elif kind == "major":
             out = compact_store(opts, major=True)
             assert out["compacted"]  # major always folds
@@ -1202,6 +1208,7 @@ def test_wal_fold_prune_timetravel_model(spark, tmp_path, ops):
                 assert out["applied_seq"] == seq
             anchors.append(out["applied_seq"])
             dirty = False
+            probe_get(list(state))
         else:  # fold
             out = compact_store(opts)
             assert out["compacted"] is dirty  # no-op iff nothing to fold
@@ -1209,6 +1216,7 @@ def test_wal_fold_prune_timetravel_model(spark, tmp_path, ops):
                 assert out["applied_seq"] == seq
                 anchors.append(seq)
                 dirty = False
+            probe_get(list(state))
 
     def asof(s):
         return {

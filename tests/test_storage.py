@@ -57,6 +57,14 @@ def test_one_lock_publish_and_claim_implementation():
     assert private == [], private
 
 
+def test_one_overlay_reader():
+    """Every overlay read in the KV store goes through
+    ``_read_overlay``/``_overlay_entry``, the one reader the read cache
+    sits behind: the overlay parquet is read in exactly one place."""
+    src = (PKG / "sources" / "kvstore.py").read_text()
+    assert src.count("read_table(opath") == 1
+
+
 def test_text_index_lock_break_refuses_live_holder(tmp_path):
     """Breaking the text index's ``writer.lock`` is refused while the
     recorded holder pid is alive (the overlay lock's guard rail);
