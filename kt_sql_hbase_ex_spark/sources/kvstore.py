@@ -50,9 +50,11 @@ part for point gets and commits:
 - decoded region-file rows (the BlockCache analog), keyed by file path
   inside that immutable dir.
 
-Identity is never a stat signature: a same-size republish inside one
-mtime tick keeps ``(mtime, size)``, so the token also keys the merged
-store cache of :func:`_open_store` and the fold's overlay check. Still
+A committed state's identity is never a stat signature: a same-size
+republish inside one mtime tick keeps ``(mtime, size)``. So the token
+also keys the merged store cache of :func:`_open_store`, the fold's
+overlay check and index freshness (:func:`_base_signature`), and a
+generation is named by the dir its pointer holds. Still
 read on every call, because they ARE the validation: the generation
 pointer (it names the live dir), the WAL listing (crash recovery
 replays entries past the overlay's watermark) and the overlay footer
@@ -2438,7 +2440,9 @@ _FOOTER_UNREAD = object()
 
 def _rows_bytes(tbl) -> int:
     """Approximate memory of ``tbl`` decoded into Python row dicts."""
-    return tbl.nbytes + tbl.num_rows * (200 + 60 * tbl.num_columns)
+    return tbl.get_total_buffer_size() + tbl.num_rows * (
+        200 + 60 * tbl.num_columns
+    )
 
 
 def _footer_fields(meta) -> tuple:
@@ -2913,13 +2917,16 @@ def _region_entry(path: str) -> tuple:
     """``(entry, cached)``: the region file at ``path`` as a shared
     :class:`_TableEntry` — the BlockCache analog. A region file never
     changes once its generation is published, so the path is the
-    key."""
+    key. A miss reads the whole file with one ``ParquetFile`` read (a
+    third of ``pq.read_table``'s cost on a small region file: no
+    dataset discovery)."""
     import pyarrow.parquet as pq
 
     entry = _READ_CACHE.get(("region", path))
     if entry is not None:
         return entry, True
-    entry = _TableEntry(pq.read_table(path))
+    with pq.ParquetFile(path) as pf:
+        entry = _TableEntry(pf.read())
     _READ_CACHE.put(("region", path), entry, entry.nbytes)
     return entry, False
 
@@ -2967,13 +2974,15 @@ def _resolve_generation(options) -> dict | None:
 
 
 def _gen_signature(options) -> list:
-    """Identity of the live generation for cache/staleness keys:
-    pointer stat, or [0, 0] when no generation exists."""
-    try:
-        st = os.stat(os.path.join(_gen_root(options), GEN_POINTER))
-        return [st.st_mtime_ns, st.st_size]
-    except FileNotFoundError:
-        return [0, 0]
+    """Identity of the live generation for cache/staleness keys: the
+    generation number and the immutable ``gen.<uuid12>`` dir the
+    pointer names, or [0, 0] when no generation exists. (The pointer's
+    stat is not one: two same-size flips inside one mtime tick keep
+    it.)"""
+    ptr = storage.read_pointer(
+        os.path.join(_gen_root(options), GEN_POINTER), default=None
+    )
+    return [ptr["gen"], ptr["dir"]] if ptr is not None else [0, 0]
 
 
 def _resolve_base_path(options) -> str:
@@ -2999,10 +3008,6 @@ def _gc_generations(root: str, keep) -> None:
     for d in glob.glob(os.path.join(root, "gen.*")):
         if d != keep and os.path.isdir(d):
             shutil.rmtree(d, ignore_errors=True)
-            # its routing and region entries can never hit again
-            _READ_CACHE.discard(
-                lambda k, d=d: k[1] == d or k[1].startswith(d + os.sep)
-            )
 
 
 def _region_chunks(rows: list, region_size: int) -> list:
@@ -3519,7 +3524,7 @@ def _build_generation(
                     regions_meta.extend(m)
             else:
                 for p in payloads:
-                    regions_meta.extend(_fold_region_task(p, prime=True))
+                    regions_meta.extend(_fold_region_task(p))
     else:
         # first fold (or a fully-emptied predecessor): base ∖
         # overlay-keys ∪ puts, globally sorted, split into fresh regions
@@ -3714,14 +3719,11 @@ def _build_versioned_generation(opts, snap, new_dir: str) -> dict:
     }
 
 
-def _fold_region_task(payload: dict, prime: bool = False) -> list:
+def _fold_region_task(payload: dict) -> list:
     """One fold task — driver-side loop body AND executor map function
     (the identical fold shape, proven distributable): last-wins-merge
     ONE region file with its overlay slice, write the replacement
-    chunk(s) into the build dir, return their metadata. With ``prime``
-    (the driver-side loop) region files are read through the read
-    cache and the written tables prime it, so the first gets after a
-    fold find the new generation's regions in memory. Task-retry
+    chunk(s) into the build dir, return their metadata. Task-retry
     safe: each ATTEMPT writes to its own uuid-tagged staging name and
     publishes (:func:`storage.publish`) into the final
     region-index-derived name — a zombie or speculative attempt still
@@ -3747,9 +3749,7 @@ def _fold_region_task(payload: dict, prime: bool = False) -> list:
     # restores global order
     key_lo, key_hi = payload.get("key_lo"), payload.get("key_hi")
     for rf in payload["region_files"]:
-        hit = _READ_CACHE.get(("region", rf)) if prime else None
-        tbl = hit.table if hit is not None else pq.read_table(rf)
-        for r in _ttl_live(tbl.to_pylist(), ttl_col, cutoff):
+        for r in _ttl_live(pq.read_table(rf).to_pylist(), ttl_col, cutoff):
             k = _rowkey_of(r, key_cols)
             if key_lo is not None and k < key_lo:
                 continue
@@ -3773,15 +3773,13 @@ def _fold_region_task(payload: dict, prime: bool = False) -> list:
         # attempt-unique staging (:func:`storage.publish`): a
         # crash-orphaned temp is invisible to directory-level parquet
         # reads and to the metadata-driven readers
-        final = os.path.join(payload["new_dir"], name)
-        tbl = pa.Table.from_pylist(
-            [{c: r[c] for c in columns} for r in chunk], schema=schema
-        )
-        with storage.publish(final) as tmp:
-            pq.write_table(tbl, tmp)
-        if prime:
-            entry = _TableEntry(tbl)
-            _READ_CACHE.put(("region", final), entry, entry.nbytes)
+        with storage.publish(os.path.join(payload["new_dir"], name)) as tmp:
+            pq.write_table(
+                pa.Table.from_pylist(
+                    [{c: r[c] for c in columns} for r in chunk], schema=schema
+                ),
+                tmp,
+            )
         chunk_keys = [_rowkey_of(r, key_cols) for r in chunk]
         out.append(
             {
@@ -5891,18 +5889,15 @@ def _kv_index_root(base_options) -> str:
 
 def _base_signature(base_options) -> list:
     """Identity of the base content an index was built from: base file
-    + overlay state + live generation (a compaction replaces the base
-    a reader scans, so it changes the signature exactly like a commit).
-    Any committed write or fold changes it."""
+    stat + overlay publish token (:func:`_overlay_ident`, None when
+    absent) + live generation (a compaction replaces the base a reader
+    scans, so it changes the signature exactly like a commit). Any
+    committed write or fold changes it."""
     opts = {k.lower(): v for k, v in dict(base_options).items()}
     st = os.stat(os.path.realpath(opts["path"]))
-    sig = [st.st_mtime_ns, st.st_size]
-    try:
-        ost = os.stat(overlay_path(opts))
-        sig += [ost.st_mtime_ns, ost.st_size]
-    except FileNotFoundError:
-        sig += [0, 0]
-    return sig + _gen_signature(opts)
+    return [st.st_mtime_ns, st.st_size, _overlay_ident(overlay_path(opts))] + (
+        _gen_signature(opts)
+    )
 
 
 def _index_meta_path(base_options, index_name: str) -> str:
@@ -6027,11 +6022,11 @@ def _snapshot_of(base_signature: list) -> dict:
     correct index, with no history bookkeeping."""
     return {
         "base": base_signature[:2],
-        "overlay_free": base_signature[2:4] == [0, 0],
+        "overlay_free": base_signature[2] is None,
         # the generation the backfill read through: delta maintenance
         # is sound only while the SAME generation is live (a fold
         # changes the reference point the deltas apply against)
-        "gen": base_signature[4:6],
+        "gen": base_signature[3:],
     }
 
 

@@ -384,12 +384,6 @@ class LRUCache:
             if old is not None:
                 self._used -= old[1]
 
-    def discard(self, pred) -> None:
-        """Drop every entry whose key satisfies ``pred``."""
-        with self._lock:
-            for key in [k for k in self._entries if pred(k)]:
-                self._used -= self._entries.pop(key)[1]
-
     def clear(self) -> None:
         with self._lock:
             self._entries.clear()

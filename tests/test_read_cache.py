@@ -83,6 +83,35 @@ def test_fold_publish_detects_a_same_size_commit(tmp_path):
     assert _get(opts, [1]) == [{"k": 1, "v": 20.0}]
 
 
+def test_index_built_across_a_same_size_commit_reads_stale(
+    tmp_path, monkeypatch
+):
+    """An index records the base identity captured BEFORE its backfill.
+    A commit that lands during the backfill, with the old overlay's size
+    and mtime, must still leave the index reading as stale (the create's
+    own read-back refuses it): the overlay part of that identity is the
+    publish token, not a stat."""
+    opts = _store(tmp_path, "idx_tok")
+    opath = kv.overlay_path(opts)
+    kv.put_rows_to_store(opts, [{"k": 1, "v": 10.0}])
+
+    def backfill_racing_a_commit(spark, root, index_name, base_options, on):
+        st = os.stat(opath)
+        kv.put_rows_to_store(opts, [{"k": 1, "v": 20.0}])
+        assert os.stat(opath).st_size == st.st_size
+        os.utime(opath, ns=(st.st_atime_ns, st.st_mtime_ns))
+        data_dir = os.path.join(root, f"{index_name}.backfill")
+        os.makedirs(data_dir)
+        return data_dir
+
+    monkeypatch.setattr(kv, "_build_index_version", backfill_racing_a_commit)
+    with pytest.raises(kv.StaleIndexError):
+        kv.create_kv_index(None, "by_v", opts, "v")
+    (meta,) = kv.list_kv_indexes(opts)
+    assert meta["INDEX_TYPE"] == "KEY_VALUE"
+    assert meta["fresh"] is False
+
+
 def test_multiget_stats_report_cache_hits(tmp_path):
     opts = _store(tmp_path, "stats")
     kv.put_rows_to_store(opts, [{"k": 1, "v": 10.0}])
