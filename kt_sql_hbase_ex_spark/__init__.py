@@ -25,3 +25,10 @@ UDFs on the rare paths that need Python.
 """
 
 __version__ = "0.1.0"
+
+from kt_sql_hbase_ex_spark import worker_imports as _worker_imports
+
+# every Spark Python worker that unpickles package code imports this
+# package: from then on its per-invocation import-cache flush stops
+# re-reading the unchanged pyspark.zip (see worker_imports)
+_worker_imports.install()

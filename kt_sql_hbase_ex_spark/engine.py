@@ -1518,12 +1518,13 @@ class KtSqlEngine:
         (comma-separated), optional ``regionSize`` — the same bundle
         ``spark.read.format("ktsql_kv")`` takes.
 
-        Snapshot semantics: the view pins the store state at
-        registration (the Python data source plans its partitions when
-        the relation is created, measured in tests) — after committed
-        writes or a ``compact_kv_table`` fold, re-register to serve the
-        new state. A fresh ``spark.read`` per query (what the demo
-        queries do) always sees the current state."""
+        Live semantics: the view names the store, it does not pin a
+        snapshot. Every statement over it is planned afresh — the
+        Python data source pushes its filters and plans its partitions
+        in a planner worker at query time, not at registration — so
+        commits (connector writes, ``put_rows_to_store``, deletes) and
+        ``compact_kv_table`` folds made after registration are served
+        without re-registering (pinned in tests)."""
         from kt_sql_hbase_ex_spark.sources.kvstore import (
             FORMAT_NAME,
             register_kv_source,

@@ -121,10 +121,13 @@ _BASE_CACHE: dict[tuple, tuple] = {}  # base key -> (signature, KVStore)
 #: secondary index's value|basekey encoding below)
 _KEY_PAD = 12
 
-#: minimum rows per packed scan partition: below this, the ~14 ms fixed
-#: Python-task cost (scheduling + command deserialization + Arrow
-#: framing) outweighs the row work, so contiguous surviving regions
-#: pack together (see KVScanReader.partitions). Cluster regions carry
+#: minimum rows per packed scan partition: below this, the fixed
+#: Python-task cost outweighs the row work, so contiguous surviving
+#: regions pack together (see KVScanReader.partitions). Measured on a
+#: 4-core host at local[4] with reused, import-guarded workers: each
+#: added partition costs ~20 ms of scan wall time (~45 ms of worker
+#: CPU per task, most of it the pyspark daemon's gc.collect() after
+#: every call), against ~1 ms to read 1,024 rows. Cluster regions carry
 #: orders of magnitude more rows, so this floor is local-overhead
 #: hygiene, not a scale knob.
 _PACK_MIN_ROWS = 1024
@@ -627,11 +630,11 @@ class KVScanReader(DataSourceReader):
         # at most ``cap`` partitions (a 235-region sf0.1 scan runs ~64
         # tasks, not 235), and at least ``_PACK_MIN_ROWS`` rows per
         # partition (a 59-region store of 256-row regions runs ~15
-        # tasks, not 59 — measured ~14 ms of fixed Python-task cost
-        # per partition, so tiny-region stores paid 2x the scan in
-        # scheduling). At cluster scale regions carry far more than
-        # _PACK_MIN_ROWS rows each, so only the cap is active and each
-        # packed task still reads a contiguous key range.
+        # tasks, not 59 — the fixed Python-task cost per partition
+        # dwarfs 1,024 rows of reading, see _PACK_MIN_ROWS). At cluster
+        # scale regions carry far more than _PACK_MIN_ROWS rows each, so
+        # only the cap is active and each packed task still reads a
+        # contiguous key range.
         from kt_sql_hbase_ex_spark.session import default_parallelism
 
         cap = max(2 * default_parallelism(), 32)
@@ -3966,6 +3969,25 @@ def _distributed_first_fold(
     ]
 
 
+def _sql_array_literal(values) -> str:
+    """SQL text of an ``array(...)`` literal over JSON-typed values
+    (region starts: int, float or str), typed as ``F.lit`` would type
+    each element — int -> INT/BIGINT, float -> DOUBLE, str -> STRING.
+    Strings go in as UTF-8 hex, so no quote or backslash in a rowkey
+    (nor the parser's escaping conf) can change the literal."""
+
+    def one(v) -> str:
+        if isinstance(v, str):
+            return f"CAST(X'{v.encode().hex()}' AS STRING)"
+        if isinstance(v, float) and math.isfinite(v):
+            return f"{v!r}D"
+        if isinstance(v, int):
+            return str(v)
+        raise TypeError(f"region start {v!r} has no SQL literal form")
+
+    return "array(" + ", ".join(one(v) for v in values) + ")"
+
+
 def _distributed_bulk_merge(
     opts, spark, snap, schema, new_dir, df, n_bulk: int | None = None
 ) -> dict:
@@ -4042,14 +4064,10 @@ def _distributed_bulk_merge(
         # counting / sampling jobs pays a Python-worker stage
         # (guide §4: built-ins over UDFs). O(|regions|) per row, and
         # the batch's row count is statement/bulk-task sized.
-        # A list-valued lit builds the same array literal (same element
-        # type, same plan) as F.array(*[F.lit(s) ...]) — and, in
-        # PySpark 4.1, the same py4j traffic: F.lit(list) expands to
-        # exactly that per-element array, ~4 round trips per element
-        # (807 calls for 200 starts, measured). It is NOT one JVM
-        # call; the speedup once recorded for it does not reproduce
-        # (see the correction in OPTIMIZATION_r14.md §5).
-        arr = F.lit(list(start_list))
+        # The starts ride as ONE SQL array literal parsed on the JVM
+        # (3 py4j calls): F.lit(list) is F.array(*[F.lit(s) ...]) in
+        # PySpark 4.1, ~4 round trips per element (807 for 200 starts).
+        arr = F.expr(_sql_array_literal(start_list))
 
         def route(*cols):
             # cols are always the key columns in declaration order (both

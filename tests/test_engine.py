@@ -132,6 +132,53 @@ def test_register_kv_table_sql_over_connector(eng):
     assert "ktsql_kv" in plan
 
 
+def test_registered_kv_view_serves_later_puts_and_folds(eng, tmp_path):
+    """A view registered once is live, not a snapshot: a later
+    ``put_rows_to_store`` and a later major fold are both served without
+    re-registering, because the data source plans its partitions at
+    query time."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from kt_sql_hbase_ex_spark.sources.kvstore import (
+        _read_overlay,
+        put_rows_to_store,
+    )
+
+    base = tmp_path / "base.parquet"
+    pq.write_table(
+        pa.table({"k": list(range(100)), "v": ["base"] * 100}), str(base)
+    )
+    opts = {
+        "path": str(base),
+        "keyCol": "k",
+        "columns": "k,v",
+        "regionSize": "16",
+        "storeRoot": str(tmp_path / "state"),
+    }
+    eng.register_kv_table("kv_live", **opts)
+
+    def answer():
+        return {
+            (r.k, r.v)
+            for r in eng.sql("SELECT k, v FROM kv_live WHERE k >= 95").collect()
+        }
+
+    assert answer() == {(k, "base") for k in range(95, 100)}
+    put_rows_to_store(opts, [{"k": 96, "v": "put"}, {"k": 500, "v": "new"}])
+    after_put = {(k, "base") for k in (95, 97, 98, 99)}
+    after_put |= {(96, "put"), (500, "new")}
+    assert answer() == after_put
+
+    stats = eng.compact_kv_table(major=True, **opts)
+    # the put now lives only in the new generation: the overlay is empty
+    assert stats["compacted"]
+    assert _read_overlay({k.lower(): v for k, v in opts.items()}) == []
+    assert answer() == after_put
+    put_rows_to_store(opts, [{"k": 97, "v": "after fold"}])
+    assert answer() == (after_put - {(97, "base")}) | {(97, "after fold")}
+
+
 def test_from_properties_bootstrap(spark, sf_small, tmp_path):
     """The reference's connect surface (application.properties ->
     HBaseSchemaFactory operands): datadir required, flavor maps to the
