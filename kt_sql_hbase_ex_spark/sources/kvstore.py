@@ -32,10 +32,11 @@ bounds how many regions exist at all. At 100 TB the same shape holds
 with real region metadata: partition count ∝ regions in range, bytes
 moved ∝ qualifiers requested × rows matching the server-side filters.
 
-Read cache. An HBase region server answers a Get from its MemStore and
-BlockCache and opens an HFile only on a miss; ``_READ_CACHE`` (one
-bounded, thread-safe :class:`storage.LRUCache` per process) plays that
-part for point gets and commits:
+Read cache. An HBase region server answers Gets and Scans from its
+MemStore and one BlockCache and opens an HFile only on a miss;
+``_READ_CACHE`` (one bounded, thread-safe :class:`storage.LRUCache`
+per process, the module's only in-process cache) plays that part for
+point gets, scans and commits:
 
 - the decoded overlay (the MemStore analog), keyed by overlay path and
   valid while the footer's publish token matches. Every overlay
@@ -48,19 +49,26 @@ part for point gets and commits:
   dir is immutable once a pointer names it, so the dir is the key;
   a miss loads manifest rows only for the regions the call routes to;
 - decoded region-file rows (the BlockCache analog), keyed by file path
-  inside that immutable dir.
+  inside that immutable dir, and the pristine fixture of a
+  never-folded store, keyed by :func:`_base_fingerprint`. A scan's
+  base is these same entries (:func:`_base_rows`), so a scan warms
+  point gets and the other way round;
+- the built stores scans plan from (:func:`_open_store`): the base
+  with the overlay merged, TTL applied and, for ``indexOn``, the
+  secondary index derived, one entry per store config.
 
 A committed state's identity is never a stat signature: a same-size
 republish inside one mtime tick keeps ``(mtime, size)``. So the token
-also keys the merged store cache of :func:`_open_store`, the fold's
-overlay check and index freshness (:func:`_base_signature`), and a
-generation is named by the dir its pointer holds. Still
-read on every call, because they ARE the validation: the generation
-pointer (it names the live dir), the WAL listing (crash recovery
-replays entries past the overlay's watermark) and the overlay footer
-(the token). The budget is one module constant,
-``_READ_CACHE_BYTES``, charged in approximate decoded bytes with LRU
-eviction. Cached rows are shared, so callers only ever get copies.
+also keys the built stores, the fold's overlay check and index
+freshness (:func:`_base_signature`), and a generation is named by the
+dir its pointer holds. Still read on every call, because they ARE the
+validation: the generation pointer (it names the live dir), the WAL
+listing (crash recovery replays entries past the overlay's watermark)
+and the overlay footer (the token). One budget covers all of it: the
+module constant ``_READ_CACHE_BYTES``, charged in approximate decoded
+bytes with LRU eviction, so an entry larger than the whole budget is
+not held. Cached rows are shared: what leaves the module is a copy,
+and a built store's rows are only ever read.
 """
 
 from __future__ import annotations
@@ -97,25 +105,6 @@ from kt_sql_hbase_ex_spark import storage
 FORMAT_NAME = "ktsql_kv"
 #: streaming change-feed over the same store (see KVChangesDataSource)
 CHANGES_FORMAT_NAME = "ktsql_kv_changes"
-
-#: per-process store cache: the DataSource is instantiated in a separate
-#: Python planning worker, so — exactly like a real connector — it
-#: receives *connection info* (string options naming the external
-#: table), opens the store itself, and caches the handle. Keyed by the
-#: store CONFIG with the freshness signature stored in the entry, so a
-#: changed base/overlay REPLACES the entry (bounded memory: one entry
-#: per distinct store, however many writes happen).
-_STORE_CACHE: dict[tuple, tuple] = {}  # config key -> (signature, KVStore)
-
-#: base-relation cache under the store cache: the BASE rows (pristine
-#: fixture or immutable generation dir) only change on fold/regenerate,
-#: but every overlay commit invalidates the merged-store entry above —
-#: without this layer each statement-sized commit re-read the whole
-#: base parquet into Python rows just to merge a handful of overlay
-#: rows over it. Same bounded-memory shape: one entry per distinct
-#: base, REPLACED when the base identity moves. The cached KVStore is
-#: never mutated (merge/TTL/index paths all build a NEW KVStore).
-_BASE_CACHE: dict[tuple, tuple] = {}  # base key -> (signature, KVStore)
 
 #: zero-pad width for one composite-rowkey component (shared with the
 #: secondary index's value|basekey encoding below)
@@ -1700,19 +1689,18 @@ def get_kv_versions(
     return out
 
 
-def _versioned_latest_rows(opts) -> list:
+def _versioned_latest_rows(opts, gen) -> list:
     """Every key's newest live version (no __ts) — what a scan of a
     versioned store serves (the reference's latest-only read,
-    ``hbase/HBaseTable.kt:241-262``). Full-view read: base/generation
-    rows plus the overlay, grouped per key, masked and capped."""
-    import pyarrow.parquet as pq
-
+    ``hbase/HBaseTable.kt:241-262``). Full-view read: the base rows of
+    the resolved generation ``gen`` (:func:`_base_rows`) plus the
+    overlay, grouped per key, masked and capped."""
     key_cols = tuple(opts["keycol"].split(","))
     columns = list(opts["columns"].split(","))
     n = _versions_of(opts)
     state: dict = {}
-    base = _resolve_base_path(opts)
-    for r in pq.read_table(base).to_pylist():
+    cols = columns + [VERSION_TS] if gen is not None else columns
+    for r in _base_rows(opts, gen, cols):
         row = dict(r, **{VERSION_TS: int(r.get(VERSION_TS, 0) or 0)})
         state.setdefault(_rowkey_of(row, key_cols), []).append(row)
     for r in _versioned_overlay_rows(opts):
@@ -1853,11 +1841,15 @@ def _ttl_live(rows, ttl_col, cutoff):
 
 
 def _open_store(options) -> KVStore:
-    """Open (or reuse) the store an options bundle names, merging any
-    committed write overlay over the base (tombstones drop keys). Cache
-    key = resolved path + mtime + size + overlay publish token +
-    column/key config, so neither a regenerated source file nor a
-    fresh write is ever served stale.
+    """Open (or reuse) the store an options bundle names: the base rows
+    (:func:`_base_rows`, the read-cache entries point gets use) with
+    the committed write overlay merged over them (tombstones drop
+    keys) and TTL-expired rows dropped, built into ONE
+    :class:`KVStore`. The store is one :data:`_READ_CACHE` entry keyed
+    by the store config; a hit needs the current signature — fixture
+    stat, overlay publish token, generation and TTL cutoff — so neither
+    a regenerated source file, a fresh write nor a fold is ever served
+    stale, and a changed signature REPLACES the entry.
 
     With ``indexOn=<col>`` the bundle names the base table's SECONDARY
     INDEX instead: a derived store keyed by the composite
@@ -1867,10 +1859,9 @@ def _open_store(options) -> KVStore:
     atomically reflected — the index can never go stale, which is the
     consistency the reference needed dual Puts inside a Tephra
     transaction to approximate (``KVTransactionalIndexTable.kt``)."""
-    import os
-
     path = os.path.realpath(options["path"])
     key_col = options["keycol"]
+    key_cols = tuple(key_col.split(","))
     columns = tuple(options["columns"].split(","))
     index_on = options.get("indexon")
     region_size = int(options.get("regionsize", "512"))
@@ -1879,31 +1870,28 @@ def _open_store(options) -> KVStore:
     footer = _overlay_footer(opath)
     if recover_overlay(options, footer):  # serve WAL-recovered state
         footer = _overlay_footer(opath)
-    # the publish token, not a stat: a same-size republish inside one
-    # mtime tick must not serve the previous state
-    overlay_sig = _overlay_ident(opath, footer)
     versioned = _versions_of(options) > 1
-    config_key = (
-        path, opath, key_col, columns, region_size, index_on, versioned
+    key = (
+        "store", path, opath, key_col, columns, region_size, index_on,
+        versioned,
     )
-    # the generation pointer is part of the store's content identity:
-    # a fold replaces the base the reader must scan. The TTL cutoff
-    # rides in the SIGNATURE, not the key: a moving wall-clock cutoff
-    # then REPLACES the cached entry instead of growing one per tick
+    # ONE pointer resolution names both the signature and the rows: a
+    # fold landing between two reads would cache one generation's rows
+    # under the other's identity
+    gen = _resolve_generation(options)
+    # the overlay's publish token, not a stat: a same-size republish
+    # inside one mtime tick must not serve the previous state. The TTL
+    # cutoff rides in the SIGNATURE, not the key: a moving wall-clock
+    # cutoff then REPLACES the entry instead of growing one per tick
     cutoff = _ttl_cutoff(options)
     signature = (
-        st.st_mtime_ns, st.st_size, overlay_sig,
-        tuple(_gen_signature(options)), str(cutoff),
+        st.st_mtime_ns, st.st_size, _overlay_ident(opath, footer),
+        tuple(_gen_signature(options, gen)), str(cutoff),
     )
-    cached = _STORE_CACHE.get(config_key)
-    if cached is not None and cached[0] == signature:
-        return cached[1]
-    # evict entries whose backing path no longer exists (versioned index
-    # dirs are superseded by refresh and GC'd — without this sweep each
-    # new version would ADD a cache entry and the bounded-memory
-    # invariant above would silently break)
-    for k in [k for k in _STORE_CACHE if not os.path.exists(k[0])]:
-        del _STORE_CACHE[k]
+    hit = _READ_CACHE.get(key)
+    if hit is not None and hit[0] == signature:
+        return hit[1]
+    name, schema = f"kv:{path}", _store_schema(options)
     if versioned:
         # versions=N store: scans serve each key's newest live version
         # (the reference's latest-only read over a versioned substrate,
@@ -1914,84 +1902,42 @@ def _open_store(options) -> KVStore:
                 "versioned stores do not compose with TTL/index"
             )
         opts_l = {k.lower(): v for k, v in dict(options).items()}
-        store = KVStore(
-            f"kv:{path}",
-            _pyspark_schema_for(path, columns),
-            key_col,
-            _versioned_latest_rows(opts_l),
-            region_size=region_size,
-        )
-        _STORE_CACHE[config_key] = (signature, store)
-        return store
-    base_path = _resolve_base_path(options)
-    bst = os.stat(base_path)
-    base_key = (base_path, key_col, columns, region_size)
-    base_sig = (bst.st_mtime_ns, bst.st_size)
-    hit = _BASE_CACHE.get(base_key)
-    if hit is not None and hit[0] == base_sig:
-        store = hit[1]
+        rows = _versioned_latest_rows(opts_l, gen)
     else:
-        for k in [k for k in _BASE_CACHE if not os.path.exists(k[0])]:
-            del _BASE_CACHE[k]  # swept generations: bounded memory
-        store = load_kv_store_from_parquet(
-            f"kv:{path}", base_path, key_col, columns,
-            region_size=region_size,
-        )
-        _BASE_CACHE[base_key] = (base_sig, store)
-    entry, _ = _overlay_entry(opath, footer)
-    if entry is not None:
-        key_cols = store.key_cols
-        merged = {_rowkey_of(r, key_cols): r for r in store.rows}
-        for r in entry.rows():
-            if r.get(TOMBSTONE):
-                merged.pop(_rowkey_of(r, key_cols), None)
-            else:
-                merged[_rowkey_of(r, key_cols)] = {c: r[c] for c in columns}
-        store = KVStore(
-            store.name, store.schema, key_col, list(merged.values()),
-            region_size=region_size,
-        )
-    if cutoff is not None:
+        rows = _base_rows(options, gen, columns)
+        entry, _ = _overlay_entry(opath, footer)
+        if entry is not None:
+            merged = {_rowkey_of(r, key_cols): r for r in rows}
+            for r in entry.rows():
+                if r.get(TOMBSTONE):
+                    merged.pop(_rowkey_of(r, key_cols), None)
+                else:
+                    merged[_rowkey_of(r, key_cols)] = {c: r[c] for c in columns}
+            rows = list(merged.values())
         # TTL applies to the MERGED view (a fresh Put revives a key
         # even if the base row it replaced had expired) and BEFORE
         # index derivation, so indexes never point at expired rows
-        live = _ttl_live(store.rows, options["ttlcolumn"], cutoff)
-        if len(live) != len(store.rows):
-            store = KVStore(
-                store.name, store.schema, key_col, live,
-                region_size=region_size,
-            )
+        rows = _ttl_live(rows, options.get("ttlcolumn"), cutoff)
     if index_on:
-        from pyspark.sql.types import StringType, StructField
-
-        key_cols = store.key_cols
-        base_key_fields = [
-            next(f for f in store.schema.fields if f.name == c) for c in key_cols
-        ]
         # NULL indexed values produce no index entry (HBase-style
         # secondary indexes skip null cells — a str(None) entry would be
         # retrievable under the real-looking key 'None'). Payload = the
         # base PK column(s): the hit list re-joins the base store on them
         # (single or composite — the index rowkey suffix is the base's
         # whole concatenated rowkey either way).
-        idx_rows = [
+        rows = [
             {
                 INDEX_KEY: _index_rowkey(r[index_on], r, key_cols),
                 **{c: r[c] for c in key_cols},
             }
-            for r in store.rows
+            for r in rows
             if r[index_on] is not None
         ]
-        store = KVStore(
-            f"{store.name}:idx:{index_on}",
-            StructType(
-                [StructField(INDEX_KEY, StringType(), False), *base_key_fields]
-            ),
-            INDEX_KEY,
-            idx_rows,
-            region_size=region_size,
-        )
-    _STORE_CACHE[config_key] = (signature, store)
+        name, key_col = f"{name}:idx:{index_on}", INDEX_KEY
+    store = KVStore(name, schema, key_col, rows, region_size=region_size)
+    _READ_CACHE.put(
+        key, (signature, store), len(rows) * (200 + 60 * len(schema))
+    )
     return store
 
 
@@ -2144,21 +2090,17 @@ def _store_schema(options) -> StructType:
     every ``load()`` in the planning worker; opening the full store
     there (base parquet → Python dicts → sort) charged every scan of a
     just-written store a second full load before the reader's own
-    (cached) open. Sources: the live generation's region-file footers
-    (the same files the full open reads, so fold-time type rewrites
-    are reflected identically), or the pristine fixture footer for a
-    versioned store (the versioned open's own schema source)."""
+    (cached) open, which takes its schema from here too. Source: the
+    fixture's footer (a file) or footers (a dir, e.g. a persisted
+    index), whose column types every fold, bulk load and restore
+    writes its region files with."""
     import pyarrow.dataset as pads
     import pyarrow.parquet as pq
     from pyspark.sql.types import StringType, StructField
 
     opts = {k.lower(): v for k, v in dict(options).items()}
     columns = list(opts["columns"].split(","))
-    path = (
-        os.path.realpath(opts["path"])
-        if _versions_of(opts) > 1
-        else _resolve_base_path(opts)
-    )
+    path = os.path.realpath(opts["path"])
     if os.path.isdir(path):
         arrow = pads.dataset(path, format="parquet").schema
     else:
@@ -2934,6 +2876,38 @@ def _region_entry(path: str) -> tuple:
     return entry, False
 
 
+def _base_rows(opts, gen, columns) -> list:
+    """Every base row under the overlay, carrying exactly ``columns``
+    and SHARED with the read cache (never mutated): the resolved
+    generation ``gen``'s region files in region order — the entries
+    point gets read — or, for a never-folded store (``gen`` None), the
+    pristine fixture as one entry keyed by :func:`_base_fingerprint`,
+    which namespaces the store's overlay and generations too."""
+    import pyarrow.parquet as pq
+
+    if gen is None:  # the fixture: a file, or a dir (persisted index)
+        key = ("fixture", _base_fingerprint(opts), tuple(columns))
+        entry = _READ_CACHE.get(key)
+        if entry is None:
+            path = os.path.realpath(opts["path"])
+            entry = _TableEntry(pq.read_table(path, columns=list(columns)))
+            _READ_CACHE.put(key, entry, entry.nbytes)
+        entries = [entry]
+    else:
+        routed, _ = _gen_routed_regions(gen, list(range(_gen_regions_n(gen))))
+        entries = [
+            _region_entry(os.path.join(gen["dir"], routed[i][0]))[0]
+            for i in sorted(routed)
+        ]
+    rows: list = []
+    for entry in entries:
+        if entry.table.column_names == list(columns):
+            rows.extend(entry.rows())
+        else:  # a file carrying other columns
+            rows.extend({c: r[c] for c in columns} for r in entry.rows())
+    return rows
+
+
 def _shard_region_manifest(pointer: dict, gen_dir: str) -> dict:
     """Writer half: move ``pointer["regions"]`` into
     ``<gen_dir>/_regions.parquet`` (idx-keyed, row-grouped so routed
@@ -2976,16 +2950,18 @@ def _resolve_generation(options) -> dict | None:
     return data
 
 
-def _gen_signature(options) -> list:
+def _gen_signature(options, gen=_GEN_UNRESOLVED) -> list:
     """Identity of the live generation for cache/staleness keys: the
     generation number and the immutable ``gen.<uuid12>`` dir the
     pointer names, or [0, 0] when no generation exists. (The pointer's
     stat is not one: two same-size flips inside one mtime tick keep
-    it.)"""
-    ptr = storage.read_pointer(
-        os.path.join(_gen_root(options), GEN_POINTER), default=None
-    )
-    return [ptr["gen"], ptr["dir"]] if ptr is not None else [0, 0]
+    it.) A caller that already resolved the pointer passes it as
+    ``gen``."""
+    if gen is _GEN_UNRESOLVED:
+        gen = storage.read_pointer(
+            os.path.join(_gen_root(options), GEN_POINTER), default=None
+        )
+    return [gen["gen"], gen["dir"]] if gen is not None else [0, 0]
 
 
 def _resolve_base_path(options) -> str:
@@ -5431,25 +5407,8 @@ def register_kv_source(spark) -> None:
     spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
 
 
-def load_kv_store_from_parquet(
-    name: str, parquet_path: str, key_col: str, columns: Sequence[str],
-    region_size: int = 512,
-) -> KVStore:
-    """Bootstrap a store from a fixture parquet (driver-side, pyarrow —
-    this simulates the *external* HBase cluster that already holds the
-    data; it is store provisioning, not part of any query plan)."""
-    import pyarrow.parquet as pq
-
-    tbl = pq.read_table(parquet_path, columns=list(columns))
-    rows = tbl.to_pylist()
-    schema = _pyspark_schema_from_arrow(tbl.schema, columns)
-    return KVStore(name, schema, key_col, rows, region_size=region_size)
-
-
 def _pyspark_schema_from_arrow(arrow, columns: Sequence[str]) -> StructType:
-    """Spark StructType for ``columns`` from an arrow schema — shared
-    by the fixture bootstrap (which reads files OR directories) and
-    the versioned latest-view store build."""
+    """Spark StructType for ``columns`` from an arrow schema."""
     from pyspark.sql.types import (
         BooleanType,
         DoubleType,
@@ -5477,15 +5436,6 @@ def _pyspark_schema_from_arrow(arrow, columns: Sequence[str]) -> StructType:
             for c in columns
         ]
     )
-
-
-def _pyspark_schema_for(parquet_path: str, columns: Sequence[str]) -> StructType:
-    """Spark StructType for ``columns`` from a parquet FILE's footer
-    (no data read) — the versioned store build's schema source (the
-    pristine fixture is always a single file)."""
-    import pyarrow.parquet as pq
-
-    return _pyspark_schema_from_arrow(pq.read_schema(parquet_path), columns)
 
 
 CUSTOMER_KV_COLUMNS = "c_custkey,c_name,c_nationkey,c_acctbal,c_mktsegment"

@@ -1009,6 +1009,7 @@ def test_wal_fold_prune_timetravel_model(spark, tmp_path, ops):
 
     from kt_sql_hbase_ex_spark.sources.kvstore import (
         _READ_CACHE,
+        _open_store,
         KVUpsertWriter,
         KVWriteMessage,
         bulk_load_store,
@@ -1062,7 +1063,12 @@ def test_wal_fold_prune_timetravel_model(spark, tmp_path, ops):
                 assert r == {"k": k, "v": v, "s": sv}, (k, r)
             else:
                 assert r is None, (k, r)
+        # the scan path too: the whole store, warm, then cold (one
+        # clear empties every in-process cache)
+        want = {k: {"k": k, "v": v, "s": sv} for k, (v, sv) in state.items()}
+        assert {r["k"]: r for r in _open_store(opts).rows} == want
         _READ_CACHE.clear()
+        assert {r["k"]: r for r in _open_store(opts).rows} == want
         assert get_store_rows(opts, [{"k": k} for k in ks]) == got
 
     for kind, arg in ops:

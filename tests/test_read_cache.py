@@ -1,7 +1,8 @@
 """The KV store's in-process read cache (``kvstore._READ_CACHE``): warm
-point gets answer from memory yet never serve a state older than the
-one on disk, never hand out cached rows, and stay correct under
-eviction; plus the overlay publish token that makes that possible."""
+point gets and scans answer from memory yet never serve a state older
+than the one on disk, never hand out cached rows, share one set of
+region entries, and stay correct under eviction; plus the overlay
+publish token that makes that possible."""
 
 from __future__ import annotations
 
@@ -134,6 +135,21 @@ def test_multiget_stats_report_cache_hits(tmp_path):
     assert s["overlay_cached"] is True and s["files_read"] == 1
 
 
+def test_scan_warms_point_gets(tmp_path):
+    """A scan's base is the region entries point gets read: after a
+    cold scan open, a get finds every file it reads in the cache."""
+    opts = _store(tmp_path, "scan_warms")
+    kv.put_rows_to_store(opts, [{"k": 1, "v": 10.0}])
+    kv.compact_store(opts)
+    kv._READ_CACHE.clear()
+    assert len(kv._open_store(opts).rows) == 100
+    assert _get(opts, [1, 40, 80]) == [
+        {"k": 1, "v": 10.0}, {"k": 40, "v": 40.0}, {"k": 80, "v": 80.0}
+    ]
+    s = kv.last_multiget_stats()
+    assert s["files_cached"] == s["files_read"] > 0
+
+
 def test_returned_rows_are_fresh(tmp_path):
     opts = _store(tmp_path, "fresh")
     kv.put_rows_to_store(opts, [{"k": 1, "v": 10.0}])
@@ -150,20 +166,39 @@ def test_returned_rows_are_fresh(tmp_path):
 
 
 def test_eviction_under_a_small_budget(tmp_path, monkeypatch):
+    """Gets and scans (of the store and of an ``indexOn`` store over
+    the same base) interleave under a budget far below the store's
+    size: every answer matches the model and the budget holds."""
     opts = _store(tmp_path, "evict", n=200)
+    idx_opts = {**opts, "indexon": "v"}
     kv.put_rows_to_store(opts, [{"k": 1, "v": 10.0}])
     kv.compact_store(opts)
+    model = {k: float(k) for k in range(200)}
+    model[1] = 10.0
     budget = 4 * kv._rows_bytes(pa.table({"k": [0] * 16, "v": [0.0] * 16}))
     cache = storage.LRUCache(budget)
     monkeypatch.setattr(kv, "_READ_CACHE", cache)
+
+    def scans_match():
+        assert {r["k"]: r["v"] for r in kv._open_store(opts).rows} == model
+        assert sorted(
+            r[kv.INDEX_KEY] for r in kv._open_store(idx_opts).rows
+        ) == sorted(
+            kv._index_rowkey(v, {"k": k}, ("k",)) for k, v in model.items()
+        )
+        assert cache.used <= budget
+
     for rnd in range(3):
         for lo in range(0, 200, 16):
             keys = [lo, lo + 3, min(lo + 15, 199)]
-            want = [{"k": k, "v": 10.0 if k == 1 else float(k)} for k in keys]
-            assert _get(opts, keys) == want
+            assert _get(opts, keys) == [{"k": k, "v": model[k]} for k in keys]
             assert cache.used <= budget
+            if lo % 64 == 0:
+                scans_match()
         kv.put_rows_to_store(opts, [{"k": 5 + rnd, "v": -1.0}])
+        model[5 + rnd] = -1.0
         assert _get(opts, [5 + rnd]) == [{"k": 5 + rnd, "v": -1.0}]
+        scans_match()
     # the budget held far fewer entries than the 13 regions read
     assert 0 < len(cache) < 13
 

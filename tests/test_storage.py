@@ -65,6 +65,25 @@ def test_one_overlay_reader():
     assert src.count("read_table(opath") == 1
 
 
+def test_one_read_cache():
+    """``_READ_CACHE``, a bounded ``storage.LRUCache``, is the KV
+    store's only module-level cache: no ``*_CACHE`` dict or
+    ``OrderedDict`` sits beside it outside the byte budget."""
+    tree = ast.parse((PKG / "sources" / "kvstore.py").read_text())
+    caches = {}
+    for node in tree.body:
+        if isinstance(node, ast.Assign):
+            targets = node.targets
+        elif isinstance(node, ast.AnnAssign):
+            targets = [node.target]
+        else:
+            continue
+        for t in targets:
+            if isinstance(t, ast.Name) and t.id.endswith("_CACHE"):
+                caches[t.id] = ast.unparse(node.value)
+    assert caches == {"_READ_CACHE": "storage.LRUCache(_READ_CACHE_BYTES)"}
+
+
 def test_text_index_lock_break_refuses_live_holder(tmp_path):
     """Breaking the text index's ``writer.lock`` is refused while the
     recorded holder pid is alive (the overlay lock's guard rail);
