@@ -402,22 +402,31 @@ def opt07_aqe_skew_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     the whole stage on one task. With AQE skew handling the runtime
     splits that partition across tasks by mapper range and duplicates
     the matching build rows — no salting rewrite, no code change, the
-    optimizer re-plans from actual shuffle statistics. The plan pin
+    optimizer re-plans from actual shuffle statistics. AQE measures
+    compressed shuffle bytes, and the amplified copies of a row are
+    byte-identical: written side by side by one map task, compression
+    folds them, and the hot key ships ~1.7x another key's bytes, not
+    {HOT_AMP}x. So the explode runs before fan_out, whose round-robin
+    deals each row's copies to different map tasks. With a single map
+    task (SPARK_GRAFT_CPUS=1) there is no mapper range to split, so the
+    plan stays unsplit there. The plan pin
     (tests/test_plans.py) executes this query with the skew thresholds
     scaled to fixture bytes (production defaults are 256 MB-scale) and
     asserts the final adaptive plan marks the join skew=true.
     Correctness never depends on the skew path: this oracle-checked
     query runs green with or without it."""
-    e = fan_out(load_table(spark, sf_dir, "events")).select("event_type", "value")
-    amplified = e.withColumn(
-        "i",
-        F.explode(
-            F.sequence(
-                F.lit(1),
-                F.when(F.col("event_type") == HOT_KEY, HOT_AMP).otherwise(1),
-            )
-        ),
-    ).drop("i")
+    e = load_table(spark, sf_dir, "events").select("event_type", "value")
+    amplified = fan_out(
+        e.withColumn(
+            "i",
+            F.explode(
+                F.sequence(
+                    F.lit(1),
+                    F.when(F.col("event_type") == HOT_KEY, HOT_AMP).otherwise(1),
+                )
+            ),
+        ).drop("i")
+    )
     # the repartition is a materialization boundary: without it the agg's
     # own hash partitioning satisfies the join requirement and the join
     # child is the agg itself — AQE's OptimizeSkewedJoin only rewrites

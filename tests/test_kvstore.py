@@ -2261,7 +2261,11 @@ class TestDistributedFold:
         import pyarrow as pa
         import pyarrow.parquet as pq
 
-        from kt_sql_hbase_ex_spark.sources.kvstore import truncate_overlay
+        from kt_sql_hbase_ex_spark.sources.kvstore import (
+            drop_kv_index,
+            list_kv_indexes,
+            truncate_overlay,
+        )
 
         base = os.path.join(str(tmp_path), f"base_{ns}.parquet")
         if composite:
@@ -2295,6 +2299,10 @@ class TestDistributedFold:
             }
         pq.write_table(tbl, base)
         truncate_overlay(opts)
+        # the index catalog is keyed by base path, and pytest reuses tmp
+        # paths across runs: drop what an earlier run left at this path
+        for meta in list_kv_indexes(opts):
+            drop_kv_index(meta["index_name"], opts)
         return opts
 
     @staticmethod

@@ -41,6 +41,10 @@ def _store(tmp_path, ns, n=100, region_size=16):
         "appid": ns,
     }
     kv.truncate_overlay(opts)
+    # the index catalog is keyed by base path, and pytest reuses tmp
+    # paths across runs: drop what an earlier run left at this path
+    for meta in kv.list_kv_indexes(opts):
+        kv.drop_kv_index(meta["index_name"], opts)
     return opts
 
 
