@@ -46,6 +46,18 @@ def get_session(
     * Arrow enabled: every pandas interchange (Pandas UDFs, toPandas) goes
       through columnar Arrow batches instead of row pickling.
     * UTC session timezone so timestamp semantics match the DuckDB oracle.
+    * Streaming checkpoints (offset log, commit log, state-store deltas)
+      are written through ``FileSystemBasedCheckpointFileManager``. Spark's
+      default goes through Hadoop's ``FileContext``; on a local file system
+      without native IO, each of its writes runs ``chmod`` subprocesses
+      (``RawLocalFileSystem.setPermission`` via ``Shell.execCommand``).
+      Measured on a 4-core host: 32–44 ms per tiny checkpoint file through
+      ``FileContext``, 9.5–12 ms through ``FileSystem``, paid several times
+      per micro-batch. Semantics are unchanged: Spark already falls back
+      to this manager where ``FileContext`` is unsupported (S3A); on HDFS
+      ``FileSystem.rename`` does not overwrite; on the local file system
+      both managers check the destination before the rename, so the
+      offset log still fails if a batch file already exists.
     """
     n = cpus or default_parallelism()
     builder = (
@@ -83,6 +95,15 @@ def get_session(
         # to connect back" — a pure infra flake. 60s is harmless on an
         # idle host and on a real cluster.
         .config("spark.python.authenticate.socketTimeout", "60s")
+        # Checkpoint writes through Hadoop FileSystem, not FileContext:
+        # without native IO, FileContext's local writes spawn chmod
+        # subprocesses (~4x slower per file; every micro-batch writes the
+        # offset and commit logs). See the docstring for the semantics.
+        .config(
+            "spark.sql.streaming.checkpointFileManagerClass",
+            "org.apache.spark.sql.execution.streaming.checkpointing."
+            "FileSystemBasedCheckpointFileManager",
+        )
     )
     for key, value in (extra_conf or {}).items():
         builder = builder.config(key, value)

@@ -250,10 +250,16 @@ def test_aqe_skew_join_splits_hot_partition(spark, sf_oracle):
     """opt07: with skew thresholds scaled to fixture bytes (production
     defaults are 256 MB-scale), the final adaptive plan must mark the
     join skew=true and read the hot partition via AQEShuffleRead skewed
-    — the runtime split that un-serializes a hot-key stage."""
+    — the runtime split that un-serializes a hot-key stage.
+
+    The shuffle-partition count is pinned to 4: at 8 partitions the five
+    event types hash to three of them, Spark's skew median (the mean of
+    the two middle sizes) is 0, and every non-empty partition counts as
+    skewed whatever the hot key does, so the pin could not fail."""
     from kt_sql_hbase_ex_spark.operators.optimize import opt07_aqe_skew_join
 
     confs = {
+        "spark.sql.shuffle.partitions": "4",
         "spark.sql.autoBroadcastJoinThreshold": "-1",
         "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes": "1KB",
         "spark.sql.adaptive.advisoryPartitionSizeInBytes": "1KB",

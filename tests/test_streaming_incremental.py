@@ -235,6 +235,27 @@ def test_stream_to_kv_sink_multi_batch(spark, sf_small):
     assert len(os.listdir(ckpt)) >= 4
 
 
+def test_checkpoints_write_through_filesystem_manager(spark, tmp_path):
+    """Checkpoint writes go through FileSystemBasedCheckpointFileManager on
+    the engine session and on its drain clone (FileContext spawns chmod
+    subprocesses per local write without native IO). Resolving the class
+    by name also fails loudly if a Spark upgrade moves it again (4.1 moved
+    it into ``...streaming.checkpointing``)."""
+    from kt_sql_hbase_ex_spark.streaming.events import stream_session
+
+    for s in (spark, stream_session(spark)):
+        jvm = s._jvm
+        checkpointing = jvm.org.apache.spark.sql.execution.streaming.checkpointing
+        manager = checkpointing.CheckpointFileManager.create(
+            jvm.org.apache.hadoop.fs.Path(str(tmp_path)),
+            s._jsparkSession.sessionState().newHadoopConf(),
+        )
+        assert manager.getClass().getName() == (
+            "org.apache.spark.sql.execution.streaming.checkpointing."
+            "FileSystemBasedCheckpointFileManager"
+        )
+
+
 def test_checkpoint_restart_resumes_exactly_once(spark, sf_small):
     """Restart recovery: a stream drained with availableNow, stopped,
     then restarted on the same checkpoint after new files arrive must
