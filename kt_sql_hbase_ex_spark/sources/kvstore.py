@@ -48,8 +48,9 @@ point gets, scans and commits:
   routed manifest rows with their blooms parsed. A ``gen.<uuid12>``
   dir is immutable once a pointer names it, so the dir is the key;
   a miss loads manifest rows only for the regions the call routes to;
-- decoded region-file rows (the BlockCache analog), keyed by file path
-  inside that immutable dir, and the pristine fixture of a
+- decoded region-file rows (the BlockCache analog), keyed by file
+  identity, so a minor fold's hardlinked carries keep their entries,
+  and the pristine fixture of a
   never-folded store, keyed by :func:`_base_fingerprint`. A scan's
   base is these same entries (:func:`_base_rows`), so a scan warms
   point gets and the other way round;
@@ -339,11 +340,11 @@ def _multi_get_base(
     skipped_bloom = 0
     files_cached = 0
     for i, rks in sorted(per_region.items()):
-        name, bloom = routed[i]
+        path, bloom, key = routed[i]
         if not any(_bloom_probe(bloom, rk) for rk in rks):
             skipped_bloom += 1
             continue
-        entry, cached = _region_entry(os.path.join(gen["dir"], name))
+        entry, cached = _region_entry(path, key)
         files_cached += cached
         index = entry.index(key_cols, collect_all)
         hits = {
@@ -838,44 +839,52 @@ def _log_seqs(log_dir: str) -> List[int]:
     )
 
 
-def _append_changelog(
-    options, rows: list, key_cols, footer_meta=None, extra_cols=None
-) -> int:
-    """Append one commit's mutations as the next numbered log file.
-
-    ``rows`` are the batch's PER-KEY FINAL mutations (same-batch
-    overwrites already collapsed — what the overlay merge made visible),
-    each carrying an explicit ``TOMBSTONE`` flag. The file's schema is
-    pinned from the BASE parquet (columns in store order + flag + seq):
-    tombstone rows are all-NULL outside the key, and letting pyarrow
-    infer per-file types would give delete-only commits unreadable
-    null-typed columns. The sequence number is an exclusive
-    :func:`storage.claim` of the fully-written entry — the same
-    loud-loser discipline as the index claims: two racing commits can
-    never share a number or overwrite each other's entry.
-    ``footer_meta`` (str→str) embeds keys in the entry's parquet footer
-    — ATOMIC with the claim, since the claimed file is fully written
-    first; the bulk-load marker rides here so no reader can ever see
-    the claimed entry without its marker (a sidecar alone would leave a
-    write-order race window). ``extra_cols`` appends int64 metadata
-    columns to the entry schema (round-12: versioned stores' ``__ts``
-    rides in every WAL entry so replicas and recovery replay version
-    state exactly). Returns the claimed sequence number (the overlay
-    records it as applied_seq)."""
+def _mutation_table(options, rows: list):
+    """``rows`` (dicts carrying the store columns, ``__ts`` on
+    versioned stores and the flag; a missing flag is a Put) as one
+    table, in the given order — the schema of every WAL entry (plus
+    ``SEQ_COL``) and overlay: the store columns typed as in the BASE
+    parquet, ``__ts`` on versioned stores, then the flag. Pinned, not
+    inferred: tombstone rows are all-NULL outside the key, so an
+    inferred delete-only table has unreadable null-typed columns, and
+    an int put into a double column would read back as an int until a
+    fold rewrote it as the base's double."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
     opts = {k.lower(): v for k, v in dict(options).items()}
-    columns = list(opts["columns"].split(","))
     base = pq.read_schema(os.path.realpath(opts["path"]))
+    extra = [VERSION_TS] if _versions_of(opts) > 1 else []
     schema = pa.schema(
-        [pa.field(c, base.field(c).type) for c in columns]
-        + [pa.field(x, pa.int64()) for x in (extra_cols or [])]
-        + [pa.field(TOMBSTONE, pa.bool_()), pa.field(SEQ_COL, pa.int64())],
-        metadata={
-            k.encode(): v.encode() for k, v in (footer_meta or {}).items()
-        } or None,
+        [pa.field(c, base.field(c).type) for c in opts["columns"].split(",")]
+        + [pa.field(x, pa.int64()) for x in extra]
+        + [pa.field(TOMBSTONE, pa.bool_())]
     )
+    return pa.Table.from_pylist(
+        [{**r, TOMBSTONE: bool(r.get(TOMBSTONE))} for r in rows], schema=schema
+    )
+
+
+def _append_changelog(options, tbl, footer_meta=None) -> int:
+    """Append one commit's mutations as the next numbered log file.
+
+    ``tbl`` is a :func:`_mutation_table` of the batch's PER-KEY FINAL
+    mutations (same-batch overwrites already collapsed — what the
+    overlay merge makes visible) in rowkey order; the entry is that
+    table plus the ``SEQ_COL`` column. The sequence number is an
+    exclusive :func:`storage.claim` of the fully-written entry — the
+    same loud-loser discipline as the index claims: two racing commits
+    can never share a number or overwrite each other's entry.
+    ``footer_meta`` (str→str) embeds keys in the entry's parquet footer
+    — ATOMIC with the claim, since the claimed file is fully written
+    first; the bulk-load marker rides here so no reader can ever see
+    the claimed entry without its marker (a sidecar alone would leave a
+    write-order race window). Returns the claimed sequence number (the
+    overlay records it as applied_seq)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    opts = {k.lower(): v for k, v in dict(options).items()}
     log_dir = changelog_dir(opts)
     os.makedirs(log_dir, exist_ok=True)
     existing = _log_seqs(log_dir)
@@ -884,21 +893,44 @@ def _append_changelog(
     # reusing a pruned number would serve post-prune data under a
     # pre-prune offset and strand caught-up consumers forever
     seq = max(existing[-1] if existing else 0, changelog_floor(opts)) + 1
-    out = sorted(rows, key=lambda r: _rowkey_of(r, key_cols))
+    meta = {k.encode(): v.encode() for k, v in (footer_meta or {}).items()}
 
     def write(staging: str) -> None:
-        tbl = pa.Table.from_pylist(
-            [{**{c: r.get(c) for c in columns},
-              **{x: r.get(x) for x in (extra_cols or [])},
-              TOMBSTONE: bool(r.get(TOMBSTONE)), SEQ_COL: seq}
-             for r in out],
-            schema=schema,
+        entry = tbl.append_column(
+            pa.field(SEQ_COL, pa.int64()),
+            pa.array([seq] * tbl.num_rows, pa.int64()),
         )
-        pq.write_table(tbl, staging)
+        pq.write_table(entry.replace_schema_metadata(meta or None), staging)
 
     while not storage.claim(os.path.join(log_dir, f"{seq:08d}.parquet"), write):
         seq += 1  # lost the claim race: take the next number
     return seq
+
+
+def _commit_statement(opts, rows) -> None:
+    """The ONE commit path of every overlay writer; the caller holds
+    the overlay lock and has run WAL recovery. ``rows`` are the
+    statement's mutations in order (see :func:`_mutation_table`); the
+    last one of a key — of a ``(rowkey, __ts)`` version on versioned
+    stores — wins, collapsed BEFORE the WAL append: two rows of one key
+    would share one seq, and a replica's last-wins-by-seq collapse
+    could then replay the overwritten one. Their table is built ONCE,
+    in rowkey order, and is
+    both the WAL entry and the overlay merge's input. A statement with
+    no mutations commits nothing: no WAL entry, no publish.
+
+    WRITE-AHEAD: the log entry lands BEFORE the overlay publish (HBase
+    appends the WAL before the memstore apply). A crash between the two
+    leaves a logged-but-unapplied commit, which recover_overlay REPLAYS
+    on the next open/commit — the reverse order would be a SILENT feed
+    gap no replay could ever detect."""
+    key_cols = tuple(opts["keycol"].split(","))
+    mkey = _vkey if _versions_of(opts) > 1 else _rowkey_of
+    final = {mkey(r, key_cols): r for r in rows}
+    if not final:
+        return
+    tbl = _mutation_table(opts, [final[k] for k in sorted(final)])
+    _commit_overlay(opts, [tbl], _append_changelog(opts, tbl))
 
 
 def delete_from_store(options, keys) -> None:
@@ -913,14 +945,11 @@ def delete_from_store(options, keys) -> None:
     # concurrent writers serialize, so the applied-seq watermark always
     # reflects exactly the commits the published overlay contains
     with _overlay_lock(opts):
-        _recover_overlay_locked(opts)  # WAL recovery before the read
+        _recover_overlay_locked(opts)  # WAL recovery before the merge
         key_cols = tuple(opts["keycol"].split(","))
         columns = list(opts["columns"].split(","))
-        opath = overlay_path(opts)
-        merged = {_rowkey_of(r, key_cols): r for r in _read_overlay(opts)}
-        batch: dict = {}  # this statement's own tombstones, for the feed
+        batch = []
         for k in keys:  # composite stores take key TUPLES, single stores scalars
-            row = {c: None for c in columns}
             kt = k if isinstance(k, tuple) else (k,)
             if len(kt) != len(key_cols):
                 # arity mismatch must be loud: a silently-zipped prefix
@@ -929,26 +958,11 @@ def delete_from_store(options, keys) -> None:
                 raise ValueError(
                     f"delete key arity {len(kt)} != PK width {len(key_cols)}: {k!r}"
                 )
-            for col, v in zip(key_cols, kt):
-                row[col] = v
+            row = {c: None for c in columns}
+            row.update(zip(key_cols, kt))
             row[TOMBSTONE] = True
-            merged[_rowkey_of(row, key_cols)] = row
-            batch[_rowkey_of(row, key_cols)] = row
-        rows = sorted(merged.values(), key=lambda r: _rowkey_of(r, key_cols))
-        for r in rows:  # normalize: upsert rows carry an explicit false flag
-            r.setdefault(TOMBSTONE, False)
-        if batch:  # an empty delete set commits no WAL entry
-            # WRITE-AHEAD: the log entry lands BEFORE the overlay publish
-            # (HBase appends the WAL before the memstore apply). A crash
-            # between the two leaves a logged-but-unapplied commit, which
-            # recover_overlay REPLAYS on the next open/commit — the
-            # reverse order would be a SILENT feed gap no replay could
-            # ever detect.
-            applied = _append_changelog(opts, list(batch.values()), key_cols)
-        else:
-            seqs = _log_seqs(changelog_dir(opts))
-            applied = seqs[-1] if seqs else changelog_floor(opts)
-        _publish_overlay(opts, opath, rows, applied)
+            batch.append(row)
+        _commit_statement(opts, batch)
 
 
 def get_store_rows(options, keys: list) -> list:
@@ -982,44 +996,16 @@ def get_store_rows(options, keys: list) -> list:
             {c: v[0].get(c) for c in columns} if v else None
             for v in get_kv_versions(opts, keys, max_versions=1)
         ]
-    cutoff = _ttl_cutoff(opts)
-    ttl_col = opts.get("ttlcolumn")
-
-    # one footer read serves the recovery probe and the cache lookup;
-    # overlay rows are shared (read-only here: copied out below)
+    # one footer read serves the recovery probe and the cache lookup
     opath = overlay_path(opts)
     footer = _overlay_footer(opath)
     if recover_overlay(opts, footer):
         footer = _FOOTER_UNREAD
     entry, overlay_cached = _overlay_entry(opath, footer)
     rks = [_rowkey_of(k, key_cols) for k in keys]
-    overlay: dict = {}
-    if entry is not None:
-        index = entry.index(key_cols)
-        hits = [rk for rk in dict.fromkeys(rks) if rk in index]
-        overlay = dict(zip(hits, entry.rows_at([index[rk] for rk in hits])))
-    need = {rk: k for rk, k in zip(rks, keys) if rk not in overlay}
-    base_rows = _multi_get_base(opts, need, key_cols, columns)
+    live = _live_rows(opts, dict(zip(rks, keys)), entry)
     _MULTIGET_STATS.value["overlay_cached"] = overlay_cached
-
-    out: list = []
-    for rk in rks:
-        r = overlay.get(rk)
-        if r is not None:
-            r = None if r.get(TOMBSTONE) else {c: r.get(c) for c in columns}
-        else:
-            r = base_rows.get(rk)
-            if r is not None:
-                r = {c: r.get(c) for c in columns}
-        if (
-            r is not None
-            and cutoff is not None
-            and r.get(ttl_col) is not None
-            and r[ttl_col] < cutoff
-        ):
-            r = None  # expired: reads as absent, exactly the scan path
-        out.append(r)
-    return out
+    return [None if live[rk] is None else dict(live[rk]) for rk in rks]
 
 
 def increment_store(options, increments: list) -> list:
@@ -1042,9 +1028,6 @@ def increment_store(options, increments: list) -> list:
     contract (counters are hot keys, not table scans); the multi-get
     against the base reads only the touched keys via a column-pruned
     predicate scan of the base/generation files."""
-    import pyarrow.compute as pc
-    import pyarrow.dataset as pads
-
     opts = {k.lower(): v for k, v in dict(options).items()}
     _reject_versioned(opts, "increment_store")
     key_cols = tuple(opts["keycol"].split(","))
@@ -1075,55 +1058,26 @@ def increment_store(options, increments: list) -> list:
             )
         specs.append(({c: spec[c] for c in key_cols}, deltas))
 
-    cutoff = _ttl_cutoff(opts)
-    ttl_col = opts.get("ttlcolumn")
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    base_sch = pq.read_schema(os.path.realpath(opts["path"]))
+    int_cols = {
+        c for c in columns if pa.types.is_integer(base_sch.field(c).type)
+    }
     with _overlay_lock(opts):
         _recover_overlay_locked(opts)
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        opath = overlay_path(opts)
-        overlay = {_rowkey_of(r, key_cols): r for r in _read_overlay(opts)}
-
-        # multi-get of touched keys NOT already answered by the overlay:
-        # a column-pruned predicate scan of the base/generation files
-        # (row groups whose key range misses prune via parquet stats)
-        need = {
-            _rowkey_of(k, key_cols): k
-            for k, _ in specs
-            if _rowkey_of(k, key_cols) not in overlay
-        }
-        base_rows = _multi_get_base(opts, need, key_cols, columns)
-
-        def current(rk):
-            r = overlay.get(rk)
-            if r is not None:
-                if r.get(TOMBSTONE):
-                    return None
-                r = {c: r.get(c) for c in columns}
-            else:
-                r = base_rows.get(rk)
-            if r is None:
-                return None
-            if cutoff is not None and r.get(ttl_col) is not None and r[ttl_col] < cutoff:
-                return None  # expired: increment counts from zero
-            return r
-
-        base_sch = pq.read_schema(os.path.realpath(opts["path"]))
-        int_cols = {
-            c for c in columns if pa.types.is_integer(base_sch.field(c).type)
-        }
+        live = _live_rows(
+            opts, {_rowkey_of(k, key_cols): k for k, _ in specs},
+            _overlay_entry(overlay_path(opts))[0],
+        )
         out_rows: list = []
         batch: dict = {}  # per-key FINAL puts for the WAL entry
         for key, deltas in specs:
             rk = _rowkey_of(key, key_cols)
-            if rk in batch:  # same-batch accumulation
-                row = dict(batch[rk])
-            else:
-                row = current(rk) or {
-                    **{c: None for c in columns}, **key,
-                }
-                row = {c: row.get(c) for c in columns}
+            row = dict(batch.get(rk) or live[rk] or {
+                **{c: None for c in columns}, **key,
+            })
             for c, d in deltas.items():
                 nv = (row[c] or 0) + d
                 if c in int_cols:
@@ -1138,18 +1092,11 @@ def increment_store(options, increments: list) -> list:
                             )
                         nv = int(nv)
                 row[c] = nv
-            row[TOMBSTONE] = False
             batch[rk] = row
-            out_rows.append({c: row[c] for c in columns})
-            overlay[rk] = row
-
-        rows = sorted(overlay.values(), key=lambda r: _rowkey_of(r, key_cols))
-        for r in rows:
-            r.setdefault(TOMBSTONE, False)
+            out_rows.append(dict(row))
         # WRITE-AHEAD, same discipline as Put/Delete: the entry carries
         # the post-increment absolute rows
-        applied = _append_changelog(opts, list(batch.values()), key_cols)
-        _publish_overlay(opts, opath, rows, applied)
+        _commit_statement(opts, list(batch.values()))
     return out_rows
 
 
@@ -1184,9 +1131,6 @@ def check_and_mutate_store(options, mutations: list) -> list:
     commits nothing (no WAL entry). Statement-sized by the overlay
     contract (CAS targets hot keys, not scans); the base multi-get
     reads only touched keys via a column-pruned predicate scan."""
-    import pyarrow.compute as pc
-    import pyarrow.dataset as pads
-
     opts = {k.lower(): v for k, v in dict(options).items()}
     _reject_versioned(opts, "check_and_mutate_store")
     key_cols = tuple(opts["keycol"].split(","))
@@ -1227,76 +1171,36 @@ def check_and_mutate_store(options, mutations: list) -> list:
             {c: spec[c] for c in key_cols}, check, put, delete,
         ))
 
-    cutoff = _ttl_cutoff(opts)
-    ttl_col = opts.get("ttlcolumn")
     with _overlay_lock(opts):
         _recover_overlay_locked(opts)
-        import pyarrow as pa
-
-        opath = overlay_path(opts)
-        overlay = {_rowkey_of(r, key_cols): r for r in _read_overlay(opts)}
-
-        need = {
-            _rowkey_of(k, key_cols): k
-            for k, _, _, _ in specs
-            if _rowkey_of(k, key_cols) not in overlay
-        }
-        base_rows = _multi_get_base(opts, need, key_cols, columns)
-
-        def current(rk):
-            r = overlay.get(rk)
-            if r is not None:
-                if r.get(TOMBSTONE):
-                    return None
-                r = {c: r.get(c) for c in columns}
-            else:
-                r = base_rows.get(rk)
-            if r is None:
-                return None
-            if cutoff is not None and r.get(ttl_col) is not None and r[ttl_col] < cutoff:
-                return None  # expired: the cell is absent, HBase-wise
-            return r
-
+        live = _live_rows(
+            opts, {_rowkey_of(k, key_cols): k for k, _, _, _ in specs},
+            _overlay_entry(overlay_path(opts))[0],
+        )
         applied_flags: list = []
         batch: dict = {}  # per-key FINAL mutation for the WAL entry
         for key, check, put, delete in specs:
             rk = _rowkey_of(key, key_cols)
             if rk in batch:  # same-batch visibility, Increment-style
                 b = batch[rk]
-                row = None if b.get(TOMBSTONE) else {
-                    c: b.get(c) for c in columns
-                }
+                row = None if b[TOMBSTONE] else b
             else:
-                row = current(rk)
+                row = live[rk]
             cell = None if row is None else row.get(check["column"])
             if cell != check["equals"]:
                 applied_flags.append(False)
                 continue
             applied_flags.append(True)
             if delete:
-                trow = {c: None for c in columns}
-                trow.update(key)
-                trow[TOMBSTONE] = True
-                batch[rk] = trow
-                overlay[rk] = trow
+                nrow = {**{c: None for c in columns}, **key, TOMBSTONE: True}
             else:
-                nrow = row if row is not None else {
-                    **{c: None for c in columns}, **key,
+                nrow = {
+                    **(row or {**{c: None for c in columns}, **key}),
+                    **put, TOMBSTONE: False,
                 }
-                nrow = {c: nrow.get(c) for c in columns}
-                nrow.update(put)
-                nrow[TOMBSTONE] = False
-                batch[rk] = nrow
-                overlay[rk] = nrow
-
-        if batch:  # a batch whose checks all failed commits nothing
-            rows = sorted(
-                overlay.values(), key=lambda r: _rowkey_of(r, key_cols)
-            )
-            for r in rows:
-                r.setdefault(TOMBSTONE, False)
-            applied = _append_changelog(opts, list(batch.values()), key_cols)
-            _publish_overlay(opts, opath, rows, applied)
+            batch[rk] = nrow
+        # a batch whose checks all failed commits nothing
+        _commit_statement(opts, list(batch.values()))
     return applied_flags
 
 
@@ -1318,9 +1222,6 @@ def append_store(options, appends: list) -> list:
     order. Statement-sized by the overlay contract; the base multi-get
     is the same column-pruned row-group-pruned predicate scan as
     Increment's."""
-    import pyarrow.compute as pc
-    import pyarrow.dataset as pads
-
     opts = {k.lower(): v for k, v in dict(options).items()}
     _reject_versioned(opts, "append_store")
     key_cols = tuple(opts["keycol"].split(","))
@@ -1366,58 +1267,25 @@ def append_store(options, appends: list) -> list:
             )
         specs.append(({c: spec[c] for c in key_cols}, suffixes))
 
-    cutoff = _ttl_cutoff(opts)
-    ttl_col = opts.get("ttlcolumn")
     with _overlay_lock(opts):
         _recover_overlay_locked(opts)
-        opath = overlay_path(opts)
-        overlay = {_rowkey_of(r, key_cols): r for r in _read_overlay(opts)}
-
-        need = {
-            _rowkey_of(k, key_cols): k
-            for k, _ in specs
-            if _rowkey_of(k, key_cols) not in overlay
-        }
-        base_rows = _multi_get_base(opts, need, key_cols, columns)
-
-        def current(rk):
-            r = overlay.get(rk)
-            if r is not None:
-                if r.get(TOMBSTONE):
-                    return None
-                r = {c: r.get(c) for c in columns}
-            else:
-                r = base_rows.get(rk)
-            if r is None:
-                return None
-            if cutoff is not None and r.get(ttl_col) is not None and r[ttl_col] < cutoff:
-                return None  # expired: append starts from empty
-            return r
-
+        live = _live_rows(
+            opts, {_rowkey_of(k, key_cols): k for k, _ in specs},
+            _overlay_entry(overlay_path(opts))[0],
+        )
         out_rows: list = []
         batch: dict = {}  # per-key FINAL puts for the WAL entry
         for key, suffixes in specs:
             rk = _rowkey_of(key, key_cols)
-            if rk in batch:  # same-batch accumulation
-                row = dict(batch[rk])
-            else:
-                row = current(rk) or {
-                    **{c: None for c in columns}, **key,
-                }
-                row = {c: row.get(c) for c in columns}
+            row = dict(batch.get(rk) or live[rk] or {
+                **{c: None for c in columns}, **key,
+            })
             for c, sfx in suffixes.items():
                 row[c] = (row[c] or "") + sfx
-            row[TOMBSTONE] = False
             batch[rk] = row
-            out_rows.append({c: row[c] for c in columns})
-            overlay[rk] = row
-
-        rows = sorted(overlay.values(), key=lambda r: _rowkey_of(r, key_cols))
-        for r in rows:
-            r.setdefault(TOMBSTONE, False)
+            out_rows.append(dict(row))
         # WRITE-AHEAD, absolute post-append rows (never suffixes)
-        applied = _append_changelog(opts, list(batch.values()), key_cols)
-        _publish_overlay(opts, opath, rows, applied)
+        _commit_statement(opts, list(batch.values()))
     return out_rows
 
 
@@ -1518,34 +1386,6 @@ def _versioned_overlay_rows(opts) -> list:
     return _read_overlay(opts)
 
 
-def _commit_versioned(opts, batch: list) -> None:
-    """Shared commit tail for versioned Put/Delete: WAL entry first
-    (rows carry __ts), then the overlay publish keyed (rowkey, __ts) —
-    the delete_from_store write-ahead discipline with the versioned
-    merge key."""
-    key_cols = tuple(opts["keycol"].split(","))
-    # collapse same-batch overwrites of one (rowkey, __ts) version
-    # BEFORE the WAL append — _append_changelog's contract is per-key
-    # FINAL mutations. Two raw rows would share one seq, and a replica's
-    # last-wins-by-seq collapse could then replay the overwritten value
-    # while recovery (file-order replay) keeps the last one.
-    final = {}
-    for r in batch:
-        final[_vkey(r, key_cols)] = r
-    batch = list(final.values())
-    merged = {
-        _vkey(r, key_cols): r for r in _versioned_overlay_rows(opts)
-    }
-    for r in batch:
-        merged[_vkey(r, key_cols)] = r
-    rows = sorted(merged.values(), key=lambda r: _vkey(r, key_cols))
-    applied = _append_changelog(
-        opts, batch, key_cols, extra_cols=[VERSION_TS]
-    )
-    opath = overlay_path(opts)
-    _publish_overlay(opts, opath, rows, applied)
-
-
 def put_kv_versions(options, rows: list) -> None:
     """Versioned HBase Put: each row carries the store columns plus an
     explicit ``__ts`` (client logical timestamp — the ``Put(row, ts)``
@@ -1576,8 +1416,7 @@ def put_kv_versions(options, rows: list) -> None:
                     TOMBSTONE: False,
                 }
             )
-        if batch:
-            _commit_versioned(opts, batch)
+        _commit_statement(opts, batch)
 
 
 def delete_kv_versions(options, keys: list, ts: int) -> None:
@@ -1606,8 +1445,7 @@ def delete_kv_versions(options, keys: list, ts: int) -> None:
             row[VERSION_TS] = int(ts)
             row[TOMBSTONE] = True
             batch.append(row)
-        if batch:
-            _commit_versioned(opts, batch)
+        _commit_statement(opts, batch)
 
 
 def _versioned_base_versions(opts, need: dict) -> dict:
@@ -1978,47 +1816,24 @@ class KVUpsertWriter(DataSourceWriter):
     def commit(self, messages) -> None:
         opts = {k.lower(): v for k, v in dict(self._options).items()}
         _commit_put_rows(
-            opts,
-            self._key_cols,
-            [r for m in messages if m is not None for r in m.rows],
+            opts, [r for m in messages if m is not None for r in m.rows]
         )
 
     def abort(self, messages) -> None:
         pass  # nothing staged outside the messages: free rollback
 
 
-def _commit_put_rows(opts, key_cols, put_rows) -> None:
-    """One Put commit: read-merge-publish of the overlay plus the WAL
-    entry — the connector write's commit phase, shared with the
-    driver-side :func:`put_rows_to_store` so the two Put paths can
-    never drift on overlay/WAL semantics."""
+def _commit_put_rows(opts, put_rows) -> None:
+    """One Put commit — the connector write's commit phase, shared with
+    the driver-side :func:`put_rows_to_store` so the two Put paths can
+    never drift on overlay/WAL semantics. A Put over a tombstone
+    revives the key."""
     _reject_versioned(opts, "connector Put (use put_kv_versions)")
-    # read-merge-publish under the overlay lock — see
-    # delete_from_store: serialized writers keep the applied-seq
-    # watermark exact under concurrency (round-7 review finding)
+    # under the overlay lock — see delete_from_store: serialized
+    # writers keep the applied-seq watermark exact under concurrency
     with _overlay_lock(opts):
-        _recover_overlay_locked(opts)  # WAL recovery before the read
-        batch: dict = {}  # this commit's per-key FINAL puts, for the feed
-        opath = overlay_path(opts)
-        # upserts accumulate across statements
-        merged = {_rowkey_of(r, key_cols): r for r in _read_overlay(opts)}
-        for r in put_rows:
-            # a Put over a tombstone revives
-            merged[_rowkey_of(r, key_cols)] = r
-            batch[_rowkey_of(r, key_cols)] = r
-        rows = sorted(merged.values(), key=lambda r: _rowkey_of(r, key_cols))
-        for r in rows:
-            r.setdefault(TOMBSTONE, False)
-        if rows:
-            if batch:  # an empty statement commits no WAL entry
-                # WRITE-AHEAD ordering — see delete_from_store: the
-                # log entry must exist before the overlay becomes
-                # visible; recover_overlay replays the crash window
-                applied = _append_changelog(opts, list(batch.values()), key_cols)
-            else:
-                seqs = _log_seqs(changelog_dir(opts))
-                applied = seqs[-1] if seqs else changelog_floor(opts)
-            _publish_overlay(opts, opath, rows, applied)
+        _recover_overlay_locked(opts)  # WAL recovery before the merge
+        _commit_statement(opts, put_rows)
 
 
 def put_rows_to_store(options, rows) -> None:
@@ -2051,7 +1866,7 @@ def put_rows_to_store(options, rows) -> None:
         if any(d[k] is None for k in key_cols):
             raise ValueError("rowkey must not be null")  # HBase Put rule
         staged.append({c: d[c] for c in columns})
-    _commit_put_rows(opts, key_cols, staged)
+    _commit_put_rows(opts, staged)
 
 
 def _pristine_put_rows(
@@ -2549,6 +2364,41 @@ def _read_overlay(opts, footer=_FOOTER_UNREAD) -> list:
     return [dict(r) for r in entry.rows()] if entry is not None else []
 
 
+def _live_rows(opts, need: dict, entry) -> dict:
+    """For each rowkey of ``need`` (rowkey -> key dict), the key's
+    current row as a fresh dict of the store columns, or None when
+    absent, tombstoned or TTL-expired — what a Get serves and a
+    read-modify-write op starts from. The committed overlay ``entry``
+    (None when absent) answers through its rowkey index, decoding only
+    the touched rows; the rest go through the bloom- and range-pruned
+    :func:`_multi_get_base`."""
+    key_cols = tuple(opts["keycol"].split(","))
+    columns = list(opts["columns"].split(","))
+    cutoff = _ttl_cutoff(opts)
+    ttl_col = opts.get("ttlcolumn")
+    found: dict = {}
+    if entry is not None:
+        index = entry.index(key_cols)
+        hits = [rk for rk in need if rk in index]
+        found = dict(zip(hits, entry.rows_at([index[rk] for rk in hits])))
+    base_rows = _multi_get_base(
+        opts, {rk: k for rk, k in need.items() if rk not in found},
+        key_cols, columns,
+    )
+    live: dict = {}
+    for rk in need:
+        r = found[rk] if rk in found else base_rows.get(rk)
+        if r is None or r.get(TOMBSTONE) or (
+            cutoff is not None
+            and r.get(ttl_col) is not None
+            and r[ttl_col] < cutoff  # expired: reads as absent
+        ):
+            live[rk] = None
+        else:
+            live[rk] = {c: r.get(c) for c in columns}
+    return live
+
+
 def _retire_overlay(opath: str) -> None:
     """Unlink a folded or truncated overlay and drop its cache entry."""
     os.unlink(opath)
@@ -2570,16 +2420,75 @@ def _stamp_applied(tbl, seq: int):
     return _stamp_token(tbl.replace_schema_metadata(meta))
 
 
-def _publish_overlay(opts, opath: str, rows: list, applied: int) -> None:
+def _rowkey_array(tbl, key_cols):
+    """:func:`_rowkey_of` over a table's key columns, vectorized: the
+    key column itself, or each component cast to its decimal string,
+    zero-padded and '|'-joined (the components were validated by
+    :func:`_pad_component` when they were committed)."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    if len(key_cols) == 1:
+        return tbl.column(key_cols[0])
+    parts = [
+        pc.utf8_lpad(pc.cast(tbl.column(c), pa.string()), _KEY_PAD, "0")
+        for c in key_cols
+    ]
+    return pc.binary_join_element_wise(*parts, "|")
+
+
+def _commit_overlay(opts, tables: list, applied: int) -> None:
+    """Merge mutation tables (of :func:`_mutation_table`, in commit
+    order) into the cached overlay and publish it at ``applied`` — the
+    merge half of a statement commit and of WAL replay. All in Arrow,
+    no row decoded: the overlay and the tables are concatenated and
+    stably sorted by rowkey (then ``__ts`` on versioned stores), so a
+    key's rows stay in commit order, and the last row of each key is
+    kept — the last mutation wins, as in HBase's memstore."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    key_cols = tuple(opts["keycol"].split(","))
+    opath = overlay_path(opts)
+    entry, _ = _overlay_entry(opath)
+    if entry is not None:
+        # an overlay written unpinned takes the tables' types; columns
+        # only one side carries (statements over other store columns)
+        # read as NULL on the other
+        types = {f.name: f.type for t in tables for f in t.schema}
+        old = entry.table
+        want = pa.schema(
+            [pa.field(f.name, types.get(f.name, f.type)) for f in old.schema]
+        )
+        tables = [old if old.schema.equals(want) else old.cast(want), *tables]
+    tbl = pa.concat_tables(tables, promote_options="default")
+    tbl = tbl.replace_schema_metadata(None)
+    keys = {"rk": _rowkey_array(tbl, key_cols)}
+    if VERSION_TS in tbl.column_names:
+        keys["ts"] = tbl.column(VERSION_TS)
+    keys = pa.table(keys)
+    order = pc.sort_indices(keys, [(k, "ascending") for k in keys.column_names])
+    if tbl.num_rows > 1:
+        keys = keys.take(order)
+        head, tail = keys.slice(0, len(keys) - 1), keys.slice(1)
+        last = pc.not_equal(head["rk"], tail["rk"])
+        if "ts" in keys.column_names:
+            last = pc.or_(last, pc.not_equal(head["ts"], tail["ts"]))
+        order = order.filter(pa.concat_arrays(
+            [last.combine_chunks(), pa.array([True])]
+        ))
+    _publish_overlay(opts, opath, tbl.take(order).combine_chunks(), applied)
+
+
+def _publish_overlay(opts, opath: str, tbl, applied: int) -> None:
     """A commit's visibility point, after its WAL entry: publish the
-    merged overlay ``rows`` stamped with the applied-seq watermark and
-    a publish token, prime the read cache with the table just written
+    merged overlay table stamped with the applied-seq watermark and a
+    publish token, prime the read cache with the table just written
     (write-through: what a re-read would decode), then stale-flip the
     store's dependent persisted indexes."""
-    import pyarrow as pa
     import pyarrow.parquet as pq
 
-    tbl = _stamp_applied(pa.Table.from_pylist(rows), applied)
+    tbl = _stamp_applied(tbl, applied)
     with storage.publish(opath) as staging:
         pq.write_table(tbl, staging)
     entry = _TableEntry(tbl)
@@ -2643,30 +2552,17 @@ def _recover_overlay_locked(opts) -> int:
     todo = _unapplied_seqs(opts)  # re-derived under the lock
     if not todo:
         return 0
-    head = todo[-1]  # replay through the last unapplied entry
-    opath = overlay_path(opts)
-    key_cols = tuple(opts["keycol"].split(","))
-    columns = list(opts["columns"].split(","))
-    versioned = _versions_of(opts) > 1
-    # versioned stores key the overlay by (rowkey, __ts): replay
-    # UPSERTS each logged version row (puts AND masking tombstones) —
-    # the WAL carries __ts, so recovered state is exactly what the
-    # crashed commit published (round-12)
-    mkey = (
-        (lambda r: (_rowkey_of(r, key_cols), int(r[VERSION_TS])))
-        if versioned
-        else (lambda r: _rowkey_of(r, key_cols))
-    )
-    merged = {mkey(r): r for r in _read_overlay(opts)}
+    # replay UPSERTS each logged row (puts and tombstones; versioned
+    # stores per (rowkey, __ts) — the WAL carries __ts, so recovered
+    # state is exactly what the crashed commit published), through the
+    # same merge a commit runs, at the last unapplied entry
     log_dir = changelog_dir(opts)
-    for q in todo:
-        for r in pq.read_table(os.path.join(log_dir, f"{q:08d}.parquet")).to_pylist():
-            row = {c: r[c] for c in columns}
-            if versioned:
-                row[VERSION_TS] = int(r[VERSION_TS])
-            row[TOMBSTONE] = bool(r[TOMBSTONE])
-            merged[mkey(row)] = row
-    _publish_overlay(opts, opath, sorted(merged.values(), key=mkey), head)
+    tables = [
+        pq.read_table(os.path.join(log_dir, f"{q:08d}.parquet"))
+        .drop_columns([SEQ_COL])
+        for q in todo
+    ]
+    _commit_overlay(opts, tables, todo[-1])
     return len(todo)
 
 
@@ -2836,10 +2732,11 @@ def _gen_route_starts(gen: dict) -> list:
 
 
 def _gen_routed_regions(gen: dict, idxs: list) -> tuple:
-    """``({idx: (file, parsed bloom)}, loaded)`` for the routed region
-    indices: cached manifest rows where present, the rest through ONE
-    :func:`_gen_region_meta` read of only the missing indices
-    (``loaded`` of them)."""
+    """``({idx: (path, parsed bloom, region key)}, loaded)`` for the
+    routed region indices: cached manifest rows where present, the rest
+    through ONE :func:`_gen_region_meta` read of only the missing
+    indices (``loaded`` of them). The region key is the file's identity
+    (:func:`_region_entry`), stat'ed once as its manifest row loads."""
     out: dict = {}
     missing = []
     for i in idxs:
@@ -2851,28 +2748,36 @@ def _gen_routed_regions(gen: dict, idxs: list) -> tuple:
     if missing:
         for i, m in _gen_region_meta(gen, missing).items():
             bloom = m.get("bloom")
-            out[i] = (m["file"], _bloom_parse(bloom))
+            path = os.path.join(gen["dir"], m["file"])
+            st = os.stat(path)
+            out[i] = (
+                path, _bloom_parse(bloom),
+                ("region", st.st_dev, st.st_ino, st.st_size, st.st_mtime_ns),
+            )
             _READ_CACHE.put(
-                ("route", gen["dir"], i), out[i], 200 + len(bloom or "") // 2
+                ("route", gen["dir"], i), out[i], 300 + len(bloom or "") // 2
             )
     return out, len(missing)
 
 
-def _region_entry(path: str) -> tuple:
+def _region_entry(path: str, key: tuple) -> tuple:
     """``(entry, cached)``: the region file at ``path`` as a shared
     :class:`_TableEntry` — the BlockCache analog. A region file never
-    changes once its generation is published, so the path is the
-    key. A miss reads the whole file with one ``ParquetFile`` read (a
-    third of ``pq.read_table``'s cost on a small region file: no
-    dataset discovery)."""
+    changes once its generation is published, so ``key``, its file
+    identity (device, inode, size, mtime) from
+    :func:`_gen_routed_regions`, names it: a minor fold's hardlinked
+    carry (``region-c*``) is the same file under a new path and keeps
+    its entry. A miss reads the whole file with one ``ParquetFile``
+    read (a third of ``pq.read_table``'s cost on a small region file:
+    no dataset discovery)."""
     import pyarrow.parquet as pq
 
-    entry = _READ_CACHE.get(("region", path))
+    entry = _READ_CACHE.get(key)
     if entry is not None:
         return entry, True
     with pq.ParquetFile(path) as pf:
         entry = _TableEntry(pf.read())
-    _READ_CACHE.put(("region", path), entry, entry.nbytes)
+    _READ_CACHE.put(key, entry, entry.nbytes)
     return entry, False
 
 
@@ -2896,8 +2801,7 @@ def _base_rows(opts, gen, columns) -> list:
     else:
         routed, _ = _gen_routed_regions(gen, list(range(_gen_regions_n(gen))))
         entries = [
-            _region_entry(os.path.join(gen["dir"], routed[i][0]))[0]
-            for i in sorted(routed)
+            _region_entry(routed[i][0], routed[i][2])[0] for i in sorted(routed)
         ]
     rows: list = []
     for entry in entries:
@@ -4539,7 +4443,7 @@ def _publish_bulk_generation(
     # refuse identically either way
     marker_body = {"rows": n_bulk, **(marker_extra or {})}
     seq = _append_changelog(
-        opts, [], key_cols,
+        opts, _mutation_table(opts, []),
         footer_meta={"ktsql_bulk": json.dumps(marker_body)},
     )
     storage.write_pointer(

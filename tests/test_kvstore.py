@@ -1557,6 +1557,7 @@ class TestCompaction:
     def test_wal_recovery_after_fold_replays_only_new_commits(self, tmp_path):
         from kt_sql_hbase_ex_spark.sources.kvstore import (
             _append_changelog,
+            _mutation_table,
             compact_store,
             recover_overlay,
         )
@@ -1566,7 +1567,7 @@ class TestCompaction:
         compact_store(opts)
         assert recover_overlay(opts) == 0  # folded span never replays
         # a logged-but-unapplied commit (crash before overlay publish)
-        _append_changelog(opts, [{"k": 7, "v": 777.0, "__deleted": False}], ("k",))
+        _append_changelog(opts, _mutation_table(opts, [{"k": 7, "v": 777.0}]))
         assert recover_overlay(opts) == 1  # exactly the new commit
         state = self._state(opts)
         assert state[7] == 777.0 and state[5] == 555.0

@@ -65,6 +65,21 @@ def test_one_overlay_reader():
     assert src.count("read_table(opath") == 1
 
 
+def test_one_overlay_writer():
+    """Every overlay commit — the five client-API writers, the connector
+    and versioned Puts, WAL replay — merges and publishes through
+    ``_commit_overlay``: ``_publish_overlay`` has exactly one call
+    site."""
+    tree = ast.parse((PKG / "sources" / "kvstore.py").read_text())
+    calls = [
+        node for node in ast.walk(tree)
+        if isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Name)
+        and node.func.id == "_publish_overlay"
+    ]
+    assert len(calls) == 1
+
+
 def test_one_read_cache():
     """``_READ_CACHE``, a bounded ``storage.LRUCache``, is the KV
     store's only module-level cache: no ``*_CACHE`` dict or

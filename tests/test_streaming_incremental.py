@@ -772,6 +772,7 @@ def test_changelog_concurrent_commits_get_distinct_seqs(spark, tmp_path):
     from kt_sql_hbase_ex_spark.sources.kvstore import (
         KVChangesStreamReader,
         _append_changelog,
+        _mutation_table,
         changelog_dir,
     )
 
@@ -781,7 +782,7 @@ def test_changelog_concurrent_commits_get_distinct_seqs(spark, tmp_path):
     def commit(k: int) -> None:
         try:
             _append_changelog(
-                lopts, [{"k": k, "v": float(k), "__deleted": False}], ("k",)
+                lopts, _mutation_table(lopts, [{"k": k, "v": float(k)}])
             )
         except Exception as ex:  # pragma: no cover - surfaced by assert
             errs.append(ex)
@@ -1006,6 +1007,7 @@ def test_wal_recovery_replays_unapplied_commits(spark, tmp_path):
     from kt_sql_hbase_ex_spark.sources.kvstore import (
         FORMAT_NAME,
         _append_changelog,
+        _mutation_table,
         _overlay_applied_seq,
         overlay_path,
     )
@@ -1014,8 +1016,10 @@ def test_wal_recovery_replays_unapplied_commits(spark, tmp_path):
     expected = _commit_batches(spark, opts, lopts)  # seqs 1..4 applied
 
     # simulated crash: two commits reach the LOG but never the overlay
-    _append_changelog(lopts, [{"k": 100, "v": 1.5, "__deleted": False}], ("k",))
-    _append_changelog(lopts, [{"k": 2, "v": None, "__deleted": True}], ("k",))
+    _append_changelog(lopts, _mutation_table(lopts, [{"k": 100, "v": 1.5}]))
+    _append_changelog(
+        lopts, _mutation_table(lopts, [{"k": 2, "v": None, "__deleted": True}])
+    )
 
     served = {
         r["k"]: r["v"]
