@@ -53,19 +53,25 @@ point gets, scans and commits:
   and the pristine fixture of a
   never-folded store, keyed by :func:`_base_fingerprint`. A scan's
   base is these same entries (:func:`_base_rows`), so a scan warms
-  point gets and the other way round;
+  point gets and the other way round. A driver-side fold writes
+  through (:func:`_prime_generation`): once its pointer flip lands,
+  the generation's routing data and the region files it wrote are
+  cached, so the gets after a fold stay warm;
 - the built stores scans plan from (:func:`_open_store`): the base
   with the overlay merged, TTL applied and, for ``indexOn``, the
-  secondary index derived, one entry per store config.
+  secondary index derived, one entry per store config;
+- the base fingerprint that names the store's state dirs
+  (:func:`_base_fingerprint`), checked against one stat of the base.
 
 A committed state's identity is never a stat signature: a same-size
 republish inside one mtime tick keeps ``(mtime, size)``. So the token
 also keys the built stores, the fold's overlay check and index
 freshness (:func:`_base_signature`), and a generation is named by the
 dir its pointer holds. Still read on every call, because they ARE the
-validation: the generation pointer (it names the live dir), the WAL
-listing (crash recovery replays entries past the overlay's watermark)
-and the overlay footer (the token). One budget covers all of it: the
+validation: the generation pointer (it names the live dir), the
+overlay footer (the token) and one stat of the WAL entry just past
+the overlay's watermark (crash recovery replays from it; the log is
+listed only when it exists). One budget covers all of it: the
 module constant ``_READ_CACHE_BYTES``, charged in approximate decoded
 bytes with LRU eviction, so an entry larger than the whole budget is
 not held. Cached rows are shared: what leaves the module is a copy,
@@ -675,19 +681,10 @@ def overlay_path(options) -> str:
     each get an isolated overlay instead of racing truncate/commit on a
     shared file. A real store serializes writers server-side; a file
     store must namespace them."""
-    import hashlib
-    import os
-    import tempfile
-
-    path = os.path.realpath(options["path"])
-    st = os.stat(path)
-    ns = options.get("appid", "shared")
-    fp = hashlib.sha256(
-        f"{path}|{st.st_mtime_ns}|{st.st_size}|{ns}".encode()
-    ).hexdigest()[:16]
-    root = _store_state_root(options, "overlay")
-    os.makedirs(root, exist_ok=True)
-    return os.path.join(root, f"{fp}.parquet")
+    opts = {k.lower(): v for k, v in dict(options).items()}
+    return os.path.join(
+        _store_state_root(opts, "overlay"), f"{_base_fingerprint(opts)}.parquet"
+    )
 
 
 def _store_state_root(options, kind: str) -> str:
@@ -738,6 +735,7 @@ def _overlay_lock(options, timeout_s: float = 30.0):
     verify and :func:`break_overlay_lock` (the reference's Redis
     write-lock slot, ``RedisLockFactory.kt:16-41``)."""
     path = overlay_path(options) + ".lock"
+    os.makedirs(os.path.dirname(path), exist_ok=True)  # every writer's first step
     with storage.lock(path, timeout_s, "kv store overlay", "break_overlay_lock"):
         yield
 
@@ -826,10 +824,16 @@ def changelog_dir(options) -> str:
     return overlay_path(options)[: -len(".parquet")] + ".log"
 
 
+def _log_entry(log_dir: str, seq: int) -> str:
+    """Path of commit-log entry ``seq``."""
+    return os.path.join(log_dir, f"{seq:08d}.parquet")
+
+
 def _log_seqs(log_dir: str) -> List[int]:
     """Sorted sequence numbers present in a commit-log dir ([] if the
     dir doesn't exist) — the ONE place the log-file naming scheme is
-    parsed (floor/claim/prune/read all consume this)."""
+    parsed (prune, replay and the batch feed consume this; a crash-free
+    get, commit or caught-up poll never lists the log)."""
     try:
         names = os.listdir(log_dir)
     except FileNotFoundError:
@@ -865,7 +869,7 @@ def _mutation_table(options, rows: list):
     )
 
 
-def _append_changelog(options, tbl, footer_meta=None) -> int:
+def _append_changelog(options, tbl, footer_meta=None, after=None) -> int:
     """Append one commit's mutations as the next numbered log file.
 
     ``tbl`` is a :func:`_mutation_table` of the batch's PER-KEY FINAL
@@ -874,7 +878,12 @@ def _append_changelog(options, tbl, footer_meta=None) -> int:
     table plus the ``SEQ_COL`` column. The sequence number is an
     exclusive :func:`storage.claim` of the fully-written entry — the
     same loud-loser discipline as the index claims: two racing commits
-    can never share a number or overwrite each other's entry.
+    can never share a number or overwrite each other's entry. The
+    claim starts just above ``after`` — the applied watermark the
+    caller's locked recovery computed (probed here when None) — or
+    above the retention floor when that is higher, and steps past
+    numbers already taken, so it never lists the log and never leaves
+    a gap.
     ``footer_meta`` (str→str) embeds keys in the entry's parquet footer
     — ATOMIC with the claim, since the claimed file is fully written
     first; the bulk-load marker rides here so no reader can ever see
@@ -887,12 +896,13 @@ def _append_changelog(options, tbl, footer_meta=None) -> int:
     opts = {k.lower(): v for k, v in dict(options).items()}
     log_dir = changelog_dir(opts)
     os.makedirs(log_dir, exist_ok=True)
-    existing = _log_seqs(log_dir)
+    if after is None:
+        after = _recovery_probe(opts)[0]
     # the floor participates in the max: after retention pruned (or a
     # truncate cleared) every entry, numbering must RESUME, not restart —
     # reusing a pruned number would serve post-prune data under a
     # pre-prune offset and strand caught-up consumers forever
-    seq = max(existing[-1] if existing else 0, changelog_floor(opts)) + 1
+    seq = max(after, changelog_floor(opts)) + 1
     meta = {k.encode(): v.encode() for k, v in (footer_meta or {}).items()}
 
     def write(staging: str) -> None:
@@ -902,15 +912,20 @@ def _append_changelog(options, tbl, footer_meta=None) -> int:
         )
         pq.write_table(entry.replace_schema_metadata(meta or None), staging)
 
-    while not storage.claim(os.path.join(log_dir, f"{seq:08d}.parquet"), write):
-        seq += 1  # lost the claim race: take the next number
+    # a number another writer holds (or a torn commit left) is skipped
+    # before writing; a lost claim race takes the next one
+    while os.path.exists(_log_entry(log_dir, seq)) or not storage.claim(
+        _log_entry(log_dir, seq), write
+    ):
+        seq += 1
     return seq
 
 
-def _commit_statement(opts, rows) -> None:
+def _commit_statement(opts, rows, applied: int) -> None:
     """The ONE commit path of every overlay writer; the caller holds
-    the overlay lock and has run WAL recovery. ``rows`` are the
-    statement's mutations in order (see :func:`_mutation_table`); the
+    the overlay lock and has run WAL recovery, which left the overlay
+    at watermark ``applied`` (:func:`_recover_overlay_locked`). ``rows``
+    are the statement's mutations in order (see :func:`_mutation_table`); the
     last one of a key — of a ``(rowkey, __ts)`` version on versioned
     stores — wins, collapsed BEFORE the WAL append: two rows of one key
     would share one seq, and a replica's last-wins-by-seq collapse
@@ -930,7 +945,7 @@ def _commit_statement(opts, rows) -> None:
     if not final:
         return
     tbl = _mutation_table(opts, [final[k] for k in sorted(final)])
-    _commit_overlay(opts, [tbl], _append_changelog(opts, tbl))
+    _commit_overlay(opts, [tbl], _append_changelog(opts, tbl, after=applied))
 
 
 def delete_from_store(options, keys) -> None:
@@ -945,7 +960,7 @@ def delete_from_store(options, keys) -> None:
     # concurrent writers serialize, so the applied-seq watermark always
     # reflects exactly the commits the published overlay contains
     with _overlay_lock(opts):
-        _recover_overlay_locked(opts)  # WAL recovery before the merge
+        applied, _ = _recover_overlay_locked(opts)  # WAL recovery first
         key_cols = tuple(opts["keycol"].split(","))
         columns = list(opts["columns"].split(","))
         batch = []
@@ -962,7 +977,7 @@ def delete_from_store(options, keys) -> None:
             row.update(zip(key_cols, kt))
             row[TOMBSTONE] = True
             batch.append(row)
-        _commit_statement(opts, batch)
+        _commit_statement(opts, batch, applied)
 
 
 def get_store_rows(options, keys: list) -> list:
@@ -1066,7 +1081,7 @@ def increment_store(options, increments: list) -> list:
         c for c in columns if pa.types.is_integer(base_sch.field(c).type)
     }
     with _overlay_lock(opts):
-        _recover_overlay_locked(opts)
+        applied, _ = _recover_overlay_locked(opts)
         live = _live_rows(
             opts, {_rowkey_of(k, key_cols): k for k, _ in specs},
             _overlay_entry(overlay_path(opts))[0],
@@ -1096,7 +1111,7 @@ def increment_store(options, increments: list) -> list:
             out_rows.append(dict(row))
         # WRITE-AHEAD, same discipline as Put/Delete: the entry carries
         # the post-increment absolute rows
-        _commit_statement(opts, list(batch.values()))
+        _commit_statement(opts, list(batch.values()), applied)
     return out_rows
 
 
@@ -1172,7 +1187,7 @@ def check_and_mutate_store(options, mutations: list) -> list:
         ))
 
     with _overlay_lock(opts):
-        _recover_overlay_locked(opts)
+        applied, _ = _recover_overlay_locked(opts)
         live = _live_rows(
             opts, {_rowkey_of(k, key_cols): k for k, _, _, _ in specs},
             _overlay_entry(overlay_path(opts))[0],
@@ -1200,7 +1215,7 @@ def check_and_mutate_store(options, mutations: list) -> list:
                 }
             batch[rk] = nrow
         # a batch whose checks all failed commits nothing
-        _commit_statement(opts, list(batch.values()))
+        _commit_statement(opts, list(batch.values()), applied)
     return applied_flags
 
 
@@ -1268,7 +1283,7 @@ def append_store(options, appends: list) -> list:
         specs.append(({c: spec[c] for c in key_cols}, suffixes))
 
     with _overlay_lock(opts):
-        _recover_overlay_locked(opts)
+        applied, _ = _recover_overlay_locked(opts)
         live = _live_rows(
             opts, {_rowkey_of(k, key_cols): k for k, _ in specs},
             _overlay_entry(overlay_path(opts))[0],
@@ -1285,7 +1300,7 @@ def append_store(options, appends: list) -> list:
             batch[rk] = row
             out_rows.append(dict(row))
         # WRITE-AHEAD, absolute post-append rows (never suffixes)
-        _commit_statement(opts, list(batch.values()))
+        _commit_statement(opts, list(batch.values()), applied)
     return out_rows
 
 
@@ -1402,7 +1417,7 @@ def put_kv_versions(options, rows: list) -> None:
     key_cols = tuple(opts["keycol"].split(","))
     columns = list(opts["columns"].split(","))
     with _overlay_lock(opts):
-        _recover_overlay_locked(opts)
+        applied, _ = _recover_overlay_locked(opts)
         batch = []
         for r in rows:
             if r.get(VERSION_TS) is None:
@@ -1416,7 +1431,7 @@ def put_kv_versions(options, rows: list) -> None:
                     TOMBSTONE: False,
                 }
             )
-        _commit_statement(opts, batch)
+        _commit_statement(opts, batch, applied)
 
 
 def delete_kv_versions(options, keys: list, ts: int) -> None:
@@ -1430,7 +1445,7 @@ def delete_kv_versions(options, keys: list, ts: int) -> None:
     key_cols = tuple(opts["keycol"].split(","))
     columns = list(opts["columns"].split(","))
     with _overlay_lock(opts):
-        _recover_overlay_locked(opts)
+        applied, _ = _recover_overlay_locked(opts)
         batch = []
         for k in keys:
             kt = k if isinstance(k, tuple) else (k,)
@@ -1445,7 +1460,7 @@ def delete_kv_versions(options, keys: list, ts: int) -> None:
             row[VERSION_TS] = int(ts)
             row[TOMBSTONE] = True
             batch.append(row)
-        _commit_statement(opts, batch)
+        _commit_statement(opts, batch, applied)
 
 
 def _versioned_base_versions(opts, need: dict) -> dict:
@@ -1832,8 +1847,8 @@ def _commit_put_rows(opts, put_rows) -> None:
     # under the overlay lock — see delete_from_store: serialized
     # writers keep the applied-seq watermark exact under concurrency
     with _overlay_lock(opts):
-        _recover_overlay_locked(opts)  # WAL recovery before the merge
-        _commit_statement(opts, put_rows)
+        applied, _ = _recover_overlay_locked(opts)  # WAL recovery first
+        _commit_statement(opts, put_rows, applied)
 
 
 def put_rows_to_store(options, rows) -> None:
@@ -2006,30 +2021,25 @@ class KVChangesStreamReader(SimpleDataSourceStreamReader):
                 )
         return iter(out)
 
-    def _available(self) -> List[int]:
-        return _log_seqs(self._log_dir)
-
     def _check_not_pruned(self, nxt: int) -> None:
-        # a missing number with LATER numbers present can only mean
-        # retention pruned it (the exclusive claim is the finished file —
-        # numbers never exist half-written, and claim collisions bump
-        # forward leaving no gaps); the durable floor marker catches the
-        # everything-pruned case where no later file remains to prove
-        # the gap: a consumer that missed its window must fail loudly,
-        # never silently skip history
-        if os.path.exists(os.path.join(self._log_dir, f"{nxt:08d}.parquet")):
+        # the log has no gaps above the retention floor (the exclusive
+        # claim is the finished file and takes the next free number;
+        # retention publishes the floor BEFORE it removes a prefix), so
+        # a missing number was pruned exactly when it is at or below the
+        # floor — one read of the floor, never a listing of the log: a
+        # consumer that missed its window must fail loudly, never
+        # silently skip history
+        if os.path.exists(_log_entry(self._log_dir, nxt)):
             # TOCTOU guard: the caller saw nxt missing, but a racing
             # writer may have landed nxt (and nxt+1) since — present
             # now means NOT pruned; report caught-up and let the next
             # poll serve it
             return
-        later = [s for s in self._available() if s > nxt]
         floor = changelog_floor(self._options)
-        if later or nxt <= floor:
-            earliest = later[0] if later else floor + 1
+        if nxt <= floor:
             raise ValueError(
                 f"change-feed commit {nxt} has been pruned by retention; "
-                f"earliest still available is {earliest} — re-baseline the "
+                f"earliest still available is {floor + 1} — re-baseline the "
                 "consumer from the store instead of replaying"
             )
 
@@ -2505,29 +2515,36 @@ def recover_overlay(options, footer=_FOOTER_UNREAD) -> int:
     watermark in sequence order (puts upsert, tombstones delete —
     exactly the overlay merge semantics) and republishing the overlay
     at the log head. Returns the number of commits replayed (0 on the
-    crash-free path: one listdir + at most one footer read; a reader
-    that already read the footer passes it as ``footer``). Overlays
-    predating the watermark are taken as consistent at the current
-    head (no spurious replay; the watermark ships with every write
-    from now on)."""
+    crash-free path: at most one footer read and one stat, whatever
+    the log's length; a reader that already read the footer passes it
+    as ``footer``). Overlays predating the watermark are taken as
+    consistent at the current head (no spurious replay; the watermark
+    ships with every write from now on)."""
     opts = {k.lower(): v for k, v in dict(options).items()}
     # lock-free fast path: the crash-free open (every read) costs one
-    # listdir + footer probe, no lock traffic. The race is benign: a
+    # footer read + one stat, no lock traffic. The race is benign: a
     # concurrent writer holding the lock replays/publishes itself.
-    if not _unapplied_seqs(opts, footer):
+    if not _recovery_probe(opts, footer)[1]:
         return 0
     with _overlay_lock(opts):
-        return _recover_overlay_locked(opts)
+        return _recover_overlay_locked(opts)[1]
 
 
-def _unapplied_seqs(opts, footer=_FOOTER_UNREAD) -> List[int]:
-    """Commit-log entries past the overlay's applied watermark."""
-    seqs = _log_seqs(changelog_dir(opts))
-    if not seqs:
-        return []
+def _recovery_probe(opts, footer=_FOOTER_UNREAD) -> tuple:
+    """``(applied, unapplied)``: the overlay's applied watermark and the
+    commit-log entries past it. The log has no gaps above the
+    watermark — every claim takes the next free number above it (or
+    above the floor) under the overlay lock, a lost claim the one
+    after, and retention publishes the floor before it removes a
+    prefix — so entries past the watermark exist exactly when entry
+    ``applied + 1`` does: crash-free, the probe is that one stat, and
+    only a hit lists the log."""
+    log_dir = changelog_dir(opts)
     if footer is _FOOTER_UNREAD:
         footer = _overlay_footer(overlay_path(opts))
     if footer is None:
+        if not os.path.isdir(log_dir):
+            return 0, []  # never committed: no floor, nothing logged
         # absent overlay: nothing applied since the floor — or, after
         # a compaction folded the overlay away, since the generation's
         # carried watermark (replaying the folded span would be
@@ -2536,34 +2553,38 @@ def _unapplied_seqs(opts, footer=_FOOTER_UNREAD) -> List[int]:
         applied = max(changelog_floor(opts), gen["applied_seq"] if gen else 0)
     elif footer[0] is None:
         # legacy overlay (pre-watermark): assume consistent at head
-        applied = seqs[-1]
+        seqs = _log_seqs(log_dir)
+        return (seqs[-1] if seqs else changelog_floor(opts)), []
     else:
         applied = footer[0]
-    return [q for q in seqs if q > applied]
+    if not os.path.exists(_log_entry(log_dir, applied + 1)):
+        return applied, []
+    return applied, [q for q in _log_seqs(log_dir) if q > applied]
 
 
-def _recover_overlay_locked(opts) -> int:
+def _recover_overlay_locked(opts) -> tuple:
     """Replay body of :func:`recover_overlay`; caller holds the
     overlay lock (writers call this directly at the top of their own
     locked read-merge-publish cycle, so recovery and the new commit
-    are one atomic unit)."""
+    are one atomic unit). Returns ``(applied, replayed)``: the
+    watermark the overlay now carries — where the caller's WAL claim
+    starts — and the number of commits replayed."""
     import pyarrow.parquet as pq
 
-    todo = _unapplied_seqs(opts)  # re-derived under the lock
+    applied, todo = _recovery_probe(opts)  # re-derived under the lock
     if not todo:
-        return 0
+        return applied, 0
     # replay UPSERTS each logged row (puts and tombstones; versioned
     # stores per (rowkey, __ts) — the WAL carries __ts, so recovered
     # state is exactly what the crashed commit published), through the
     # same merge a commit runs, at the last unapplied entry
     log_dir = changelog_dir(opts)
     tables = [
-        pq.read_table(os.path.join(log_dir, f"{q:08d}.parquet"))
-        .drop_columns([SEQ_COL])
+        pq.read_table(_log_entry(log_dir, q)).drop_columns([SEQ_COL])
         for q in todo
     ]
     _commit_overlay(opts, tables, todo[-1])
-    return len(todo)
+    return todo[-1], len(todo)
 
 
 # --- overlay→base compaction (HBase memstore-flush / major-compact) ----
@@ -2616,17 +2637,27 @@ def _gen_root(options) -> str:
 
 
 def _base_fingerprint(opts) -> str:
-    """Base-file identity (path + mtime + size + appId namespace) —
-    the key under which all derived mutable state (generations,
-    snapshots) namespaces itself, mirroring :func:`overlay_path`."""
+    """Base-file identity (real path + mtime + size + appId namespace)
+    — the key under which all derived mutable state (overlay, WAL,
+    generations, snapshots) namespaces itself. Memoized in the read
+    cache per absolute ``path`` and ``appId``, and valid while one
+    ``os.stat`` of the base still gives the same device, inode, size
+    and mtime: a regenerated base re-derives it, orphaning that state."""
     import hashlib
 
-    path = os.path.realpath(opts["path"])
-    st = os.stat(path)
     ns = opts.get("appid", "shared")
-    return hashlib.sha256(
+    st = os.stat(opts["path"])
+    ident = (st.st_dev, st.st_ino, st.st_size, st.st_mtime_ns)
+    key = ("fingerprint", os.path.abspath(opts["path"]), ns)
+    hit = _READ_CACHE.get(key)
+    if hit is not None and hit[0] == ident:
+        return hit[1]
+    path = os.path.realpath(opts["path"])
+    fp = hashlib.sha256(
         f"{path}|{st.st_mtime_ns}|{st.st_size}|{ns}".encode()
     ).hexdigest()[:16]
+    _READ_CACHE.put(key, (ident, fp), 300)
+    return fp
 
 
 #: sharded region-manifest file inside the generation dir (underscore
@@ -2723,20 +2754,38 @@ def _gen_region_meta(gen: dict, idxs: list) -> dict:
 def _gen_route_starts(gen: dict) -> list:
     """:func:`_gen_region_starts` through the read cache. A generation
     dir is immutable once a pointer names it, so the dir is the key."""
-    key = ("starts", gen["dir"])
-    starts = _READ_CACHE.get(key)
+    starts = _READ_CACHE.get(("starts", gen["dir"]))
     if starts is None:
-        starts = _gen_region_starts(gen)
-        _READ_CACHE.put(key, starts, 100 + 80 * len(starts))
+        starts = _cache_starts(gen["dir"], _gen_region_starts(gen))
     return starts
 
 
+def _cache_starts(gen_dir: str, starts: list) -> list:
+    """Cache generation ``gen_dir``'s region start keys; returns them."""
+    _READ_CACHE.put(("starts", gen_dir), starts, 100 + 80 * len(starts))
+    return starts
+
+
+def _cache_route(gen_dir: str, i: int, m: dict) -> tuple:
+    """Cache and return region ``i``'s route ``(path, parsed bloom,
+    region key)`` built from its manifest row ``m``. The region key is
+    the file's identity (:func:`_region_entry`), stat'ed here."""
+    bloom = m.get("bloom")
+    path = os.path.join(gen_dir, m["file"])
+    st = os.stat(path)
+    route = (
+        path, _bloom_parse(bloom),
+        ("region", st.st_dev, st.st_ino, st.st_size, st.st_mtime_ns),
+    )
+    _READ_CACHE.put(("route", gen_dir, i), route, 300 + len(bloom or "") // 2)
+    return route
+
+
 def _gen_routed_regions(gen: dict, idxs: list) -> tuple:
-    """``({idx: (path, parsed bloom, region key)}, loaded)`` for the
-    routed region indices: cached manifest rows where present, the rest
+    """``({idx: route}, loaded)`` for the routed region indices (see
+    :func:`_cache_route`): cached routes where present, the rest
     through ONE :func:`_gen_region_meta` read of only the missing
-    indices (``loaded`` of them). The region key is the file's identity
-    (:func:`_region_entry`), stat'ed once as its manifest row loads."""
+    indices (``loaded`` of them)."""
     out: dict = {}
     missing = []
     for i in idxs:
@@ -2747,16 +2796,7 @@ def _gen_routed_regions(gen: dict, idxs: list) -> tuple:
             out[i] = hit
     if missing:
         for i, m in _gen_region_meta(gen, missing).items():
-            bloom = m.get("bloom")
-            path = os.path.join(gen["dir"], m["file"])
-            st = os.stat(path)
-            out[i] = (
-                path, _bloom_parse(bloom),
-                ("region", st.st_dev, st.st_ino, st.st_size, st.st_mtime_ns),
-            )
-            _READ_CACHE.put(
-                ("route", gen["dir"], i), out[i], 300 + len(bloom or "") // 2
-            )
+            out[i] = _cache_route(gen["dir"], i, m)
     return out, len(missing)
 
 
@@ -2896,6 +2936,50 @@ def _gc_generations(root: str, keep) -> None:
 def _region_chunks(rows: list, region_size: int) -> list:
     """Split sorted rows into region files of ``region_size`` rows."""
     return [rows[i: i + region_size] for i in range(0, len(rows), region_size)]
+
+
+def _write_region(new_dir: str, name: str, tbl, keys: list, written) -> dict:
+    """Write region file ``name`` of a fold's build and return its
+    manifest row; ``keys`` are the file's distinct rowkeys in order.
+    The file is staged and renamed into place (:func:`storage.publish`),
+    so a retried or speculative executor attempt can only ever install
+    a complete file. A driver-side build passes ``written`` (file name
+    -> table), which :func:`_prime_generation` turns into read-cache
+    entries once the generation is published; executors pass None."""
+    import pyarrow.parquet as pq
+
+    with storage.publish(os.path.join(new_dir, name)) as staging:
+        pq.write_table(tbl, staging)
+    if written is not None:
+        written[name] = tbl
+    return {
+        "file": name,
+        "start": keys[0],
+        "rows": tbl.num_rows,
+        "bloom": _bloom_build(keys),
+    }
+
+
+def _prime_generation(built: dict) -> None:
+    """Cache on write (HBase's cache-on-flush): after the pointer flip
+    published a driver-side build, give the read cache what a cold get
+    of the new generation would load — the start keys, every region's
+    route (a carried region's file identity is its predecessor's, so it
+    keeps its entry) and an entry for each region file the build wrote.
+    Only after the flip: a discarded build's files are deleted, and
+    their freed inodes can come back, under the same identity, within
+    one mtime tick. Distributed builds wrote on executors: nothing to
+    prime."""
+    if built["distributed"]:
+        return
+    regions = built["regions"]
+    _cache_starts(built["dir"], [m["start"] for m in regions])
+    for i, m in enumerate(regions):
+        route = _cache_route(built["dir"], i, m)
+        tbl = built["written"].get(m["file"])
+        if tbl is not None:
+            entry = _TableEntry(tbl)
+            _READ_CACHE.put(route[2], entry, entry.nbytes)
 
 
 #: Region-SPLIT trigger (round-11, the HBase ``split_region`` analog):
@@ -3085,7 +3169,7 @@ def _fold_snapshot(opts, major: bool = False) -> dict | None:
     to fold. Also runs the deferred generation GC — superseded and
     crash-orphaned dirs from previous cycles get swept exactly one
     fold later, giving in-flight readers a full cycle to drain."""
-    _recover_overlay_locked(opts)
+    applied, _ = _recover_overlay_locked(opts)
     opath = overlay_path(opts)
     footer = _overlay_footer(opath)
     if footer is None and not major:
@@ -3098,19 +3182,12 @@ def _fold_snapshot(opts, major: bool = False) -> dict | None:
 
     if footer is not None:
         overlay_rows = _read_overlay(opts, footer)
-        applied = footer[0]
-        if applied is None:  # legacy overlay: consistent at the log head
-            seqs = _log_seqs(changelog_dir(opts))
-            applied = seqs[-1] if seqs else changelog_floor(opts)
         ident = _overlay_ident(opath, footer)
     else:
         # major pass with nothing pending: recovery just ran, so an
         # absent overlay means every WAL entry is folded — the
         # watermark is the live generation's (or the floor, pristine)
         overlay_rows, ident = [], None
-        applied = (
-            int(cur["applied_seq"]) if cur else changelog_floor(opts)
-        )
     return {
         "overlay_rows": overlay_rows,
         "applied": applied,
@@ -3133,7 +3210,9 @@ def _fold_snapshot(opts, major: bool = False) -> dict | None:
     }
 
 
-def _first_fold_arrow(snap, schema, new_dir, key_col: str) -> list | None:
+def _first_fold_arrow(
+    snap, schema, new_dir, key_col: str, written: dict
+) -> list | None:
     """Vectorized driver-side FIRST FOLD for single-column rowkeys:
     base ∖ overlay-keys ∪ surviving puts, TTL-filtered, globally
     sorted and sliced into region files — all as pyarrow TABLE
@@ -3183,29 +3262,25 @@ def _first_fold_arrow(snap, schema, new_dir, key_col: str) -> list | None:
             tbl = pa.concat_tables(
                 [tbl, pa.Table.from_pylist(puts, schema=tbl.schema)]
             )
-    tbl = tbl.sort_by([(key_col, "ascending")])
-    keys = tbl.column(key_col).combine_chunks()
+    # one sort, then each region TAKEN on its own: a slice of the
+    # sorted table would pin (and be charged for) the whole table's
+    # buffers once cached
+    order = pc.sort_indices(tbl, [(key_col, "ascending")])
+    keys = tbl.column(key_col).take(order).combine_chunks()
     if len(keys) > 1:
         adj_dup = pc.any(
             pc.equal(keys.slice(1), keys.slice(0, len(keys) - 1))
         ).as_py()
         if adj_dup:
             return None  # duplicate base keys: dict path's last-wins
-    metas: list = []
-    for j, off in enumerate(range(0, tbl.num_rows, region_size)):
-        sub = tbl.slice(off, region_size)
-        name = f"region-{j:05d}.parquet"
-        pq.write_table(sub, os.path.join(new_dir, name))
-        chunk_keys = sub.column(key_col).to_pylist()
-        metas.append(
-            {
-                "file": name,
-                "start": chunk_keys[0],
-                "rows": len(chunk_keys),
-                "bloom": _bloom_build(chunk_keys),
-            }
+    return [
+        _write_region(
+            new_dir, f"region-{j:05d}.parquet",
+            tbl.take(order.slice(off, region_size)),
+            keys.slice(off, region_size).to_pylist(), written,
         )
-    return metas
+        for j, off in enumerate(range(0, tbl.num_rows, region_size))
+    ]
 
 
 def _build_generation(
@@ -3244,6 +3319,7 @@ def _build_generation(
         return _build_versioned_generation(opts, snap, new_dir)
 
     regions_meta: list = []
+    written: dict = {}  # driver-side region writes, primed after the flip
     rewritten = carried = merged = split = 0
     distributed = False
 
@@ -3407,7 +3483,7 @@ def _build_generation(
                     regions_meta.extend(m)
             else:
                 for p in payloads:
-                    regions_meta.extend(_fold_region_task(p))
+                    regions_meta.extend(_fold_region_task(p, written))
     else:
         # first fold (or a fully-emptied predecessor): base ∖
         # overlay-keys ∪ puts, globally sorted, split into fresh regions
@@ -3435,7 +3511,7 @@ def _build_generation(
                 # the base carries duplicate keys, where the dict
                 # path's last-wins collapse is the semantic
                 fast = _first_fold_arrow(
-                    snap, schema, new_dir, key_cols[0]
+                    snap, schema, new_dir, key_cols[0], written
                 )
             if fast is not None:
                 regions_meta.extend(fast)
@@ -3463,23 +3539,14 @@ def _build_generation(
                         merged_rows.pop(_rowkey_of(r, key_cols), None)
                 rows = sorted(merged_rows.values(), key=lambda r: _rowkey_of(r, key_cols))
                 for j, chunk in enumerate(_region_chunks(rows, region_size)):
-                    name = f"region-{j:05d}.parquet"
-                    pq.write_table(
+                    regions_meta.append(_write_region(
+                        new_dir, f"region-{j:05d}.parquet",
                         pa.Table.from_pylist(
                             [{c: r[c] for c in columns} for r in chunk],
                             schema=schema,
                         ),
-                        os.path.join(new_dir, name),
-                    )
-                    chunk_keys = [_rowkey_of(r, key_cols) for r in chunk]
-                    regions_meta.append(
-                        {
-                            "file": name,
-                            "start": chunk_keys[0],
-                            "rows": len(chunk),
-                            "bloom": _bloom_build(chunk_keys),
-                        }
-                    )
+                        [_rowkey_of(r, key_cols) for r in chunk], written,
+                    ))
         rewritten = len(regions_meta)
 
     if not regions_meta:
@@ -3500,6 +3567,7 @@ def _build_generation(
         "merged": merged,
         "split": split,
         "distributed": distributed,
+        "written": written,
     }
 
 
@@ -3562,9 +3630,10 @@ def _build_versioned_generation(opts, snap, new_dir: str) -> dict:
         live = _mask_and_cap(state[rk], n)
         rows.extend(sorted(live, key=lambda r: -int(r[VERSION_TS])))
     regions_meta: list = []
+    written: dict = {}
     for j, chunk in enumerate(_version_chunks(rows, key_cols, region_size)):
-        name = f"region-{j:05d}.parquet"
-        pq.write_table(
+        regions_meta.append(_write_region(
+            new_dir, f"region-{j:05d}.parquet",
             pa.Table.from_pylist(
                 [
                     {
@@ -3575,17 +3644,8 @@ def _build_versioned_generation(opts, snap, new_dir: str) -> dict:
                 ],
                 schema=schema,
             ),
-            os.path.join(new_dir, name),
-        )
-        chunk_keys = [_rowkey_of(r, key_cols) for r in chunk]
-        regions_meta.append(
-            {
-                "file": name,
-                "start": chunk_keys[0],
-                "rows": len(chunk),
-                "bloom": _bloom_build(sorted(set(chunk_keys))),
-            }
-        )
+            sorted({_rowkey_of(r, key_cols) for r in chunk}), written,
+        ))
     if not regions_meta:
         pq.write_table(
             pa.Table.from_pylist([], schema=schema),
@@ -3599,21 +3659,23 @@ def _build_versioned_generation(opts, snap, new_dir: str) -> dict:
         "merged": 0,
         "split": 0,
         "distributed": False,
+        "written": written,
     }
 
 
-def _fold_region_task(payload: dict) -> list:
+def _fold_region_task(payload: dict, written=None) -> list:
     """One fold task — driver-side loop body AND executor map function
     (the identical fold shape, proven distributable): last-wins-merge
     ONE region file with its overlay slice, write the replacement
     chunk(s) into the build dir, return their metadata. Task-retry
     safe: each ATTEMPT writes to its own uuid-tagged staging name and
-    publishes (:func:`storage.publish`) into the final
+    publishes (:func:`_write_region`) into the final
     region-index-derived name — a zombie or speculative attempt still
     writing after the winning attempt's metadata was collected can
     only ever atomically install a byte-identical complete file, never
     tear one mid-write (the final name is only ever the target of a
-    rename, round-9 review finding)."""
+    rename, round-9 review finding). The driver-side loop passes
+    ``written``."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
@@ -3650,29 +3712,16 @@ def _fold_region_task(payload: dict) -> list:
             # past TTL — the row simply doesn't survive the fold
             merged.pop(_rowkey_of(r, key_cols), None)
     rows = sorted(merged.values(), key=lambda r: _rowkey_of(r, key_cols))
-    out = []
-    for j, chunk in enumerate(_region_chunks(rows, payload["region_size"])):
-        name = f"region-t{payload['task']:05d}-{j:03d}.parquet"
-        # attempt-unique staging (:func:`storage.publish`): a
-        # crash-orphaned temp is invisible to directory-level parquet
-        # reads and to the metadata-driven readers
-        with storage.publish(os.path.join(payload["new_dir"], name)) as tmp:
-            pq.write_table(
-                pa.Table.from_pylist(
-                    [{c: r[c] for c in columns} for r in chunk], schema=schema
-                ),
-                tmp,
-            )
-        chunk_keys = [_rowkey_of(r, key_cols) for r in chunk]
-        out.append(
-            {
-                "file": name,
-                "start": chunk_keys[0],
-                "rows": len(chunk),
-                "bloom": _bloom_build(chunk_keys),
-            }
+    return [
+        _write_region(
+            payload["new_dir"], f"region-t{payload['task']:05d}-{j:03d}.parquet",
+            pa.Table.from_pylist(
+                [{c: r[c] for c in columns} for r in chunk], schema=schema
+            ),
+            [_rowkey_of(r, key_cols) for r in chunk], written,
         )
-    return out
+        for j, chunk in enumerate(_region_chunks(rows, payload["region_size"]))
+    ]
 
 
 def _distributed_first_fold(
@@ -4369,6 +4418,7 @@ def _publish_generation(opts, snap, built, verify: bool) -> dict:
     # the pointer stays a small-constant JSON read at any region count
     pointer = _shard_region_manifest(pointer, built["dir"])
     storage.write_pointer(os.path.join(root, GEN_POINTER), pointer)
+    _prime_generation(built)
     # the folded overlay retires AFTER the publish: a crash between
     # the two re-applies it over the new generation — idempotent.
     # (A major pass over an empty overlay has nothing to retire.)
@@ -5819,11 +5869,7 @@ def _store_applied_seq(opts) -> int:
     just-built index snapshot corresponds to (captured BEFORE the
     backfill derives, so it can only be conservative-low; the feed
     replay is idempotent per entry, making a low watermark safe)."""
-    applied = _overlay_applied_seq(overlay_path(opts))
-    if applied is not None:
-        return applied
-    gen = _resolve_generation(opts)
-    return max(changelog_floor(opts), gen["applied_seq"] if gen else 0)
+    return _recovery_probe(opts)[0]
 
 
 def create_kv_index(spark, index_name: str, base_options, index_on: str) -> dict:

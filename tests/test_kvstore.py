@@ -2380,6 +2380,11 @@ class TestDistributedFold:
         assert stats["regions_rewritten"] == 2
         assert stats["regions_carried"] == 5
         gen = _resolve_generation(opts)
+        # executors wrote the regions: the driver primes no cache entry
+        from kt_sql_hbase_ex_spark.sources.kvstore import _READ_CACHE
+
+        assert _READ_CACHE.get(("starts", gen["dir"])) is None
+        assert _READ_CACHE.get(("route", gen["dir"], 0)) is None
         task_ids = {
             rg["file"].split("-")[1]
             for rg in gen["regions"]
@@ -4202,7 +4207,10 @@ class TestRegionBloom:
         assert os.path.exists(os.path.join(raw["dir"], kv.REGIONS_FILE))
 
         # (b) point get: manifest rows loaded == regions routed (1),
-        # strictly fewer than regions_total — the scale pin
+        # strictly fewer than regions_total — the scale pin. The fold
+        # primed the read cache with its generation, so only a COLD get
+        # shows what the manifest read costs
+        kv._READ_CACHE.clear()
         out = kv.get_store_rows(opts, [{"k": 50}])
         assert out[0] == {"k": 50, "v": 50.0}
         stats = kv.last_multiget_stats()

@@ -368,3 +368,97 @@ def test_minor_fold_keeps_carried_region_entries(tmp_path):
     got = kv.last_multiget_stats()
     assert got["files_read"] == 3
     assert got["files_cached"] == 3
+
+
+def _count_listings(monkeypatch) -> dict:
+    """Count calls of ``kvstore._log_seqs``, the only WAL listing."""
+    calls = {"n": 0}
+    real = kv._log_seqs
+
+    def counting(log_dir):
+        calls["n"] += 1
+        return real(log_dir)
+
+    monkeypatch.setattr(kv, "_log_seqs", counting)
+    return calls
+
+
+@pytest.mark.parametrize("n_entries", [20, 200])
+def test_get_and_commit_never_list_the_wal(tmp_path, monkeypatch, n_entries):
+    """A crash-free get or commit costs the same at 10x the WAL
+    entries: none lists the log, before or after a fold. A torn commit
+    is still replayed (warm, and cold after the cache is cleared), a
+    number taken behind the writer's back is claimed past, and a
+    truncate resumes numbering above the floor."""
+    opts = _store(tmp_path, "single", n=64, region_size=16)
+    for i in range(n_entries):
+        kv.put_rows_to_store(opts, [{"k": i % 64, "v": float(i), "s": "w"}])
+    log = kv.changelog_dir(opts)
+    calls = _count_listings(monkeypatch)
+    for fold in (False, True):
+        if fold:
+            kv.compact_store(opts)
+        calls["n"] = 0
+        kv.get_store_rows(opts, [{"k": 1}, {"k": 63}])
+        kv.put_rows_to_store(opts, [{"k": 2, "v": -2.0, "s": "p"}])
+        kv.delete_from_store(opts, [3])
+        assert kv.get_store_rows(opts, [{"k": 2}, {"k": 3}]) == [
+            {"k": 2, "v": -2.0, "s": "p"}, None,
+        ]
+        assert calls["n"] == 0
+
+    head = n_entries + 4
+    for cold in (False, True):  # torn: logged, never published
+        head += 1
+        tbl = kv._mutation_table(opts, [{"k": 7, "v": float(head), "s": "t"}])
+        assert kv._append_changelog(opts, tbl) == head
+        if cold:
+            kv._READ_CACHE.clear()
+        assert kv.get_store_rows(opts, [{"k": 7}]) == [
+            {"k": 7, "v": float(head), "s": "t"}
+        ]
+        assert kv._overlay_footer(kv.overlay_path(opts))[0] == head
+
+    real_recover = kv._recover_overlay_locked
+
+    def another_writer_claims(o):
+        out = real_recover(o)
+        assert kv.storage.claim(kv._log_entry(log, out[0] + 1))
+        return out
+
+    monkeypatch.setattr(kv, "_recover_overlay_locked", another_writer_claims)
+    kv.put_rows_to_store(opts, [{"k": 8, "v": 8.5, "s": "c"}])
+    monkeypatch.setattr(kv, "_recover_overlay_locked", real_recover)
+    assert os.path.getsize(kv._log_entry(log, head + 1)) == 0  # untouched
+    assert kv._overlay_footer(kv.overlay_path(opts))[0] == head + 2
+
+    kv.truncate_overlay(opts)
+    assert kv.changelog_floor(opts) == head + 2
+    calls["n"] = 0
+    kv.put_rows_to_store(opts, [{"k": 9, "v": 9.5, "s": "r"}])
+    assert calls["n"] == 0
+    assert kv._log_seqs(log) == [head + 3]
+    assert kv.get_store_rows(opts, [{"k": 9}, {"k": 8}]) == [
+        {"k": 9, "v": 9.5, "s": "r"}, {"k": 8, "v": 8.0, "s": "s8"},
+    ]
+
+
+def test_caught_up_feed_poll_never_lists_the_wal(tmp_path, monkeypatch):
+    """A change-feed drain that is caught up polls by one stat and one
+    floor read, never a listing of the log; a consumer whose next
+    commit was pruned still fails loudly, naming the earliest one
+    left."""
+    opts = _store(tmp_path, "single")
+    for i in range(4):
+        kv.put_rows_to_store(opts, [{"k": i, "v": -1.0, "s": "f"}])
+    reader = kv.KVChangesStreamReader(opts)
+    calls = _count_listings(monkeypatch)
+    for _ in range(5):
+        rows, off = reader.read({"seq": 4})
+        assert off == {"seq": 4} and list(rows) == []
+    assert calls["n"] == 0
+    kv.prune_changelog(opts, 2)
+    with pytest.raises(ValueError, match="pruned.*earliest still available is 3"):
+        reader.read({"seq": 1})
+    rows, off = reader.read({"seq": 2})
+    assert off == {"seq": 3} and len(list(rows)) == 1

@@ -85,6 +85,14 @@ def test_fold_publish_detects_a_same_size_commit(tmp_path):
     with kv._overlay_lock(opts):
         out = kv._publish_generation(opts, snap, built, verify=True)
     assert out["compacted"] is False
+    # the discarded build primed nothing
+    assert kv._READ_CACHE.get(("starts", built["dir"])) is None
+    assert kv._READ_CACHE.get(("route", built["dir"], 0)) is None
+    held = [value for value, _ in kv._READ_CACHE._entries.values()]
+    assert built["written"] and not any(
+        getattr(e, "table", None) is t
+        for t in built["written"].values() for e in held
+    )
     assert _get(opts, [1]) == [{"k": 1, "v": 20.0}]
 
 
@@ -137,6 +145,29 @@ def test_multiget_stats_report_cache_hits(tmp_path):
     assert _get(opts, [2, 20]) == [{"k": 2, "v": 22.0}, {"k": 20, "v": 20.0}]
     s = kv.last_multiget_stats()
     assert s["overlay_cached"] is True and s["files_read"] == 1
+
+
+@pytest.mark.parametrize("fold", ["first", "minor", "major"])
+def test_fold_writes_its_generation_through(tmp_path, fold):
+    """A driver-side fold leaves the generation it published warm: the
+    next get reads every file and manifest row from the cache (a minor
+    fold's carries keep the entries the previous fold primed), and each
+    primed region entry holds exactly the rows of its file."""
+    opts = _store(tmp_path, f"through_{fold}")
+    kv.put_rows_to_store(opts, [{"k": 1, "v": 10.0}])
+    if fold != "first":
+        kv.compact_store(opts)
+        kv.put_rows_to_store(opts, [{"k": 50, "v": 5.0}])
+    stats = kv.compact_store(opts, major=fold == "major")
+    assert stats["compacted"] and not stats["distributed"]
+    assert _get(opts, [1, 20, 50, 99])[0] == {"k": 1, "v": 10.0}
+    s = kv.last_multiget_stats()
+    assert s["files_cached"] == s["files_read"] == s["regions_routed"] == 4
+    assert s["manifest_rows_loaded"] == 0
+    gen = kv._resolve_generation(opts)
+    for i in range(len(gen["regions"])):
+        path, _, key = kv._READ_CACHE.get(("route", gen["dir"], i))
+        assert kv._READ_CACHE.get(key).rows() == pq.read_table(path).to_pylist()
 
 
 def test_scan_warms_point_gets(tmp_path):
