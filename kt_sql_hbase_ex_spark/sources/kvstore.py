@@ -60,22 +60,27 @@ point gets, scans and commits:
 - the built stores scans plan from (:func:`_open_store`): the base
   with the overlay merged, TTL applied and, for ``indexOn``, the
   secondary index derived, one entry per store config;
-- the base fingerprint that names the store's state dirs
-  (:func:`_base_fingerprint`), checked against one stat of the base.
+- the base fingerprint that names the store's state dirs and the base
+  schema every mutation is typed by (:func:`_base_memo`), checked
+  against one stat of the base.
 
 A committed state's identity is never a stat signature: a same-size
 republish inside one mtime tick keeps ``(mtime, size)``. So the token
 also keys the built stores, the fold's overlay check and index
 freshness (:func:`_base_signature`), and a generation is named by the
-dir its pointer holds. Still read on every call, because they ARE the
-validation: the generation pointer (it names the live dir), the
-overlay footer (the token) and one stat of the WAL entry just past
-the overlay's watermark (crash recovery replays from it; the log is
-listed only when it exists). One budget covers all of it: the
-module constant ``_READ_CACHE_BYTES``, charged in approximate decoded
-bytes with LRU eviction, so an entry larger than the whole budget is
-not held. Cached rows are shared: what leaves the module is a copy,
-and a built store's rows are only ever read.
+dir its pointer holds. The validation itself — the generation pointer
+(it names the live dir) and the overlay footer (the token) — is
+pinned by :func:`storage.read_pinned`: one stat per call against a
+descriptor held on the inode that was parsed, and every publish
+writes through, so a warm get or commit opens neither. Plus one stat
+of the WAL entry just past the overlay's watermark (crash recovery
+replays from it; the log is listed only when it exists). Pins sit
+outside the byte budget (they are bounded by count). One budget
+covers all of the rest: the module constant ``_READ_CACHE_BYTES``,
+charged in approximate decoded bytes with LRU eviction, so an entry
+larger than the whole budget is not held. Cached rows are shared:
+what leaves the module is a copy, and a built store's rows are only
+ever read.
 """
 
 from __future__ import annotations
@@ -854,10 +859,9 @@ def _mutation_table(options, rows: list):
     an int put into a double column would read back as an int until a
     fold rewrote it as the base's double."""
     import pyarrow as pa
-    import pyarrow.parquet as pq
 
     opts = {k.lower(): v for k, v in dict(options).items()}
-    base = pq.read_schema(os.path.realpath(opts["path"]))
+    base = _base_schema(opts)
     extra = [VERSION_TS] if _versions_of(opts) > 1 else []
     schema = pa.schema(
         [pa.field(c, base.field(c).type) for c in opts["columns"].split(",")]
@@ -1011,12 +1015,8 @@ def get_store_rows(options, keys: list) -> list:
             {c: v[0].get(c) for c in columns} if v else None
             for v in get_kv_versions(opts, keys, max_versions=1)
         ]
-    # one footer read serves the recovery probe and the cache lookup
-    opath = overlay_path(opts)
-    footer = _overlay_footer(opath)
-    if recover_overlay(opts, footer):
-        footer = _FOOTER_UNREAD
-    entry, overlay_cached = _overlay_entry(opath, footer)
+    recover_overlay(opts)
+    entry, overlay_cached = _overlay_entry(overlay_path(opts))
     rks = [_rowkey_of(k, key_cols) for k in keys]
     live = _live_rows(opts, dict(zip(rks, keys)), entry)
     _MULTIGET_STATS.value["overlay_cached"] = overlay_cached
@@ -1074,9 +1074,8 @@ def increment_store(options, increments: list) -> list:
         specs.append(({c: spec[c] for c in key_cols}, deltas))
 
     import pyarrow as pa
-    import pyarrow.parquet as pq
 
-    base_sch = pq.read_schema(os.path.realpath(opts["path"]))
+    base_sch = _base_schema(opts)
     int_cols = {
         c for c in columns if pa.types.is_integer(base_sch.field(c).type)
     }
@@ -1244,9 +1243,8 @@ def append_store(options, appends: list) -> list:
     if not appends:
         return []
     import pyarrow as pa
-    import pyarrow.parquet as pq
 
-    base_sch = pq.read_schema(os.path.realpath(opts["path"]))
+    base_sch = _base_schema(opts)
     str_cols = {
         c for c in columns
         if pa.types.is_string(base_sch.field(c).type)
@@ -1720,9 +1718,7 @@ def _open_store(options) -> KVStore:
     region_size = int(options.get("regionsize", "512"))
     st = os.stat(path)
     opath = overlay_path(options)
-    footer = _overlay_footer(opath)
-    if recover_overlay(options, footer):  # serve WAL-recovered state
-        footer = _overlay_footer(opath)
+    recover_overlay(options)  # serve WAL-recovered state
     versioned = _versions_of(options) > 1
     key = (
         "store", path, opath, key_col, columns, region_size, index_on,
@@ -1733,12 +1729,15 @@ def _open_store(options) -> KVStore:
     # under the other's identity
     gen = _resolve_generation(options)
     # the overlay's publish token, not a stat: a same-size republish
-    # inside one mtime tick must not serve the previous state. The TTL
+    # inside one mtime tick must not serve the previous state. It is
+    # read apart from the merged overlay below; a commit landing in
+    # between only files newer rows under the older token, which no
+    # later read can present again (tokens never repeat). The TTL
     # cutoff rides in the SIGNATURE, not the key: a moving wall-clock
     # cutoff then REPLACES the entry instead of growing one per tick
     cutoff = _ttl_cutoff(options)
     signature = (
-        st.st_mtime_ns, st.st_size, _overlay_ident(opath, footer),
+        st.st_mtime_ns, st.st_size, _overlay_ident(opath),
         tuple(_gen_signature(options, gen)), str(cutoff),
     )
     hit = _READ_CACHE.get(key)
@@ -1758,7 +1757,7 @@ def _open_store(options) -> KVStore:
         rows = _versioned_latest_rows(opts_l, gen)
     else:
         rows = _base_rows(options, gen, columns)
-        entry, _ = _overlay_entry(opath, footer)
+        entry, _ = _overlay_entry(opath)
         if entry is not None:
             merged = {_rowkey_of(r, key_cols): r for r in rows}
             for r in entry.rows():
@@ -1925,7 +1924,6 @@ def _store_schema(options) -> StructType:
     index), whose column types every fold, bulk load and restore
     writes its region files with."""
     import pyarrow.dataset as pads
-    import pyarrow.parquet as pq
     from pyspark.sql.types import StringType, StructField
 
     opts = {k.lower(): v for k, v in dict(options).items()}
@@ -1934,7 +1932,7 @@ def _store_schema(options) -> StructType:
     if os.path.isdir(path):
         arrow = pads.dataset(path, format="parquet").schema
     else:
-        arrow = pq.read_schema(path)
+        arrow = _base_schema(opts)
     index_on = opts.get("indexon")
     if index_on:
         key_cols = tuple(opts["keycol"].split(","))
@@ -2204,9 +2202,6 @@ _READ_CACHE_BYTES = 256 << 20
 #: the process's read cache — see the module docstring's "Read cache"
 _READ_CACHE = storage.LRUCache(_READ_CACHE_BYTES)
 
-#: "footer not read yet" — distinct from None, the absent overlay
-_FOOTER_UNREAD = object()
-
 
 def _rows_bytes(tbl) -> int:
     """Approximate memory of ``tbl`` decoded into Python row dicts."""
@@ -2226,14 +2221,18 @@ def _footer_fields(meta) -> tuple:
     )
 
 
-def _overlay_footer(opath: str):
-    """One read of the overlay's parquet footer: ``(applied_seq,
-    token)``, or None when no overlay exists. Readers read it once per
-    call and thread it through recovery and the cache lookup."""
+def _parse_footer(f) -> tuple:
     import pyarrow.parquet as pq
 
+    return _footer_fields(pq.read_schema(f).metadata)
+
+
+def _overlay_footer(opath: str):
+    """The overlay's parquet footer fields ``(applied_seq, token)``,
+    or None when no overlay exists. Pinned (:func:`storage.read_pinned`;
+    every publish writes through), so a warm call is one stat."""
     try:
-        return _footer_fields(pq.read_schema(opath).metadata)
+        return storage.read_pinned(opath, _parse_footer)
     except FileNotFoundError:
         return None
 
@@ -2245,12 +2244,11 @@ def _overlay_applied_seq(opath: str):
     return footer[0] if footer else None
 
 
-def _overlay_ident(opath: str, footer=_FOOTER_UNREAD):
+def _overlay_ident(opath: str):
     """The committed overlay's identity: its publish token, or
     inode + mtime + size for a legacy overlay without one; None when
     absent."""
-    if footer is _FOOTER_UNREAD:
-        footer = _overlay_footer(opath)
+    footer = _overlay_footer(opath)
     if footer is None:
         return None
     if footer[1] is not None:
@@ -2338,7 +2336,7 @@ class _TableEntry:
         return [decoded[i] for i in positions]
 
 
-def _overlay_entry(opath: str, footer=_FOOTER_UNREAD) -> tuple:
+def _overlay_entry(opath: str) -> tuple:
     """``(entry, cached)``: the committed overlay as a shared
     :class:`_TableEntry` (None when absent) and whether the cache
     served it. A hit needs the footer's token to match the cached
@@ -2348,8 +2346,7 @@ def _overlay_entry(opath: str, footer=_FOOTER_UNREAD) -> tuple:
     import pyarrow.parquet as pq
 
     key = ("overlay", opath)
-    if footer is _FOOTER_UNREAD:
-        footer = _overlay_footer(opath)
+    footer = _overlay_footer(opath)
     if footer is None:
         _READ_CACHE.pop(key)
         return None, False
@@ -2367,10 +2364,10 @@ def _overlay_entry(opath: str, footer=_FOOTER_UNREAD) -> tuple:
     return entry, False
 
 
-def _read_overlay(opts, footer=_FOOTER_UNREAD) -> list:
+def _read_overlay(opts) -> list:
     """Fresh copies of the committed overlay's rows ([] when absent) —
     the one overlay reader every commit, fold and open path uses."""
-    entry, _ = _overlay_entry(overlay_path(opts), footer)
+    entry, _ = _overlay_entry(overlay_path(opts))
     return [dict(r) for r in entry.rows()] if entry is not None else []
 
 
@@ -2499,14 +2496,15 @@ def _publish_overlay(opts, opath: str, tbl, applied: int) -> None:
     import pyarrow.parquet as pq
 
     tbl = _stamp_applied(tbl, applied)
-    with storage.publish(opath) as staging:
+    footer = _footer_fields(tbl.schema.metadata)
+    with storage.publish(opath, pin=footer) as staging:
         pq.write_table(tbl, staging)
     entry = _TableEntry(tbl)
     _READ_CACHE.put(("overlay", opath), entry, entry.nbytes)
     _invalidate_dependent_indexes(opts)
 
 
-def recover_overlay(options, footer=_FOOTER_UNREAD) -> int:
+def recover_overlay(options) -> int:
     """WAL recovery: replay any logged-but-unapplied commits into the
     overlay. The write path appends the commit-log entry BEFORE
     publishing the overlay (write-ahead), so a crash in between leaves
@@ -2515,22 +2513,22 @@ def recover_overlay(options, footer=_FOOTER_UNREAD) -> int:
     watermark in sequence order (puts upsert, tombstones delete —
     exactly the overlay merge semantics) and republishing the overlay
     at the log head. Returns the number of commits replayed (0 on the
-    crash-free path: at most one footer read and one stat, whatever
-    the log's length; a reader that already read the footer passes it
-    as ``footer``). Overlays predating the watermark are taken as
+    crash-free path: one stat of the overlay, whose footer is pinned,
+    and one of the WAL entry past its watermark, whatever the log's
+    length). Overlays predating the watermark are taken as
     consistent at the current head (no spurious replay; the watermark
     ships with every write from now on)."""
     opts = {k.lower(): v for k, v in dict(options).items()}
-    # lock-free fast path: the crash-free open (every read) costs one
-    # footer read + one stat, no lock traffic. The race is benign: a
-    # concurrent writer holding the lock replays/publishes itself.
-    if not _recovery_probe(opts, footer)[1]:
+    # lock-free fast path: the crash-free open (every read) costs two
+    # stats, no lock traffic. The race is benign: a concurrent writer
+    # holding the lock replays/publishes itself.
+    if not _recovery_probe(opts)[1]:
         return 0
     with _overlay_lock(opts):
         return _recover_overlay_locked(opts)[1]
 
 
-def _recovery_probe(opts, footer=_FOOTER_UNREAD) -> tuple:
+def _recovery_probe(opts) -> tuple:
     """``(applied, unapplied)``: the overlay's applied watermark and the
     commit-log entries past it. The log has no gaps above the
     watermark — every claim takes the next free number above it (or
@@ -2540,8 +2538,7 @@ def _recovery_probe(opts, footer=_FOOTER_UNREAD) -> tuple:
     ``applied + 1`` does: crash-free, the probe is that one stat, and
     only a hit lists the log."""
     log_dir = changelog_dir(opts)
-    if footer is _FOOTER_UNREAD:
-        footer = _overlay_footer(overlay_path(opts))
+    footer = _overlay_footer(overlay_path(opts))
     if footer is None:
         if not os.path.isdir(log_dir):
             return 0, []  # never committed: no floor, nothing logged
@@ -2636,28 +2633,51 @@ def _gen_root(options) -> str:
     return os.path.join(_store_state_root(opts, "gen"), _base_fingerprint(opts))
 
 
-def _base_fingerprint(opts) -> str:
-    """Base-file identity (real path + mtime + size + appId namespace)
-    — the key under which all derived mutable state (overlay, WAL,
-    generations, snapshots) namespaces itself. Memoized in the read
-    cache per absolute ``path`` and ``appId``, and valid while one
+def _base_memo(opts) -> dict:
+    """What the store derives from its base file, memoized in the read
+    cache per absolute ``path`` and ``appId`` and valid while one
     ``os.stat`` of the base still gives the same device, inode, size
-    and mtime: a regenerated base re-derives it, orphaning that state."""
+    and mtime: ``"fingerprint"`` always, ``"schema"`` once
+    :func:`_base_schema` has read it."""
     import hashlib
 
     ns = opts.get("appid", "shared")
     st = os.stat(opts["path"])
     ident = (st.st_dev, st.st_ino, st.st_size, st.st_mtime_ns)
-    key = ("fingerprint", os.path.abspath(opts["path"]), ns)
+    key = ("base", os.path.abspath(opts["path"]), ns)
     hit = _READ_CACHE.get(key)
     if hit is not None and hit[0] == ident:
         return hit[1]
     path = os.path.realpath(opts["path"])
-    fp = hashlib.sha256(
+    memo = {"fingerprint": hashlib.sha256(
         f"{path}|{st.st_mtime_ns}|{st.st_size}|{ns}".encode()
-    ).hexdigest()[:16]
-    _READ_CACHE.put(key, (ident, fp), 300)
-    return fp
+    ).hexdigest()[:16]}
+    _READ_CACHE.put(key, (ident, memo), 300)
+    return memo
+
+
+def _base_fingerprint(opts) -> str:
+    """Base-file identity (real path + mtime + size + appId namespace)
+    — the key under which all derived mutable state (overlay, WAL,
+    generations, snapshots) namespaces itself; a regenerated base
+    re-derives it (:func:`_base_memo`), orphaning that state."""
+    return _base_memo(opts)["fingerprint"]
+
+
+def _base_schema(opts):
+    """The base parquet's Arrow schema, which types every mutation
+    (:func:`_mutation_table`) and a scan's relation
+    (:func:`_store_schema`); read once per base identity
+    (:func:`_base_memo`), not once per commit or scan."""
+    memo = _base_memo(opts)
+    schema = memo.get("schema")
+    if schema is None:
+        import pyarrow.parquet as pq
+
+        schema = memo["schema"] = pq.read_schema(
+            os.path.realpath(opts["path"])
+        )
+    return schema
 
 
 #: sharded region-manifest file inside the generation dir (underscore
@@ -2879,17 +2899,16 @@ def _shard_region_manifest(pointer: dict, gen_dir: str) -> dict:
 
 
 def _resolve_generation(options) -> dict | None:
-    """The live generation (pointer contents) or None when the store
-    still serves the pristine fixture base. Sharded-manifest pointers
-    come back as a lazy :class:`_GenManifest`."""
-    import json
-
-    try:
-        with open(os.path.join(_gen_root(options), GEN_POINTER)) as f:
-            data = json.load(f)
-    except (FileNotFoundError, ValueError):
-        return None
-    if "regions_file" in data:
+    """The live generation (pointer contents, a fresh dict) or None
+    when the store still serves the pristine fixture base. The pointer
+    is read through :func:`storage.read_pointer`, so a warm call opens
+    nothing and a malformed pointer raises instead of silently serving
+    the fixture. Sharded-manifest pointers come back as a lazy
+    :class:`_GenManifest`."""
+    data = storage.read_pointer(
+        os.path.join(_gen_root(options), GEN_POINTER), default=None
+    )
+    if data is not None and "regions_file" in data:
         return _GenManifest(data)
     return data
 
@@ -2902,9 +2921,7 @@ def _gen_signature(options, gen=_GEN_UNRESOLVED) -> list:
     it.) A caller that already resolved the pointer passes it as
     ``gen``."""
     if gen is _GEN_UNRESOLVED:
-        gen = storage.read_pointer(
-            os.path.join(_gen_root(options), GEN_POINTER), default=None
-        )
+        gen = _resolve_generation(options)
     return [gen["gen"], gen["dir"]] if gen is not None else [0, 0]
 
 
@@ -3171,8 +3188,8 @@ def _fold_snapshot(opts, major: bool = False) -> dict | None:
     fold later, giving in-flight readers a full cycle to drain."""
     applied, _ = _recover_overlay_locked(opts)
     opath = overlay_path(opts)
-    footer = _overlay_footer(opath)
-    if footer is None and not major:
+    ident = _overlay_ident(opath)
+    if ident is None and not major:
         return None
     root = _gen_root(opts)
     os.makedirs(root, exist_ok=True)
@@ -3180,14 +3197,11 @@ def _fold_snapshot(opts, major: bool = False) -> dict | None:
     # deferred GC: sweep superseded + crash-orphaned generations now
     _gc_generations(root, keep=cur["dir"] if cur else None)
 
-    if footer is not None:
-        overlay_rows = _read_overlay(opts, footer)
-        ident = _overlay_ident(opath, footer)
-    else:
-        # major pass with nothing pending: recovery just ran, so an
-        # absent overlay means every WAL entry is folded — the
-        # watermark is the live generation's (or the floor, pristine)
-        overlay_rows, ident = [], None
+    # under the overlay lock no commit can publish between the
+    # identity read and the rows read. With no overlay (a major pass
+    # with nothing pending) recovery just ran, so every WAL entry is
+    # folded — the watermark is the live generation's (or the floor)
+    overlay_rows = _read_overlay(opts) if ident is not None else []
     return {
         "overlay_rows": overlay_rows,
         "applied": applied,
@@ -4377,7 +4391,7 @@ def _publish_generation(opts, snap, built, verify: bool) -> dict:
     recovery here — a torn commit (logged, not yet applied) leaves the
     overlay stat unchanged, the publish proceeds, and the next
     open/commit replays that entry against the NEW generation's
-    carried watermark (``_unapplied_seqs`` anchors at
+    carried watermark (``_recovery_probe`` anchors at
     ``gen.applied_seq`` when the overlay is absent)."""
     import shutil
 
@@ -4764,10 +4778,8 @@ def _bulk_snapshot(opts) -> dict:
     os.makedirs(root, exist_ok=True)
     cur = _resolve_generation(opts)
     _gc_generations(root, keep=cur["dir"] if cur else None)
-    opath = overlay_path(opts)
-    footer = _overlay_footer(opath)
-    overlay_rows = _read_overlay(opts, footer)
-    ident = _overlay_ident(opath, footer)
+    overlay_rows = _read_overlay(opts)
+    ident = _overlay_ident(overlay_path(opts))
     return {
         "overlay_rows": overlay_rows,
         "overlay_ident": ident,

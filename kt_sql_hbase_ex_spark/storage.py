@@ -24,9 +24,11 @@ a file-backed store gets the same guarantees from four primitives:
 
 Helpers sit beside them: :func:`read_pointer` / :func:`write_pointer`
 (and their ``layout.json`` forms) for the small JSON pointer files that
-name a store's live generation; :func:`sweep_orphans`, which a writer
-runs under its lock to remove never-published generation dirs and torn
-staging left by a crash, and :func:`drop_dirs`, the deferred GC of
+name a store's live generation; :func:`read_pinned`, which memoizes
+what a reader parsed from a published file (below);
+:func:`sweep_orphans`, which a writer runs under its lock to remove
+never-published generation dirs and torn staging left by a crash, and
+:func:`drop_dirs`, the deferred GC of
 superseded generations; :func:`writer_lock`, the fail-fast lock every
 substrate store keeps at its root; and :class:`LRUCache`, the bounded
 in-process cache readers keep decoded immutable objects in.
@@ -37,6 +39,26 @@ and pyarrow's directory listings; the uuid makes it unique per process
 and attempt; and it never ends with the final name's suffix, so suffix
 parsers (the WAL's ``*.parquet`` sequence listing) skip it. One glob,
 ``_tmp.*``, matches every torn staging object.
+
+Pinned reads: a file published by rename is immutable under its
+inode, so what a reader parsed from it stays true while the path still
+names that inode. :func:`read_pinned` keeps the parsed value with an
+open descriptor on the inode it parsed, and validates it with one
+``os.stat`` per call: same device, inode, size and mtime means the same
+bytes. The held descriptor is what makes that exact: while it is open
+the kernel cannot reuse the inode number, so a republish — even one of
+the same size inside one mtime tick — always shows as a new inode.
+:func:`publish` writes through: given ``pin=value``, it opens the
+STAGING file before the rename and pins that inode with the value the
+writer already holds, so the read after a publish is warm too, and a
+racing publisher can only cause a miss, never a wrong pin. The
+invariant holds only for files that are replaced by rename and never
+rewritten in place (size and mtime catch most in-place rewrites, but
+nothing promises it). Scope: local POSIX file systems; on shared
+storage a stat is as coherent as the mount makes it. The table holds
+at most :data:`PIN_LIMIT` files; eviction closes the descriptor, a
+missing path drops its pin, and parsed values are shared, so ``parse``
+must return an immutable value (or callers copy it).
 
 Flush policy: nothing here calls ``fsync`` yet. :func:`publish` is the
 one place a durable publish (fsync the staged bytes, rename, fsync the
@@ -67,6 +89,9 @@ WRITER_LOCK = "writer.lock"
 
 #: glob matching every staging object :func:`staging_path` names
 STAGING_GLOB = "_tmp.*"
+
+#: most files :func:`read_pinned` holds open at once
+PIN_LIMIT = 256
 
 
 class LockConflict(RuntimeError):
@@ -186,20 +211,96 @@ def _discard(path: str) -> None:
             pass
 
 
+_ABSENT = object()
+
+
 @contextlib.contextmanager
-def publish(final: str):
+def publish(final: str, pin=_ABSENT):
     """Yield a staging path; when the ``with`` body completes, rename
     it onto ``final`` in one atomic step. The body writes a file or
     creates a directory there. On any error the staging object is
     removed. Publishing a directory onto an existing non-empty one
-    raises ``OSError`` — the loser of a publish race finds out."""
+    raises ``OSError`` — the loser of a publish race finds out.
+
+    With ``pin``, the published file is pinned for :func:`read_pinned`
+    with ``pin`` as its parsed value (write-through): the descriptor
+    is opened on the staging file before the rename, never on
+    ``final`` after it, so a publish racing this one leaves a pin the
+    next read finds stale, never one it takes for current."""
     staging = staging_path(final)
     try:
         yield staging
-        os.replace(staging, final)
+        fd = None if pin is _ABSENT else os.open(staging, os.O_RDONLY)
+        try:
+            os.replace(staging, final)
+        except BaseException:
+            if fd is not None:
+                os.close(fd)
+            raise
     except BaseException:
         _discard(staging)
         raise
+    if fd is not None:
+        _pin(final, fd, pin)
+
+
+# --- pinned reads --------------------------------------------------------
+
+#: path -> (held fd, identity of the inode it holds, parsed value)
+_PINS: OrderedDict = OrderedDict()
+_PINS_LOCK = threading.Lock()
+
+
+def _ident(st) -> tuple:
+    return st.st_dev, st.st_ino, st.st_size, st.st_mtime_ns
+
+
+def _pin(path: str, fd: int, value) -> None:
+    """Pin ``value`` as the parse of the inode ``fd`` holds, under
+    ``path``; closes the descriptors it replaces or evicts."""
+    entry = (fd, _ident(os.fstat(fd)), value)
+    with _PINS_LOCK:
+        old = _PINS.pop(path, None)
+        _PINS[path] = entry
+        drop = [old] if old is not None else []
+        while len(_PINS) > PIN_LIMIT:
+            drop.append(_PINS.popitem(last=False)[1])
+    for held, _, _ in drop:
+        os.close(held)
+
+
+def _unpin(path: str) -> None:
+    with _PINS_LOCK:
+        old = _PINS.pop(path, None)
+    if old is not None:
+        os.close(old[0])
+
+
+def read_pinned(path: str, parse):
+    """``parse(f)`` of the file at ``path`` (``f`` open for binary
+    reading), memoized while ``path`` names the inode that was parsed
+    — see "Pinned reads" above. A warm call is one ``os.stat``. A
+    missing file raises ``FileNotFoundError`` and drops its pin. Only
+    for files published by rename (:func:`publish`)."""
+    try:
+        st = os.stat(path)
+    except FileNotFoundError:
+        _unpin(path)
+        raise
+    with _PINS_LOCK:
+        hit = _PINS.get(path)
+        if hit is not None and hit[1] == _ident(st):
+            _PINS.move_to_end(path)
+            return hit[2]
+    fd = os.open(path, os.O_RDONLY)
+    try:
+        with open(fd, "rb", closefd=False) as f:
+            value = parse(f)
+    except BaseException:
+        os.close(fd)
+        raise
+    _pin(path, fd, value)
+    return value
 
 
 def claim(path: str, write=None) -> bool:
@@ -232,25 +333,28 @@ def claim(path: str, write=None) -> bool:
 
 # --- pointers ------------------------------------------------------------
 
-_ABSENT = object()
-
 
 def layout_path(root: str) -> str:
     return os.path.join(root, LAYOUT)
 
 
+def _read_text(f) -> str:
+    return f.read().decode()
+
+
 def read_pointer(path: str, default=_ABSENT, kind: tuple | None = None):
-    """One snapshot of a JSON pointer file. Resolve it ONCE per
-    operation and thread it through: resolving twice races a concurrent
-    publish. An absent file returns ``default`` (or raises
-    ``FileNotFoundError`` when none is given). ``kind=(tag, name)``
+    """One snapshot of a JSON pointer file, a fresh dict per call; the
+    file's text is pinned (:func:`read_pinned`), so a warm read opens
+    nothing. Resolve it ONCE per operation and thread it through:
+    resolving twice races a concurrent publish. An absent file returns
+    ``default`` (or raises ``FileNotFoundError`` when none is given);
+    unparsable content raises ``ValueError``. ``kind=(tag, name)``
     guards against running one store family's maintenance on another's
     root: the pointer's ``kind`` field must equal ``tag`` (a pointer
     without the field reads as ``"pq"``, the one family that predates
     it), else ``ValueError`` naming the store as a ``name`` store."""
     try:
-        with open(path) as f:
-            ptr = json.load(f)
+        ptr = json.loads(read_pinned(path, _read_text))
     except FileNotFoundError:
         if default is _ABSENT:
             raise
@@ -264,10 +368,12 @@ def read_pointer(path: str, default=_ABSENT, kind: tuple | None = None):
 
 
 def write_pointer(path: str, ptr: dict) -> None:
-    """Publish a JSON pointer file (:func:`publish`)."""
-    with publish(path) as staging:
+    """Publish a JSON pointer file (:func:`publish`), pinned with the
+    text it wrote."""
+    text = json.dumps(ptr)
+    with publish(path, pin=text) as staging:
         with open(staging, "w") as f:
-            json.dump(ptr, f)
+            f.write(text)
 
 
 def read_layout(root: str, default=_ABSENT, kind: tuple | None = None):

@@ -358,3 +358,217 @@ def test_parquet_column_max_from_footer_statistics(tmp_path):
         pq.write_table(tbl, path, row_group_size=10, write_statistics=stats)
         got = kv._parquet_column_max(path, "ts")
         assert got == want and got.isoformat() == want.isoformat()
+
+
+# --- pinned footers and pointers (storage.read_pinned) -------------------
+
+_SAME_SIZE_CHILD = """
+import json, os, sys
+from kt_sql_hbase_ex_spark.sources import kvstore as kv
+opts = json.loads(sys.argv[1])
+opath = kv.overlay_path(opts)
+st = os.stat(opath)
+kv.put_rows_to_store(opts, [{"k": 1, "v": 20.0}])
+assert os.stat(opath).st_size == st.st_size
+os.utime(opath, ns=(st.st_atime_ns, st.st_mtime_ns))
+# retention drops the entry, so no WAL replay can mask a stale footer
+assert kv.prune_changelog(opts, kv._overlay_applied_seq(opath)) == 2
+"""
+
+
+def _fds_on(prefix: str) -> list:
+    """This process's open descriptors whose target starts with
+    ``prefix`` (a deleted file's target ends with ' (deleted)')."""
+    out = []
+    for fd in os.listdir("/proc/self/fd"):
+        try:
+            target = os.readlink(f"/proc/self/fd/{fd}")
+        except OSError:
+            continue
+        if target.startswith(prefix):
+            out.append(target)
+    return out
+
+
+def test_another_process_same_size_republish_is_not_stale(tmp_path):
+    """Another process republishes a same-size overlay, resets its
+    mtime and prunes the WAL: the warm pinned footer must not serve
+    the previous state (the held descriptor keeps the old inode number
+    from being reused, so the new file always shows as a new inode)."""
+    opts = _store(tmp_path, "pin_xproc")
+    kv.put_rows_to_store(opts, [{"k": 1, "v": 10.0}])
+    for _ in range(2):  # warm: footer pinned, overlay cached
+        assert _get(opts, [1]) == [{"k": 1, "v": 10.0}]
+    assert kv.last_multiget_stats()["overlay_cached"] is True
+    env = dict(os.environ, PYTHONPATH=REPO)
+    subprocess.run(
+        [sys.executable, "-c", _SAME_SIZE_CHILD, json.dumps(opts)],
+        check=True, env=env, cwd=REPO, timeout=300,
+    )
+    assert _get(opts, [1]) == [{"k": 1, "v": 20.0}]
+    assert {r["k"]: r["v"] for r in kv._open_store(opts).rows}[1] == 20.0
+
+
+def test_fold_drops_the_retired_overlay_pin(tmp_path):
+    """A fold retires the overlay; the next read drops its pin, so no
+    descriptor to the unlinked overlay outlives it."""
+    opts = _store(tmp_path, "pin_fold")
+    opath = kv.overlay_path(opts)
+    kv.put_rows_to_store(opts, [{"k": 1, "v": 10.0}])
+    assert _get(opts, [1]) == [{"k": 1, "v": 10.0}]
+    assert _fds_on(opath) == [opath]  # the write-through pin
+    assert kv.compact_store(opts)["compacted"]
+    assert not os.path.exists(opath)
+    assert _get(opts, [1]) == [{"k": 1, "v": 10.0}]
+    assert _fds_on(opath) == []
+    assert opath not in storage._PINS
+
+
+def test_pins_are_bounded_by_count(tmp_path):
+    """Committing to twice as many stores as the pin bound leaves at
+    most the bound of pinned descriptors open, and every store still
+    reads back its own commit."""
+    n = 2 * storage.PIN_LIMIT
+    stores = []
+    for i in range(n):
+        base = os.path.join(str(tmp_path), f"b{i}.parquet")
+        pq.write_table(pa.table({"k": pa.array([i], pa.int64()),
+                                 "v": pa.array([0.0])}), base)
+        opts = {"path": base, "keycol": "k", "columns": "k,v",
+                "appid": "pin_bound"}
+        kv.put_rows_to_store(opts, [{"k": i, "v": float(i)}])
+        stores.append(opts)
+    assert len(storage._PINS) <= storage.PIN_LIMIT
+    state_root = os.path.dirname(kv.overlay_path(stores[0]))
+    assert len(_fds_on(state_root)) <= storage.PIN_LIMIT
+    for i in (0, n // 2, n - 1):
+        assert _get(stores[i], [i]) == [{"k": i, "v": float(i)}]
+    assert len(_fds_on(state_root)) <= storage.PIN_LIMIT
+    for opts in stores:
+        kv.truncate_overlay(opts)
+
+
+def test_publish_losing_a_race_pins_nothing_wrong(tmp_path, monkeypatch):
+    """A publisher whose rename is overtaken — another publish replaces
+    the file, same size, same mtime, before this one pins — leaves a
+    pin the next read finds stale: it serves the winner's content."""
+    path = str(tmp_path / "POINTER")
+    real_replace = os.replace
+
+    def overtaken(src, dst):
+        real_replace(src, dst)
+        if dst == path:
+            st = os.stat(path)
+            rival = str(tmp_path / "rival")
+            with open(rival, "w") as f:
+                f.write(json.dumps({"gen": 9}))
+            os.utime(rival, ns=(st.st_atime_ns, st.st_mtime_ns))
+            real_replace(rival, dst)
+
+    monkeypatch.setattr(os, "replace", overtaken)
+    storage.write_pointer(path, {"gen": 1})
+    monkeypatch.setattr(os, "replace", real_replace)
+    assert os.stat(path).st_size == len(json.dumps({"gen": 1}))
+    assert storage.read_pointer(path) == {"gen": 9}
+    storage.write_pointer(path, {"gen": 2})  # an unraced publish
+    assert storage.read_pointer(path) == {"gen": 2}
+
+
+def test_read_pointer_hands_out_fresh_dicts(tmp_path):
+    path = str(tmp_path / "layout.json")
+    storage.write_pointer(path, {"gen": 1, "prev": ["a"]})
+    ptr = storage.read_pointer(path)
+    ptr["gen"] = 7
+    ptr["prev"].append("b")
+    assert storage.read_pointer(path) == {"gen": 1, "prev": ["a"]}
+
+
+def test_malformed_generation_pointer_fails_loudly(tmp_path):
+    """An unparsable ``POINTER`` raises instead of silently serving the
+    pristine fixture base (a wrong answer with no error)."""
+    opts = _store(tmp_path, "bad_ptr")
+    kv.put_rows_to_store(opts, [{"k": 1, "v": 10.0}])
+    kv.compact_store(opts)
+    ptr = os.path.join(kv._gen_root(opts), kv.GEN_POINTER)
+    with storage.publish(ptr) as staging:
+        with open(staging, "w") as f:
+            f.write('{"dir": "gen.')
+    with pytest.raises(ValueError):
+        _get(opts, [1])
+    with pytest.raises(ValueError):
+        kv._open_store(opts)
+
+
+class _MetadataReads:
+    """Counts parquet footer reads (``pq.read_schema``) and opens of a
+    generation ``POINTER``."""
+
+    def __init__(self, monkeypatch):
+        self.footers = self.pointers = 0
+        real_schema, real_os_open = pq.read_schema, os.open
+        real_open = open
+
+        def read_schema(*a, **k):
+            self.footers += 1
+            return real_schema(*a, **k)
+
+        def os_open(path, *a, **k):
+            self.pointers += str(path).endswith(kv.GEN_POINTER)
+            return real_os_open(path, *a, **k)
+
+        def builtin_open(path, *a, **k):
+            self.pointers += str(path).endswith(kv.GEN_POINTER)
+            return real_open(path, *a, **k)
+
+        monkeypatch.setattr(pq, "read_schema", read_schema)
+        monkeypatch.setattr(os, "open", os_open)
+        monkeypatch.setattr("builtins.open", builtin_open)
+
+    def reset(self):
+        self.footers = self.pointers = 0
+
+
+def test_warm_gets_and_commits_read_no_metadata(tmp_path, monkeypatch):
+    """A warm get opens no footer and no pointer; a crash-free put
+    reads no overlay or base footer; the get after a commit or a fold
+    is warm too (write-through)."""
+    opts = _store(tmp_path, "meta_count")
+    kv.put_rows_to_store(opts, [{"k": 1, "v": 10.0}])
+    kv.compact_store(opts)
+    kv.put_rows_to_store(opts, [{"k": 2, "v": 22.0}])
+    assert _get(opts, [1, 2, 50])  # warm
+    reads = _MetadataReads(monkeypatch)
+    assert _get(opts, [1, 2, 50]) == [
+        {"k": 1, "v": 10.0}, {"k": 2, "v": 22.0}, {"k": 50, "v": 50.0}
+    ]
+    assert (reads.footers, reads.pointers) == (0, 0)
+    kv.put_rows_to_store(opts, [{"k": 3, "v": 33.0}])
+    kv.delete_from_store(opts, [50])
+    assert reads.footers == 0
+    assert _get(opts, [3, 50]) == [{"k": 3, "v": 33.0}, None]
+    assert (reads.footers, reads.pointers) == (0, 0)
+    assert kv.compact_store(opts)["compacted"]
+    reads.reset()
+    assert _get(opts, [1, 3, 50]) == [
+        {"k": 1, "v": 10.0}, {"k": 3, "v": 33.0}, None
+    ]
+    assert (reads.footers, reads.pointers) == (0, 0)
+
+
+@pytest.mark.parametrize("cold", [False, True])
+def test_torn_commit_is_replayed_under_pins(tmp_path, cold):
+    """A torn commit — a WAL entry at ``applied + 1`` whose overlay was
+    never published — is replayed by the next get, from warm pins and
+    caches and after ``_READ_CACHE.clear()``."""
+    opts = _store(tmp_path, f"torn_{cold}")
+    kv.put_rows_to_store(opts, [{"k": 1, "v": 10.0}])
+    assert _get(opts, [1, 2]) == [{"k": 1, "v": 10.0}, {"k": 2, "v": 2.0}]
+    applied = kv._overlay_applied_seq(kv.overlay_path(opts))
+    seq = kv._append_changelog(
+        opts, kv._mutation_table(opts, [{"k": 2, "v": 222.0}]), after=applied
+    )
+    assert seq == applied + 1
+    if cold:
+        kv._READ_CACHE.clear()
+    assert _get(opts, [1, 2]) == [{"k": 1, "v": 10.0}, {"k": 2, "v": 222.0}]
+    assert kv._overlay_applied_seq(kv.overlay_path(opts)) == seq

@@ -80,6 +80,100 @@ def test_one_overlay_writer():
     assert len(calls) == 1
 
 
+def _calls(tree, name):
+    """Call nodes of ``name`` (``f`` or ``mod.f``) in ``tree``."""
+    return [
+        node for node in ast.walk(tree)
+        if isinstance(node, ast.Call) and ast.unparse(node.func) == name
+    ]
+
+
+def test_pinned_reads_go_through_read_pinned():
+    """A pin is exact only because one primitive holds the descriptor
+    it is validated against: no module outside storage.py touches the
+    pin table, the overlay footer is parsed only by the function
+    handed to ``storage.read_pinned``, and the generation pointer is
+    read only through ``storage.read_pointer``."""
+    for path in sorted(PKG.rglob("*.py")):
+        if path.name != "storage.py":
+            src = path.read_text()
+            assert "_PINS" not in src and "storage._pin" not in src, path
+    tree = ast.parse((PKG / "sources" / "kvstore.py").read_text())
+    fns = {
+        node.name: node for node in ast.walk(tree)
+        if isinstance(node, ast.FunctionDef)
+    }
+    footer_reads = [
+        fn for fn in fns.values()
+        for call in _calls(fn, "pq.read_schema")
+        if "opath" in ast.unparse(call) or "overlay" in ast.unparse(call)
+    ]
+    assert footer_reads == []
+    (parse,) = _calls(fns["_parse_footer"], "pq.read_schema")
+    assert ast.unparse(parse) == "pq.read_schema(f)"
+    assert ast.unparse(_calls(fns["_overlay_footer"], "storage.read_pinned")[0]) \
+        == "storage.read_pinned(opath, _parse_footer)"
+    assert _calls(fns["_resolve_generation"], "storage.read_pointer")
+    pointer_uses = [
+        fn.name for fn in fns.values()
+        if "GEN_POINTER" in ast.unparse(fn)
+    ]
+    assert sorted(pointer_uses) == [
+        "_publish_bulk_generation", "_publish_generation",
+        "_resolve_generation", "truncate_overlay",
+    ]
+
+
+def test_pinned_files_are_published_never_written_in_place():
+    """The overlay and every JSON pointer are replaced by rename
+    (``storage.publish`` / ``write_pointer``), never rewritten in
+    place: an in-place write keeps the inode a pin is validated by.
+    In the package, a parquet write or ``open`` for writing names
+    neither the overlay nor a pointer file except through a staging
+    path, and the generation pointer is published only by
+    ``storage.write_pointer``."""
+    suspects = ("opath", "overlay_path", "POINTER", "layout", "LAYOUT")
+    rogue = []
+    for path in sorted(PKG.rglob("*.py")):
+        rel = path.relative_to(PKG.parent).as_posix()
+        tree = ast.parse(path.read_text(), filename=rel)
+        for node in ast.walk(tree):
+            if not isinstance(node, ast.Call) or not node.args:
+                continue
+            func = ast.unparse(node.func)
+            if func == "open":
+                mode = node.args[1] if len(node.args) > 1 else next(
+                    (k.value for k in node.keywords if k.arg == "mode"), None
+                )
+                if not (isinstance(mode, ast.Constant)
+                        and set(str(mode.value)) & set("wax+")):
+                    continue
+                target = ast.unparse(node.args[0])
+            elif func.endswith("write_table"):
+                target = ast.unparse(node.args[1] if len(node.args) > 1
+                                     else node.args[0])
+            else:
+                continue
+            if any(s in target for s in suspects) and "staging" not in target:
+                rogue.append(f"{rel}:{node.lineno} {func}({target})")
+    assert rogue == [], rogue
+    tree = ast.parse((PKG / "sources" / "kvstore.py").read_text())
+    for fn in ("_publish_generation", "_publish_bulk_generation"):
+        (node,) = [
+            n for n in ast.walk(tree)
+            if isinstance(n, ast.FunctionDef) and n.name == fn
+        ]
+        assert any(
+            "GEN_POINTER" in ast.unparse(c)
+            for c in _calls(node, "storage.write_pointer")
+        ), fn
+    publishes = [
+        ast.unparse(c) for c in _calls(tree, "storage.publish")
+        if "opath" in ast.unparse(c)
+    ]
+    assert publishes == ["storage.publish(opath, pin=footer)"]
+
+
 def test_one_read_cache():
     """``_READ_CACHE``, a bounded ``storage.LRUCache``, is the KV
     store's only module-level cache: no ``*_CACHE`` dict or

@@ -256,6 +256,140 @@ def test_checkpoints_write_through_filesystem_manager(spark, tmp_path):
         )
 
 
+def test_drain_clone_maps_file_paths_to_the_raw_local_fs(spark):
+    """Drains write checkpoints through Hadoop's RawLocalFileSystem (no
+    ``.crc`` sidecar, no chmod subprocess per file); the engine session
+    keeps the checksummed LocalFileSystem, and the parent re-sync does
+    not undo the clone's pin."""
+    from kt_sql_hbase_ex_spark.streaming.events import stream_session
+
+    def file_fs(s):
+        conf = s._jsparkSession.sessionState().newHadoopConf()
+        return s._jvm.org.apache.hadoop.fs.Path("file:///").getFileSystem(conf)
+
+    checksummed = spark._jvm.java.lang.Class.forName(
+        "org.apache.hadoop.fs.ChecksumFileSystem"
+    )
+    assert checksummed.isInstance(file_fs(spark))
+    for _ in range(2):  # the second call re-syncs from the parent
+        assert file_fs(stream_session(spark)).getClass().getName() == (
+            "org.apache.hadoop.fs.RawLocalFileSystem"
+        )
+    # RocksDB's checkpoint upload needs FileSystem.getLocal to be a
+    # LocalFileSystem, so a RocksDB drain keeps the checksummed one
+    key = "spark.sql.streaming.stateStore.providerClass"
+    old = spark.conf.get(key)
+    spark.conf.set(
+        key,
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
+    )
+    try:
+        assert checksummed.isInstance(file_fs(stream_session(spark)))
+    finally:
+        spark.conf.set(key, old)
+    assert file_fs(stream_session(spark)).getClass().getName() == (
+        "org.apache.hadoop.fs.RawLocalFileSystem"
+    )
+
+
+def _drain_feed(session, opts, dst, ckpt, expect: int) -> None:
+    """Drain the change feed of store ``opts`` into replica ``dst``
+    on ``session`` until ``expect`` non-empty batches were applied in
+    this run, then commit the offsets and stop."""
+    import time
+
+    from kt_sql_hbase_ex_spark.sources.kvstore import (
+        CHANGES_FORMAT_NAME,
+        register_kv_source,
+    )
+    from kt_sql_hbase_ex_spark.streaming.events import apply_cdc_batch
+
+    register_kv_source(session)
+    applied: list = []
+
+    def apply(df, bid):
+        if df.limit(1).count():
+            apply_cdc_batch(df, dst)
+            applied.append(bid)
+
+    q = (
+        session.readStream.format(CHANGES_FORMAT_NAME)
+        .options(**opts)
+        .load()
+        .writeStream.foreachBatch(apply)
+        .trigger(processingTime="50 milliseconds")
+        .option("checkpointLocation", ckpt)
+        .start()
+    )
+    try:
+        t0 = time.monotonic()
+        while len(applied) < expect:
+            if q.exception() is not None:
+                raise q.exception()
+            assert time.monotonic() - t0 < 120, applied
+            time.sleep(0.05)
+        q.processAllAvailable()
+    finally:
+        q.stop()
+
+
+def test_drain_resumes_over_a_checksummed_checkpoint(spark, tmp_path):
+    """A drain on the engine session writes its checkpoint through the
+    checksummed file system (``.crc`` sidecars); a drain on the drain
+    clone restarted over that checkpoint applies exactly the commits
+    that landed since, writes no sidecar of its own, and leaves the
+    replica equal to the model."""
+    import glob
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from kt_sql_hbase_ex_spark.sources.kvstore import (
+        _open_store,
+        delete_from_store,
+        put_rows_to_store,
+        truncate_overlay,
+    )
+    from kt_sql_hbase_ex_spark.streaming.events import stream_session
+
+    opts, lopts = _cdc_store(spark, tmp_path)
+    dst = os.path.join(str(tmp_path), "replica.parquet")
+    pq.write_table(
+        pa.table({"k": pa.array([], pa.int64()), "v": pa.array([], pa.float64())}),
+        dst,
+    )
+    dst = {**opts, "path": dst}
+    dst_l = {k.lower(): v for k, v in dst.items()}
+    truncate_overlay(dst_l)
+    ckpt = os.path.join(str(tmp_path), "ckpt")
+
+    def listing(pattern):
+        return sorted(
+            os.path.relpath(p, ckpt)
+            for d in ("offsets", "commits")
+            for p in glob.glob(os.path.join(ckpt, d, pattern))
+        )
+
+    def sidecars():
+        return listing(".*.crc")
+
+    put_rows_to_store(lopts, [{"k": 1, "v": 10.0}, {"k": 2, "v": 20.0}])
+    _drain_feed(spark, opts, dst, ckpt, 1)
+    before, logs = sidecars(), listing("[0-9]*")
+    assert before  # the checksummed file system wrote them
+
+    put_rows_to_store(lopts, [{"k": 2, "v": 25.0}, {"k": 3, "v": 30.0}])
+    delete_from_store(lopts, [1])
+    _drain_feed(stream_session(spark), opts, dst, ckpt, 1)
+    assert sidecars() == before  # the raw file system wrote none
+    assert set(listing("[0-9]*")) > set(logs)  # yet it logged batches
+
+    def state(o):
+        return {r["k"]: r["v"] for r in _open_store(o).rows}
+
+    assert state(dst_l) == state(lopts) == {2: 25.0, 3: 30.0}
+
+
 def test_checkpoint_restart_resumes_exactly_once(spark, sf_small):
     """Restart recovery: a stream drained with availableNow, stopped,
     then restarted on the same checkpoint after new files arrive must
